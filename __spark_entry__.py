@@ -1608,7 +1608,8 @@ def q_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _spark(spark)
     orders = load_table(s, sf_dir, "orders")
-    base = "/root/repo/spark-warehouse/_io/layout_report"
+    warehouse = s.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    base = warehouse + "/_io/layout_report"
     rand_p, clus_p = base + "_rand", base + "_clus"
     orders.repartition(8).write.mode("overwrite").parquet(rand_p)
     zorder_layout(orders, ["o_custkey"], num_partitions=8).write.mode(
@@ -4237,7 +4238,7 @@ def q_dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fingerprint value, never all-pairs."""
     docs = load_table(_spark(spark), sf_dir, "documents")
     fps = X_dedup.winnow_fingerprints(docs, "text", "doc_id", k=8, window=4)
-    return X_dedup.winnow_pairs(fps, min_shared=40)
+    return X_dedup.winnow_pairs(fps, min_shared=40, persist=True)
 
 
 _WINNOW_PAIRS_ORACLE = f"""

@@ -667,8 +667,9 @@ def gated_host_sentinel() -> tuple[dict, list, bool, int]:
     (VERDICT r10 item 4): two consecutive driver snapshots (r09, r10)
     ran ``degraded-io`` and produced 4-5x phantom regressions that
     each cost a manual adjudication — the snapshot path now waits for
-    a healthy window the same way tools/curve_retry_loop.sh gates the
-    flagship curves, instead of measuring through the bad window and
+    a healthy window the same way the gated retry loop gated the
+    flagship curves (SCALING.md "In-harness profiler re-measure:
+    LANDED with bracket receipts"), instead of measuring through the bad window and
     hoping the label is enough.
 
     Bounded: at most ``BENCH_SENTINEL_RETRIES`` extra probes (default
@@ -992,8 +993,8 @@ def main() -> None:
                 "state is shed. Round-over-round comparisons that "
                 "straddle this change should expect driver-session "
                 "numbers to move TOWARD queries_fresh. The shift is "
-                "MEASURED in ab_cache_isolation_r07 (r07 A-B run, "
-                "tools/ab_isolation.py)."
+                "MEASURED in ab_cache_isolation_r07 (r07 A-B run; "
+                "the A-B script is in git history up to 638cf5c)."
             ),
             "fresh_vs_fresh_r07": (
                 "CORRECTED distribution check (the committed r06 "
@@ -1066,7 +1067,8 @@ def main() -> None:
             ),
             "ab_cache_isolation_r07": (
                 "measured A-B for the r06 methodology change "
-                "(tools/ab_isolation.py, sf0.1, two fresh sessions, "
+                "(A-B script in git history up to 638cf5c, sf0.1, "
+                "two fresh sessions, "
                 "identical warm-up, min-of-2): 10 cache-affine "
                 "queries (per-call persisters + neighbors riding "
                 "their state). isolation ON vs OFF ratios: tpch_q15 "

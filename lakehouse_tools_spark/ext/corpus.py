@@ -27,12 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lakehouse_tools_spark.ext.dedup import fingerprint, normalize_text, spread_by
+from lakehouse_tools_spark.ext.dedup import fingerprint, normalize_text
 from lakehouse_tools_spark.ext.text import (
     language_pred_exprs,
     language_score_exprs,
     quality_exprs,
 )
+from lakehouse_tools_spark.sources.tables import ensure_parallelism
 
 
 def prepare_corpus(
@@ -52,7 +53,7 @@ def prepare_corpus(
     survivor's content (≥1). Keep-first: the smallest id wins —
     deterministic, and the tie-break every re-run reproduces.
     """
-    base = spread_by(df, id_col).select(
+    base = ensure_parallelism(df, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("_t"),
         F.split(normalize_text(F.col(text_col)), " ").alias("_words"),

@@ -28,32 +28,13 @@ from pyspark.sql import functions as F
 
 from lakehouse_tools_spark.functions.memo import expr_memo
 from lakehouse_tools_spark.functions.portable import floor6
+from lakehouse_tools_spark.sources.tables import ensure_parallelism
 
 
 def normalize_text(col: Column) -> Column:
     """lower + collapse whitespace — the canonical form used by every
     dedup operator so their verdicts compose."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-
-
-def spread_by(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition by key to at least the cluster's core count.
-
-    Document corpora often arrive in few (or one) parquet files; every
-    operator below then does CPU-heavy per-row expansion (gram/shingle
-    hashing) *before* its first shuffle, which would serialize on the
-    input file count. Spreading the small raw-text rows first costs a
-    tiny shuffle and (a) unlocks full parallelism for the expansion,
-    (b) pre-satisfies any downstream window/groupBy on the same key so
-    the much larger expanded stream never shuffles. The ``max`` keeps
-    well-partitioned big inputs at their natural parallelism (file
-    count ≈ split count for the compacted inputs this guards; public
-    ``inputFiles()``, not an ``.rdd`` partition probe, so the plan
-    never converts to RDD and Spark Connect keeps working).
-    """
-    spark = df.sparkSession
-    n = max(spark.sparkContext.defaultParallelism, len(df.inputFiles()))
-    return df.repartition(n, *cols)
 
 
 def fingerprint(col: Column) -> Column:
@@ -87,12 +68,10 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> Data
     would be re-evaluated once per shingle (~8× slower, measured;
     safe here because the multi-referenced ``_toks`` blocks
     CollapseProject from inlining it into the lambdas). The split
-    itself runs AFTER the spread (r13): normalize+split is CPU
-    charged to the pre-shuffle stage, which a single-file corpus runs
-    on one task — shuffling the raw text instead costs the same bytes
-    and tokenizes on every core.
+    runs after the ``ensure_parallelism`` spread (r13), so it
+    tokenizes on every core.
     """
-    base = spread_by(
+    base = ensure_parallelism(
         df.select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("_txt"),
@@ -448,13 +427,10 @@ def winnow_fingerprints(
     is quadratic (hung even at 500 docs, measured). One shuffle on
     doc_id; the rolling min and the distinct both reuse it.
     """
-    # spread the *text* by doc_id before the gram expansion: the
-    # per-char hashing is the CPU cost and must not be serialized by
-    # the input file count; and hash(doc_id) is exactly the
-    # distribution the rolling window needs, so the ~20× larger
-    # exploded gram stream never shuffles. The normalize runs AFTER
-    # the spread (r13) so its regexp is parallel too.
-    base = spread_by(
+    # spread the text by doc_id (ensure_parallelism) before the gram
+    # expansion; hash(doc_id) is also the rolling window's
+    # distribution. The normalize runs after the spread (r13).
+    base = ensure_parallelism(
         df.select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("_raw"),
@@ -506,7 +482,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
     Output: ``(doc_id, simhash)``.
     """
     words = (
-        spread_by(
+        ensure_parallelism(
             df.select(
                 F.col(id_col).alias("doc_id"),
                 F.col(text_col).alias("_raw"),
@@ -600,7 +576,7 @@ def decontaminate(
 
 
 def winnow_pairs(
-    fingerprints: DataFrame, min_shared: int = 2, persist: bool = True
+    fingerprints: DataFrame, min_shared: int = 2, persist: bool = False
 ) -> DataFrame:
     """MOSS-style plagiarism candidate pairs: documents sharing at
     least ``min_shared`` winnowing fingerprints
@@ -618,18 +594,18 @@ def winnow_pairs(
     explodes (they carry no discriminative signal, same argument as
     stopwords). Output: ``(doc_id, doc_id2, n_shared)``.
 
-    Cache ownership: with ``persist=True`` (default) the narrow
-    ``(doc_id, fingerprint)`` projection is persisted
-    (MEMORY_AND_DISK) so the fingerprint pipeline — the dominant
-    scan+gram+rolling-min cost — runs ONCE instead of once per join
-    side (the broadcast build otherwise re-derives it; optimization
-    r13 A/B at sf0.1: 2.3 → 1.95 s warm with clearCache between
-    reps). The cache lives as long as the returned (lazy) relation
-    is in use; callers that manage their own caching or need strict
-    no-cache behavior pass ``persist=False``, and batch harnesses
-    release it with ``spark.catalog.clearCache()`` as usual. At
-    100 TB this is the §2.4 guide rule: never materialize the heavy
-    pipeline twice when a narrow proxy relation can be stored.
+    Cache ownership: by default nothing is cached, and the
+    fingerprint pipeline runs once per join side. With
+    ``persist=True`` the narrow ``(doc_id, fingerprint)`` projection
+    is persisted (MEMORY_AND_DISK) so the pipeline — the dominant
+    scan+gram+rolling-min cost — runs ONCE (the broadcast build
+    otherwise re-derives it; optimization r13 A/B at sf0.1:
+    2.3 → 1.95 s warm with clearCache between reps). This function
+    never unpersists it and returns no handle to it, so a caller
+    that opts in owns the release: ``spark.catalog.clearCache()`` or
+    session end. At 100 TB this is the §2.4 guide rule: never
+    materialize the heavy pipeline twice when a narrow proxy
+    relation can be stored.
     """
     from pyspark import StorageLevel
 

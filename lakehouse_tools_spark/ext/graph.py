@@ -47,6 +47,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_tools_spark.sources.tables import _BYTES_PER_TASK, _source_bytes
+
 
 def _label_round(labels: DataFrame, sym: DataFrame, jumps: int) -> DataFrame:
     """One declarative round: neighbor-min merge, then ``jumps``
@@ -188,49 +190,27 @@ def _sized_start_partitions(*dfs: DataFrame) -> int:
     when the whole dup graph is a few thousand edges — ~2.5 s of pure
     level/task overhead per CC call at fixture scale, multiplied
     across the seven dedup/cluster queries that compose this
-    operator. Deriving level-0 from input bytes (one 128 MB source
-    split ≈ one union-find task, the same working-set rule as
-    ``sources.tables.ensure_parallelism``) collapses the ladder to
-    its data-appropriate depth: tiny audit graphs run ONE _final
-    task; at real scale ``ceil(source_bytes / 128 MB)`` reaches the
-    core count long before memory matters and the behavior is
-    exactly the old one (capped at ``defaultParallelism``, the
-    pre-r12 start, so the at-scale ladder is unchanged).
+    operator. Level 0 is ``ceil(source_bytes / 128 MB)`` — one
+    source split ≈ one union-find task — floored at 1 and capped at
+    ``defaultParallelism`` (the pre-r12 start, so the at-scale ladder
+    is unchanged); source bytes come from the same file sizing as
+    ``sources.tables.ensure_parallelism``.
 
-    Public API only (``inputFiles`` + driver ``os.stat``), matching
-    ensure_parallelism: the candidates in ``dfs`` are tried in order
-    and the first file-backed one sizes the ladder (callers pass the
-    vertex/corpus relation first — it is the plain table scan;
-    ``inputFiles`` on the multi-join edge plans returns empty on this
-    Spark). With no file-backed candidate (in-memory test frames,
-    post-shuffle intermediates) the defaultParallelism start is kept.
-    Files the driver cannot stat (S3/HDFS) are estimated at one
-    128 MB split each — erring toward MORE level-0 tasks, the safe
-    direction for per-task forest state.
+    The candidates in ``dfs`` are tried in order and the first
+    file-backed one sizes the ladder (callers pass the vertex/corpus
+    relation first — it is the plain table scan; the multi-join edge
+    plans report no input files on this Spark). With no file-backed
+    candidate (in-memory test frames, post-shuffle intermediates) the
+    defaultParallelism start is kept.
     """
-    import os as _os
-
     n = dfs[0].sparkSession.sparkContext.defaultParallelism
     for df in dfs:
         try:
-            files = df.inputFiles()
+            files, total, _ = _source_bytes(df)
         except Exception:
             continue
-        if not files:
-            continue
-        total = 0
-        unstat = 0
-        for p in files:
-            if p.startswith("file:"):
-                try:
-                    total += _os.path.getsize(p[len("file:"):])
-                    continue
-                except OSError:
-                    pass
-            unstat += 1
-        total += unstat * (128 << 20)
-        sized = -(-total // (128 << 20))
-        return max(1, min(int(sized), n))
+        if files:
+            return max(1, min(-(-total // _BYTES_PER_TASK), n))
     return n
 
 

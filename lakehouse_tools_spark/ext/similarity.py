@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_tools_spark.functions.memo import expr_memo
 from lakehouse_tools_spark.functions.vectors import cosine_similarity, dot_product, l2_norm
+from lakehouse_tools_spark.sources.tables import ensure_parallelism
 
 
 def cosine_topk(
@@ -215,20 +216,13 @@ def neardup_pairs_lsh(
     side keeps its exact bucket; exactly one flip of the right bucket
     can equal it), so no dedup pass is needed.
     """
-    # spread the vectors by id before the bucket/norm projections
-    # (r13): each row pays num_planes × dim dot products, and a
-    # single-file corpus ran BOTH sides' projections as one-task
-    # stages (stage audit at sf0.1: 2.9 s + 1.0 s on 1 task each).
-    # UNLIKE the text-side spread_by sites, nothing downstream keys
-    # on id (the candidate join shuffles by bucket either way), so
-    # this spread is parallelism insurance only — it is the IDENTITY
-    # when the input already has enough splits, never an extra
-    # vector-volume shuffle at scale. Keyed repartition, so no
-    # sort-before-repartition cost locally.
-    base = embeddings.select(F.col(id_col), F.col(vec_col))
-    _cores = base.sparkSession.sparkContext.defaultParallelism
-    if 0 < len(base.inputFiles()) < _cores:
-        base = base.repartition(_cores, id_col)
+    # spread the vectors by id (ensure_parallelism) before the
+    # bucket/norm projections: each row pays num_planes × dim dot
+    # products (r13). Nothing downstream keys on id; the key only
+    # avoids a sort-before-repartition.
+    base = ensure_parallelism(
+        embeddings.select(F.col(id_col), F.col(vec_col)), id_col
+    )
     a = base.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("_va"),
@@ -364,12 +358,12 @@ def with_ivf_cell(
     # C×dim driver↔JVM calls (~1.2 s at 8×64) before the query even
     # starts. CAST('<repr>' AS DOUBLE) round-trips the exact IEEE
     # value. ConstantFolding collapses the whole tree to one Literal.
-    # The whole bundle (cmat + lambdas + argmax) is memoized per
-    # (vec_col, centroid values) — the r12 §8 mechanism, here with a
-    # correctly DATA-keyed key (same discipline as the histogram-bin
-    # memo): changed centroids rebuild, repeat assignments against
-    # the same centroid set (k-means iterations, corpus+query sides,
-    # bench reps) reuse ~0.14 s of py4j construct per call.
+    # The whole bundle (cmat + lambdas + argmax) is memoized, ONE slot
+    # per vec_col holding the last centroid set: repeat assignments
+    # against the same centroids (corpus+query sides, bench reps)
+    # reuse ~0.14 s of py4j construct per call, and a new set (every
+    # k-means iteration) replaces the slot instead of adding a
+    # never-evicted entry per set.
     def _build() -> dict:
         def _d(x: float) -> str:
             return f"CAST('{float(x)!r}' AS DOUBLE)"
@@ -408,14 +402,11 @@ def with_ivf_cell(
             ).cast("long"),
         }
 
-    bundle = expr_memo(
-        (
-            "with_ivf_cell",
-            vec_col,
-            tuple(tuple(float(x) for x in cv) for cv in centroids),
-        ),
-        _build,
-    )
+    ckey = tuple(tuple(float(x) for x in cv) for cv in centroids)
+    slot = expr_memo(("with_ivf_cell", vec_col), dict)
+    if slot.get("centroids") != ckey:
+        slot["centroids"], slot["bundle"] = ckey, _build()
+    bundle = slot["bundle"]
     out = df.withColumn("_coss", bundle["coss"]).withColumn(
         out_col, bundle["cell"]
     )

@@ -11,8 +11,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lakehouse_tools_spark.ext.dedup import normalize_text, spread_by
+from lakehouse_tools_spark.ext.dedup import normalize_text
 from lakehouse_tools_spark.functions.portable import floor6
+from lakehouse_tools_spark.sources.tables import ensure_parallelism
 
 #: BPE-ish token pattern: letter runs, digit runs, single other glyph.
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -345,10 +346,8 @@ def _adjacent_pairs(
     JVM-side with ``transform`` over token index ranges (the token
     array materialized first, same no-UDF pattern as
     ``dedup.word_shingles``). The token rows are spread by doc_id
-    before the pair expansion (r13 — same serialization fix as
-    repetition_signals: the concat_ws-per-pair CPU ran on one task
-    for a single-file corpus; stage audit 3.2 s CPU / 1 task)."""
-    base = spread_by(
+    (``ensure_parallelism``) before the pair expansion (r13)."""
+    base = ensure_parallelism(
         df.select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("_raw"),
@@ -664,14 +663,10 @@ def repetition_signals(
     shorter than a gram size contribute no rows for it and surface
     null fractions (no gram of that size exists — a fact, not a 0).
     """
-    # spread the token rows by doc_id BEFORE the gram expansion
-    # (optimization r13, same guard as winnow_fingerprints): the
-    # per-gram concat_ws/hash work is the CPU cost and a compacted
-    # single-file corpus serialized the whole explode stage onto one
-    # task (stage audit at sf0.1: 4.3 s CPU / 1 task, 2.15 s → 1.05 s
-    # after). hash(doc_id) is also the distribution the per-doc
-    # aggregates downstream want.
-    base = spread_by(
+    # spread the token rows by doc_id (ensure_parallelism) before the
+    # gram expansion (r13); hash(doc_id) is also the per-doc
+    # aggregates' distribution.
+    base = ensure_parallelism(
         df.select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("_raw"),

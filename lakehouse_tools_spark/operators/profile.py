@@ -495,7 +495,12 @@ def exact_quantile_cells(
     JVM aggregate uses, so results are bit-identical (values are
     compared/grouped after the same cast-to-double ``Percentile``
     applies in ``toDoubleValue``; double-equal inputs interpolate to
-    the same double either way). Memory is bounded everywhere: the
+    the same double either way). Bit identity holds modulo −0.0: the
+    groupBy normalizes −0.0 to 0.0 while ``Percentile`` keeps them as
+    distinct keys, so a column holding both can differ in the sign
+    of zero — numerically equal, repr may differ (the parity proof,
+    tools/percentile_parity.py, compares bit-level for doubles modulo
+    −0.0). Memory is bounded everywhere: the
     hash aggregate and the window sort both spill; no task ever
     holds a column's full distinct set. Parallelism: the melt scan
     and first aggregate are fully parallel; the cumulative pass is

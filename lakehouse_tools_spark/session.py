@@ -82,8 +82,9 @@ def streaming_state_confs(
     (they are runtime-settable, read at query start).
 
     Measured, not guessed: the r10 conf A/B on the sf10 TWS
-    sessionizer drain (``tools/ab_rocksdb.py``; SCALING.md "RocksDB
-    state-store conf A/B") found the steady-state FLOOR is
+    sessionizer drain (SCALING.md "RocksDB state-store conf A/B on
+    the TWS sessionizer drain"; the A/B script is in git history up
+    to 638cf5c) found the steady-state FLOOR is
     conf-insensitive (0.94x paired, under the pre-registered 20%
     adoption bar — hence NOT an engine default and the flagship
     curves keep defaults for comparability), but the bounded-memory

@@ -183,58 +183,19 @@ def _parse_bytes_conf(value: str | None) -> int:
         return _BYTES_PER_TASK
 
 
-def ensure_parallelism(
-    df: DataFrame, *cols: str, expansion: float = 1.0
-) -> DataFrame:
-    """Round-robin (or keyed) repartition to a SIZE-AWARE task count —
-    identity if the input already has enough splits.
-
-    Two failure modes bound a CPU-heavy pre-shuffle stage (melt,
-    explode, render):
-
-    - too few splits: a compact table (one 10 MB parquet file)
-      serializes the stage onto a couple of tasks — so repartition up
-      to at least the core count;
-    - too few BYTES-PER-TASK slots: an operator that multiplies its
-      input (the profiler's melt emits ``n_columns`` rows per input
-      row and stringifies every value) can hand each task a working
-      set far bigger than its execution-memory share even when the
-      task COUNT looks fine. The r07 scaling harness measured the
-      cliff: at sf10 (60 M-row lineitem, 32 tasks) the melt's
-      partial-aggregate map outgrew its share, fell back to
-      sort-based aggregation and spilled — stage CPU 319 s → 1065 s
-      for 2x the data (e(5→10) = 2.1). Pass ``expansion`` = the
-      operator's row/byte multiplier and the guard sizes the task
-      count as ``source_bytes x expansion / 128 MB`` (floored at the
-      core count, capped at 64x cores), which keeps every task's
-      melted working set inside one memory share at ANY input size —
-      the code form of SCALING.md's "size partitions so they fit"
-      rule.
-
-    At real scale inputs arrive with thousands of splits, so the
-    core-count floor is a no-op; the expansion term still kicks in
-    exactly when a multiplying operator would overload each split.
-    Truly tiny relations (< 1 MB of source files) are left alone: a
-    32-task shuffle of 25 rows costs more in scheduling than it buys
-    in parallelism.
+def _source_bytes(df: DataFrame) -> tuple[int, int, bool]:
+    """``(files, bytes, local)`` of the files backing ``df``.
 
     Public API only — ``df.inputFiles()`` + driver-side file sizes —
     no ``.rdd`` partition probe (forces a plan→RDD conversion per
     call) and no ``_jdf`` stats reach-in (breaks under Spark Connect).
-    Relations not backed by files (in-memory test data, post-shuffle
-    intermediates) are left untouched: a shuffle already spread them.
-    Files whose size the driver cannot ``stat`` (S3/HDFS paths) are
-    ESTIMATED at one ``spark.sql.files.maxPartitionBytes`` split
-    each, so the expansion term survives on remote deployments
-    instead of silently degrading to the core-count floor (the
-    estimate errs toward MORE tasks — the safe direction for the
-    working-set bound — and the 64x-cores cap still applies).
+    Local files are stat-ed; each file the driver cannot stat (S3/HDFS
+    paths) is ESTIMATED at one ``spark.sql.files.maxPartitionBytes``
+    split, erring toward MORE tasks — the safe direction for any
+    per-task working-set bound. ``local`` is true when every size was
+    stat-ed. A relation not backed by files reports ``(0, 0, True)``.
     """
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
-    if not files:
-        return df
     total = 0
     unstat = 0
     for p in files:
@@ -246,18 +207,66 @@ def ensure_parallelism(
                 pass
         unstat += 1
     if unstat:
-        per = _parse_bytes_conf(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+        total += unstat * _parse_bytes_conf(
+            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", None)
         )
-        total += unstat * per
-    elif total < (1 << 20):
-        # truly tiny local relation: scheduling beats parallelism
+    return len(files), total, not unstat
+
+
+def ensure_parallelism(
+    df: DataFrame, *cols: str, expansion: float = 1.0
+) -> DataFrame:
+    """The package's one "is this input spread enough?" guard: a
+    SIZE-AWARE repartition in front of a CPU-heavy pre-shuffle stage
+    (melt, explode, per-row hashing or dot products), keyed by
+    ``cols`` when given — identity when the input already has enough
+    splits.
+
+    Compacted tables arrive in few large files, so the file count is
+    the split count this guards. The rule, in order:
+
+    1. a relation not backed by files (in-memory data) is left alone;
+    2. ``target = max(cores, min(⌈bytes × expansion / 128 MB⌉,
+       64 × cores))``;
+    3. if ``files ≥ target`` the relation is left alone;
+    4. an UNKEYED call on a local source under 1 MB is left alone;
+    5. otherwise repartition to ``target`` (by ``cols`` if given).
+
+    ``expansion`` is the operator's row/byte multiplier. The
+    profiler's melt emits ``n_columns`` rows per input row and
+    stringifies every value, so a fine-looking task COUNT can still
+    hand each task a working set far bigger than its execution-memory
+    share: the r07 scaling harness measured the cliff at sf10 (60 M
+    lineitem rows, 32 tasks) — the partial-aggregate map spilled and
+    stage CPU went 319 s → 1065 s for 2x the data (e(5→10) = 2.1).
+    Sizing by ``bytes × expansion`` keeps every task's working set
+    inside one memory share at any input size (SCALING.md, "size
+    partitions so they fit"); the 64x-cores cap stops a degenerate
+    estimate from scheduling a million 1 KB tasks.
+
+    Why the tiny-input exemption is UNKEYED only (r13 measurements):
+    the keyed callers (dedup/text/corpus document spreads, LSH vector
+    spreads) run per-row hashing or dot products before their first
+    shuffle, and their key pre-satisfies the downstream per-id
+    window/groupBy — spreading even sub-MB single-file inputs
+    (``documents`` 594 KB, ``embeddings`` 799 KB at sf0.1) gained
+    ×2.9–×5.4. The unkeyed profile/dependency melts are cheap per
+    row; a guard in front of a tiny melt measured +0.9 s, so a
+    scheduling-bound tiny relation stays as it is.
+
+    File count stands in for split count, so a relation derived
+    through an earlier shuffle, or one large splittable file, may be
+    repartitioned although its splits would already suffice.
+    """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    files, total, local = _source_bytes(df)
+    if not files:
         return df
     sized = -(-int(total * expansion) // _BYTES_PER_TASK)
     target = max(n, min(sized, n * _MAX_FANOUT))
-    if len(files) >= target:
+    if files >= target or (not cols and local and total < (1 << 20)):
         return df
-    return df.repartition(target, *cols) if cols else df.repartition(target)
+    return df.repartition(target, *cols)
 
 
 def load_tables(

@@ -30,6 +30,17 @@ def test_graph_reaches_profiler_through_melt_sizing():
     assert "__spark_entry__.py::q_profiler_e2e" in reach
 
 
+def test_graph_reaches_keyed_guard_sites():
+    # the dedup/text document spread and the LSH vector spread both go
+    # through ensure_parallelism: a change to the guard must mark them
+    g = FG._RefGraph()
+    reach = g.reachers(
+        {"lakehouse_tools_spark/sources/tables.py::ensure_parallelism"}
+    )
+    assert "__spark_entry__.py::q_text_bigrams" in reach
+    assert "__spark_entry__.py::q_sim_neardup_lsh" in reach
+
+
 def test_changed_defs_sees_worktree(tmp_path):
     # a def changed only in the working tree (uncommitted) must be
     # reported: the gate runs BEFORE the end-of-round snapshot

@@ -117,3 +117,32 @@ def test_memo_dead_gateway_entries_evicted():
     del gw
     gc.collect()
     assert not any(("dead-key",) in per for per in memo._MEMO.values())
+
+
+def test_ivf_cell_memo_keeps_one_bundle_per_vec_col(spark):
+    # every Lloyd iteration assigns against a NEW centroid set; the
+    # memo must replace the vec_col's bundle, not add one per set
+    from pyspark.sql import Row
+
+    from lakehouse_tools_spark.ext.similarity import kmeans_refine_centroids
+    from lakehouse_tools_spark.functions import memo
+
+    corpus = spark.createDataFrame(
+        [
+            Row(vec_id=i, embedding=[float(i % 5), float(i % 3) + 1.0, 1.0])
+            for i in range(30)
+        ]
+    )
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+    kmeans_refine_centroids(corpus, cents, iters=6)
+    kmeans_refine_centroids(corpus, [[1.0, 1.0, 0.0], [0.0, 1.0, 1.0]], iters=5)
+    keys = [
+        k
+        for per in memo._MEMO.values()
+        for k in per
+        if k and k[0] == "with_ivf_cell"
+    ]
+    per_col: dict = {}
+    for k in keys:
+        per_col[k[1]] = per_col.get(k[1], 0) + 1
+    assert per_col and max(per_col.values()) <= 1

@@ -166,6 +166,52 @@ def test_ensure_parallelism_estimates_unstatable_files(spark, tmp_path, monkeypa
     assert tbl.ensure_parallelism(df).rdd.getNumPartitions() == n
 
 
+def test_ensure_parallelism_one_rule(spark, tmp_path):
+    # the guard's one rule, case by case: (input, keys, expansion) ->
+    # partition count; a keyed repartition must hash on the key, and
+    # every left-alone case must return the input relation itself
+    import os
+
+    from lakehouse_tools_spark.sources.tables import ensure_parallelism
+
+    n = spark.sparkContext.defaultParallelism
+    tiny = str(tmp_path / "tiny.parquet")
+    spark.range(100).coalesce(1).write.parquet(tiny)
+    tiny_bytes = sum(
+        os.path.getsize(os.path.join(tiny, f))
+        for f in os.listdir(tiny)
+        if f.endswith(".parquet")
+    )
+    many = str(tmp_path / "many.parquet")
+    spark.range(100 * n).repartition(n).write.parquet(many)
+    mem = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    read = spark.read.parquet
+    one_slot = 128 << 20
+    cases = [
+        # (case, input, keys, expansion, partitions or None = left alone)
+        ("not file-backed", mem, ("id",), 1.0, None),
+        ("single tiny file, keyed", read(tiny), ("id",), 1.0, n if n > 1 else None),
+        ("single tiny file, unkeyed", read(tiny), (), 1.0, None),
+        (">= cores files, keyed", read(many), ("id",), 1.0, None),
+        (
+            "sized multi-slot",
+            read(tiny),
+            ("id",),
+            3 * n * one_slot / tiny_bytes,
+            3 * n,
+        ),
+    ]
+    for case, df, keys, expansion, want in cases:
+        out = ensure_parallelism(df, *keys, expansion=expansion)
+        if want is None:
+            assert out is df, case
+            want = df.rdd.getNumPartitions()
+        else:
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "hashpartitioning(id" in plan, case
+        assert out.rdd.getNumPartitions() == want, case
+
+
 def test_parse_bytes_conf_forms():
     from lakehouse_tools_spark.sources.tables import (
         _BYTES_PER_TASK,

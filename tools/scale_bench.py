@@ -138,8 +138,9 @@ FLAGSHIPS = [
     # of degraded/marginal probes after the full-suite run), so both
     # gated curve attempts exhausted without a healthy start; per the
     # healthy-window-only rule neither was measured through the bad
-    # window. Neither has a SCALING_EVIDENCE row yet — run
-    # tools/curve_retry_loop.sh for each in r12 and add the rows.
+    # window. Neither has a SCALING_EVIDENCE row yet — measure each
+    # through a gated retry loop (SCALING.md "In-harness profiler
+    # re-measure: LANDED with bracket receipts") and add the rows.
     "asof_join",
     "fuzzy_join",
     # 25th flagship (r12, registered the round its operator landed):

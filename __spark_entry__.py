@@ -23,6 +23,7 @@ lakehouse_tools_spark.functions.portable):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -120,6 +121,13 @@ _HASH_U32_SQL = (
 
 def _spark(spark: SparkSession) -> SparkSession:
     return lts_session.configure(spark)
+
+
+def _warehouse_path(s: SparkSession, *parts: str) -> str:
+    """A path under the session's ``spark.sql.warehouse.dir``, with any
+    ``file:`` prefix stripped so Spark, ``os`` and ``shutil`` all take it."""
+    wh = s.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    return os.path.join(wh.removeprefix("file:").rstrip("/"), *parts)
 
 
 def _dec(c: str) -> F.Column:
@@ -1608,8 +1616,7 @@ def q_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _spark(spark)
     orders = load_table(s, sf_dir, "orders")
-    warehouse = s.conf.get("spark.sql.warehouse.dir").rstrip("/")
-    base = warehouse + "/_io/layout_report"
+    base = _warehouse_path(s, "_io", "layout_report")
     rand_p, clus_p = base + "_rand", base + "_clus"
     orders.repartition(8).write.mode("overwrite").parquet(rand_p)
     zorder_layout(orders, ["o_custkey"], num_partitions=8).write.mode(
@@ -1740,11 +1747,7 @@ def q_table_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a PREVIOUS session's archives leave warehouse dirs behind with no
     # catalog entry (in-memory catalog, persistent disk); saveAsTable
     # refuses to reuse such a location, so clear them for this fixture
-    wh = s.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    import os
-
+    wh = _warehouse_path(s)
     if os.path.isdir(wh):
         for d in os.listdir(wh):
             if d == tbl or d.startswith(f"{tbl}__"):
@@ -7236,7 +7239,6 @@ def q_events_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     event time (the append-log case); keyed idempotent upsert is what
     turns foreachBatch's at-least-once replay into effectively
     exactly-once."""
-    import os
     import shutil
     import tempfile
 
@@ -7249,9 +7251,7 @@ def q_events_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in s.catalog.listTables():
         if t.name == tbl or t.name.startswith(f"{tbl}__"):
             s.sql(f"DROP TABLE `{t.name}`")
-    wh = s.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
+    wh = _warehouse_path(s)
     if os.path.isdir(wh):
         for d in os.listdir(wh):
             if d == tbl or d.startswith(f"{tbl}__"):
@@ -7366,7 +7366,7 @@ def q_events_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _spark(spark)
     ev = load_table(s, sf_dir, "events")
-    src = "/root/repo/spark-warehouse/_io/events_stream_profile_src"
+    src = _warehouse_path(s, "_io", "events_stream_profile_src")
     shutil.rmtree(src, ignore_errors=True)
     ev.repartition(4).write.mode("overwrite").parquet(src)
     cols = list(_STREAM_SKETCH_COLS)
@@ -8564,8 +8564,9 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the text round-trip breaks the hash."""
     from lakehouse_tools_spark.sources.formats import roundtrip
 
-    df = load_table(_spark(spark), sf_dir, "nation")
-    return roundtrip(df, "/root/repo/spark-warehouse/_io/nation_csv", "csv")
+    s = _spark(spark)
+    df = load_table(s, sf_dir, "nation")
+    return roundtrip(df, _warehouse_path(s, "_io", "nation_csv"), "csv")
 
 
 _CSV_ROUNDTRIP_ORACLE = "SELECT * FROM nation"
@@ -8582,7 +8583,7 @@ def q_source_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _spark(spark)
     nation = load_table(s, sf_dir, "nation")
-    path = "/root/repo/spark-warehouse/_io/nation_evolved"
+    path = _warehouse_path(s, "_io", "nation_evolved")
     import shutil
 
     shutil.rmtree(path, ignore_errors=True)
@@ -8620,10 +8621,11 @@ def q_source_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_partitioned,
     )
 
-    docs = load_table(_spark(spark), sf_dir, "documents")
-    path = "/root/repo/spark-warehouse/_io/documents_partitioned"
+    s = _spark(spark)
+    docs = load_table(s, sf_dir, "documents")
+    path = _warehouse_path(s, "_io", "documents_partitioned")
     write_partitioned(docs, path, ["lang"])
-    back = read_partitioned(_spark(spark), path)
+    back = read_partitioned(s, path)
     return back.filter(F.col("lang") == "en").select(
         "doc_id", "text", F.col("lang").cast("string").alias("lang"),
         "source", "n_chars",
@@ -8642,8 +8644,9 @@ def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema; oracle is the parquet original."""
     from lakehouse_tools_spark.sources.formats import roundtrip
 
-    df = load_table(_spark(spark), sf_dir, "orders")
-    return roundtrip(df, "/root/repo/spark-warehouse/_io/orders_json", "json")
+    s = _spark(spark)
+    df = load_table(s, sf_dir, "orders")
+    return roundtrip(df, _warehouse_path(s, "_io", "orders_json"), "json")
 
 
 _JSON_ROUNDTRIP_ORACLE = "SELECT * FROM orders"
@@ -8655,8 +8658,9 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet original."""
     from lakehouse_tools_spark.sources.formats import roundtrip
 
-    df = load_table(_spark(spark), sf_dir, "lineitem")
-    return roundtrip(df, "/root/repo/spark-warehouse/_io/lineitem_orc", "orc")
+    s = _spark(spark)
+    df = load_table(s, sf_dir, "lineitem")
+    return roundtrip(df, _warehouse_path(s, "_io", "lineitem_orc"), "orc")
 
 
 _ORC_ROUNDTRIP_ORACLE = "SELECT * FROM lineitem"
@@ -8727,7 +8731,7 @@ def q_source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _spark(spark)
     docs = load_table(s, sf_dir, "documents")
-    out_dir = "/root/repo/spark-warehouse/_io/docs_bin"
+    out_dir = _warehouse_path(s, "_io", "docs_bin")
     shutil.rmtree(out_dir, ignore_errors=True)  # no stale files from prior sf
     export_binary(docs, "doc_id", "text", out_dir).write.format("noop").mode(
         "overwrite"

@@ -27,252 +27,23 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as E  # noqa: E402
 from lakehouse_tools_spark.session import get_session  # noqa: E402
 
-BENCH_QUERIES = [
-    "profiler_e2e",
-    "profile_intended",
-    "profile_as_written",
-    "profile_topk",
-    "profiler_incremental",
-    "profile_summary",
-    "profile_summary_approx",
-    "profile_quantiles",
-    "profile_histogram",
-    "schema_information",
-    "catalog_stats",
-    "asof_join",
-    "merge_upsert",
-    "merge_full_sync",
-    "table_versions",
-    "zorder_rowset",
-    "snapshot_diff",
-    "scd2_customers",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q4",
-    "tpch_q17",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q10",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q22",
-    "tpch_q15",
-    "tpch_q21",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "quality_check",
-    "rollup_pricing",
-    "cube_pricing",
-    "setop_nations",
-    "sql_passthrough",
-    "topk_customers",
-    "window_rank",
-    "window_ranking_suite",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_lsh_pairs",
-    "dedup_jaccard",
-    "dedup_simhash",
-    "dedup_winnow",
-    "sim_topk",
-    "sim_topk_pandas",
-    "sim_ann_lsh",
-    "sim_ann_multiprobe",
-    "sim_ivf",
-    "sim_ivf_kmeans",
-    "sim_neardup",
-    "sim_neardup_lsh",
-    "sim_neardup_multiprobe",
-    "dedup_clusters",
-    "dedup_clusters_lsh",
-    "multimodal_decode",
-    "multimodal_features",
-    "text_quality",
-    "text_language",
-    "text_tokens",
-    "text_fingerprints",
-    "text_redact",
-    "text_vocabulary",
-    "sample_stratified",
-    "sample_balanced",
-    "chunk_chars",
-    "chunk_tokens",
-    "corpus_prepare",
-    "corpus_mixture",
-    "corpus_decontaminate",
-    "events_range_join",
-    "events_stream_watermark",
-    "events_stream_sessionize",
-    "events_stream_join",
-    "events_stream_dedup",
-    "events_pivot",
-    "events_unpivot",
-    "events_lag_lead",
-    "asof_tolerance",
-    "events_tumbling",
-    "events_sliding",
-    "events_sessionize",
-    "events_json",
-    "events_funnel",
-    "events_retention",
-    "source_csv_roundtrip",
-    "source_json_roundtrip",
-    "source_orc_roundtrip",
-    "source_binaryfile",
-    "cdc_apply",
-    "cdc_merge_into",
-    "pack_chunks",
-    "pack_bins",
-    "profile_quantiles_exact",
-    "profile_drift",
-    "fuzzy_join",
-    "profile_distinct_sketch",
-    "semantic_dedup",
-    "tpch_q2",
-    "tpch_q9",
-    "tpch_q11",
-    "tpch_q16",
-    "tpch_q20",
-    "profile_nested",
-    "sim_recall_report",
-    "sketch_error_report",
-    "catalog_show_tables",
-    "quantile_error_report",
-    "pack_report",
-    "neardup_recall_report",
-    "text_keywords",
-    "text_bigrams",
-    "text_logprob",
-    "dedup_containment",
-    "profile_corr",
-    "sim_centroids",
-    "events_anomaly",
-    "text_pmi",
-    "profile_outliers",
-    "source_partitioned",
-    "merge_evolve",
-    "events_stream_profile",
-    "schema_drift",
-    "profile_quantiles_grouped",
-    "summary_error_report",
-    "text_bpe",
-    "layout_report",
-    "quality_quarantine",
-    "profile_benford",
-    "corpus_e2e",
-    "source_evolved",
-    "asof_nearest",
-    "events_interval_join",
-    "sample_weighted",
-    "corpus_budget_select",
-    "dedup_graph_stats",
-    "profile_entropy",
-    "profile_clip",
-    "events_gap_fill",
-    "events_forward_fill",
-    "events_anomaly_rolling",
-    "events_rolling",
-    "events_stream_enrich",
-    "graph_pagerank",
-    "sim_cross_contamination",
-    "dedup_winnow_pairs",
-    "events_interpolate",
-    "events_dense_impute",
-    "profile_heavy_hitters",
-    "profile_fd",
-    "events_stream_upsert",
-    "bloom_join_prune",
-    "text_repetition",
-    "corpus_split",
-    "cdc_roundtrip",
-    "rollup_maintenance",
-    "golden_records",
-    "profile_histogram_eqdepth",
-    "compaction_report",
-    "sim_hard_negatives",
-    "sim_quantize_report",
-    "events_ewma",
-    "events_transitions",
-    "events_pattern",
-    "dedup_graph_triangles",
-    "sim_covariance",
-    "integrity_report",
-    "events_stream_outer_join",
-    "sim_pca",
-    "pca_error_report",
-    "drift_ks",
-    "dedup_incremental",
-    "source_overlap",
-    "dedup_minhash_estimate",
-    "dedup_collapse",
-    "corpus_dedup_e2e",
-    "corpus_span_dedup",
-    "corpus_split_leakage_safe",
-    "events_stream_sessionize_tws",
-    "sql_pipe_passthrough",
-    "events_json_variant",
-    "source_python_datasource",
-    "dedup_cluster_report",
-    "text_bpe_report",
-]
-
 #: Queries whose single-session timings are known to swing >1.3x with
 #: no plan change (measured across r02/r03 and re-measured isolated in
 #: r04): profiler_e2e alternates blue/green durable-table disk state;
 #: the streaming queries pay fixed micro-batch harness overhead that
 #: varies with JVM/GC state; the ORC and range-join entries spike
 #: transiently under session contention (r04 isolated min-of-5:
-#: events_range_join 1.5 s, source_orc_roundtrip 1.3 s steady-state).
-#: They get an extra timed run so the recorded min is attributable.
-NOISY = {
-    "profiler_e2e",
-    "source_orc_roundtrip",
-    "events_range_join",
-    # the TPC-H family: r05 flagged tpch_q16 (0.93→4.70 s) and
-    # tpch_q11 (1.53→5.01 s) fresh-vs-fresh with unchanged plans;
-    # r06 isolated fresh-session runs measured q11
-    # [6.01, 2.54, 1.85, 1.69, 1.77] min 1.69 s and q16
-    # [1.86, 1.19, 1.16, 1.21, 1.10] min 1.10 s at sf0.1 — the
-    # first-run spike IS the session-position artifact, so the whole
-    # family records a min-of-3 to keep round-over-round comparisons
-    # attributable (see "attribution" below)
-    "tpch_q1",
-    "tpch_q2",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "events_stream_watermark",
-    "events_stream_sessionize",
-    "events_stream_join",
-    "events_stream_dedup",
-    "events_stream_profile",
-    "events_stream_enrich",
-    "events_stream_upsert",
-    "events_stream_outer_join",
-    "events_stream_sessionize_tws",
-}
+#: events_range_join 1.5 s, source_orc_roundtrip 1.3 s steady-state);
+#: the TPC-H family's first run in a fresh session spikes with an
+#: unchanged plan (r06 isolated runs: q11 [6.01, 2.54, 1.85, 1.69,
+#: 1.77] s at sf0.1). They get an extra timed run so the recorded min
+#: is attributable.
+NOISY_PREFIXES = ("tpch_", "events_stream_")
+NOISY_NAMES = {"profiler_e2e", "source_orc_roundtrip", "events_range_join"}
+
+
+def is_noisy(name: str) -> bool:
+    return name.startswith(NOISY_PREFIXES) or name in NOISY_NAMES
 
 
 # Measured scale evidence: the 22-flagship five-point table of
@@ -781,17 +552,17 @@ def main() -> None:
     bench_queries = (
         [q.strip() for q in subset.split(",") if q.strip()]
         if subset
-        else BENCH_QUERIES
+        else list(queries)
     )
     # min of two runs: a single pass is dominated by JIT/GC ordering
     # noise at this scale (0.5 s queries read as 10 s depending on
     # where a GC pause lands)
     for name in bench_queries:
         best = float("inf")
-        # known-noisy entries (NOISY above) get a third run so their
+        # known-noisy entries (is_noisy above) get a third run so their
         # recorded min is steady-state, not a GC/contention artifact —
         # round-over-round regressions on them are then attributable
-        for _ in range(3 if name in NOISY else 2):
+        for _ in range(3 if is_noisy(name) else 2):
             t0 = time.time()
             materialize(queries[name](spark, sf_dir))
             best = min(best, time.time() - t0)
@@ -874,7 +645,7 @@ def main() -> None:
         "bracket_pre": bracket_pre,
         "bracket_post": bracket_post,
         "bracket_ok": bracket_ok,
-        "min_of_3": sorted(NOISY),
+        "min_of_3": sorted(filter(is_noisy, queries)),
         "noise_note": {
             "applies_to": "queries_driver"
             + (f" ({driver_snapshot})" if driver_snapshot else ""),

@@ -164,7 +164,8 @@ def compact_small_files(
     Hadoop-compatible FS), the target file count is
     ``ceil(total_bytes / target_file_bytes)``, and the rewrite stages
     into ``<path>__compacting`` before an atomic-as-the-FS-allows
-    directory swap — readers never observe a half-written table.
+    directory swap — readers never observe a half-written table, and a
+    failed second rename puts the original directory back.
     Compressed input bytes approximate compressed output bytes (same
     codec), which is the same heuristic Delta's OPTIMIZE uses.
 
@@ -192,7 +193,11 @@ def compact_small_files(
     local_staging = staging.removeprefix("file:")
     backup = local + "__precompact"
     os.rename(local, backup)
-    os.rename(local_staging, local)
+    try:
+        os.rename(local_staging, local)
+    except OSError:
+        os.rename(backup, local)
+        raise
     shutil.rmtree(backup)
     files_after = sum(
         1 for f in os.listdir(local) if f.endswith(".parquet")

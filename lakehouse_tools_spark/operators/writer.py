@@ -13,15 +13,15 @@ same semantics:
 
 - ``create_or_replace``: saveAsTable(overwrite) with an explicit
   schema — the C8 contract.
-- ``upsert_into``: read target ⟗ merge (operators.merge) ⟗ atomic
-  swap. Parquet has no ACID MERGE, so the rewrite goes through a
-  staging table + two metastore-only renames — the classic
-  blue/green swap; readers see either the old or the new table, never
-  a partial write. (With delta-spark present, swap the body for
-  ``DeltaTable.merge`` — the call signature is identical.)
-- ``optimize_clustered``: rewrite the table in Z-order-style layout
-  (maintenance.zorder_layout) + compaction — same data-skipping
-  payoff OPTIMIZE ZORDER buys, applied at rewrite time.
+- ``upsert_into``: read target ⟗ merge (operators.merge).
+- ``optimize_clustered``: Z-order-style layout (maintenance.zorder_layout)
+  — the data-skipping payoff OPTIMIZE ZORDER buys, at rewrite time.
+
+Every parquet rewrite of a stored table goes through ONE generation
+swap, :func:`_swap_in` — a staging table plus two metastore-only
+renames, rolled back if the second fails — so readers see the old or
+the new table, never a partial write. MERGE advances the version
+counter; OPTIMIZE keeps it (a layout rewrite keeps the row set).
 
 All table names are backtick-quoted; nothing here interpolates user
 data into SQL text (the reference's F6 injection weakness).
@@ -47,16 +47,10 @@ def _q(name: str) -> str:
     return ".".join(f"`{p}`" for p in name.split("."))
 
 
-def create_or_replace(
-    spark: SparkSession, df: DataFrame, table: str, num_files: int | None = None
-) -> None:
+def create_or_replace(spark: SparkSession, df: DataFrame, table: str) -> None:
     """C8 — ``CREATE OR REPLACE TABLE`` as a managed table (Delta when
-    delta-spark is present, else parquet — backend.table_format()).
-
-    ``num_files`` caps output files (the OSS stand-in for Delta's
-    optimizeWrite, dbc cell@1.5:1)."""
-    out = df.coalesce(num_files) if num_files else df
-    out.write.mode("overwrite").format(table_format()).saveAsTable(table)
+    delta-spark is present, else parquet — backend.table_format())."""
+    df.write.mode("overwrite").format(table_format()).saveAsTable(table)
 
 
 def _delta_merge(
@@ -103,30 +97,20 @@ def _current_version(spark: SparkSession, table: str) -> int:
     """The live table's version number.
 
     Authoritative source is the ``lakehouse_tools.version`` table
-    property — a monotone counter advanced by every ``upsert_into``
-    regardless of ``keep_versions``, so dropping archives (or never
-    keeping any) can't re-bind a version number to a different state.
-    Tables written before the counter existed fall back to the legacy
-    rule (newest archive + 1)."""
+    property — a monotone counter stamped by every swap, so dropping
+    archives (or never keeping any) can't re-bind a version number to
+    a different state. Tables written before the counter existed fall
+    back to the legacy rule (newest archive + 1)."""
     try:
-        rows = (
-            spark.sql(f"SHOW TBLPROPERTIES {_q(table)}")
-            .where(F.col("key") == _VERSION_PROP)
-            .collect()
-        )
-        if rows:
-            return int(rows[0]["value"])
+        # filtered on the driver: a DataFrame filter re-plans the
+        # command's result and costs about 3x the collect itself
+        for row in spark.sql(f"SHOW TBLPROPERTIES {_q(table)}").collect():
+            if row["key"] == _VERSION_PROP:
+                return int(row["value"])
     except Exception:
         pass
     have = _archived_versions(spark, table)
     return (have[-1] + 1) if have else 1
-
-
-def _set_version(spark: SparkSession, table: str, version: int) -> None:
-    spark.sql(
-        f"ALTER TABLE {_q(table)} SET TBLPROPERTIES "
-        f"('{_VERSION_PROP}'='{int(version)}')"
-    )
 
 
 def _archived_versions(spark: SparkSession, table: str) -> list[int]:
@@ -144,6 +128,45 @@ def _archived_versions(spark: SparkSession, table: str) -> list[int]:
     return sorted(out)
 
 
+def _swap_in(
+    spark: SparkSession,
+    table: str,
+    df: DataFrame,
+    version: int,
+    archive: int | None = None,
+) -> None:
+    """Replace stored ``table`` with ``df``, stamped ``version``.
+
+    ``df`` is staged first (computing it over the target while
+    overwriting the target would read-after-delete the very files
+    being replaced). The retired generation becomes
+    ``<table>__v<archive>``, or is dropped when ``archive`` is None."""
+    staging = f"{table}__stage_{uuid.uuid4().hex[:8]}"
+    retired = f"{table}__old_{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").format(table_format()).saveAsTable(staging)
+    spark.sql(f"ALTER TABLE {_q(table)} RENAME TO {_q(retired)}")
+    try:
+        spark.sql(f"ALTER TABLE {_q(staging)} RENAME TO {_q(table)}")
+    except Exception:
+        spark.sql(f"ALTER TABLE {_q(retired)} RENAME TO {_q(table)}")
+        spark.sql(f"DROP TABLE IF EXISTS {_q(staging)}")
+        raise
+    spark.sql(
+        f"ALTER TABLE {_q(table)} SET TBLPROPERTIES "
+        f"('{_VERSION_PROP}'='{int(version)}')"
+    )
+    if archive is None:
+        spark.sql(f"DROP TABLE {_q(retired)}")
+    else:
+        spark.sql(
+            f"ALTER TABLE {_q(retired)} RENAME TO {_q(f'{table}__v{archive}')}"
+        )
+    # drop any cached file listing for the old generation — readers in
+    # other sessions sharing this catalog (e.g. a streaming micro-batch
+    # clone) would otherwise resolve the name to deleted files
+    spark.catalog.refreshTable(table)
+
+
 def upsert_into(
     spark: SparkSession,
     table: str,
@@ -157,10 +180,7 @@ def upsert_into(
     """J1 — MERGE INTO a stored table, atomically.
 
     Delta backend: one ACID ``DeltaTable.merge``. Parquet backend: the
-    merged relation is materialized to a staging table first
-    (computing it directly over the target while overwriting the
-    target would read-after-delete the very files being replaced),
-    then swapped in with metastore renames.
+    merged relation replaces the table through :func:`_swap_in`.
 
     ``keep_versions > 0`` retains the replaced generation as
     ``<table>__v<n>`` instead of dropping it, pruning archives beyond
@@ -170,10 +190,8 @@ def upsert_into(
     movement per version. (The Delta backend gets this natively via
     the transaction log.)
 
-    Version numbers come from a monotone counter stored as a table
-    property, advanced on EVERY upsert — including ``keep_versions=0``
-    ones — so the live version number never re-binds to a different
-    state when archives are dropped or never kept.
+    Every upsert advances the version counter, ``keep_versions=0``
+    ones included.
     """
     if table_format() == "delta":
         _delta_merge(
@@ -189,32 +207,11 @@ def upsert_into(
         full_sync=full_sync,
         delete_condition=delete_condition,
     )
-    # read the counter while the old generation is still the live table
-    old_version = _current_version(spark, table)
-    staging = f"{table}__stage_{uuid.uuid4().hex[:8]}"
-    retired = f"{table}__old_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").format(table_format()).saveAsTable(staging)
-    spark.sql(f"ALTER TABLE {_q(table)} RENAME TO {_q(retired)}")
-    try:
-        spark.sql(f"ALTER TABLE {_q(staging)} RENAME TO {_q(table)}")
-    except Exception:
-        # roll the old table back before propagating
-        spark.sql(f"ALTER TABLE {_q(retired)} RENAME TO {_q(table)}")
-        raise
-    _set_version(spark, table, old_version + 1)
+    old = _current_version(spark, table)
+    # the retired generation IS version ``old``
+    _swap_in(spark, table, merged, old + 1, old if keep_versions > 0 else None)
     if keep_versions > 0:
-        # the retired generation IS version old_version
-        spark.sql(
-            f"ALTER TABLE {_q(retired)} RENAME TO {_q(f'{table}__v{old_version}')}"
-        )
-        for v in _archived_versions(spark, table)[:-keep_versions]:
-            spark.sql(f"DROP TABLE {_q(f'{table}__v{v}')}")
-    else:
-        spark.sql(f"DROP TABLE {_q(retired)}")
-    # drop any cached file listing for the old generation — readers in
-    # other sessions sharing this catalog (e.g. a streaming micro-batch
-    # clone) would otherwise resolve the name to deleted files
-    spark.catalog.refreshTable(table)
+        vacuum_versions(spark, table, keep_versions)
 
 
 def table_history(spark: SparkSession, table: str) -> DataFrame:
@@ -256,7 +253,7 @@ def vacuum_versions(spark: SparkSession, table: str, keep_last: int = 1) -> list
     if keep_last < 0:
         raise ValueError("keep_last must be >= 0")
     have = _archived_versions(spark, table)
-    drop = have[: len(have) - keep_last] if keep_last else have
+    drop = have[: max(0, len(have) - keep_last)]
     for v in drop:
         spark.sql(f"DROP TABLE {_q(f'{table}__v{v}')}")
     return drop
@@ -299,17 +296,12 @@ def optimize_clustered(
     """O1 — OPTIMIZE … ZORDER BY: rewrite the stored table clustered
     on ``zorder_cols`` (row set unchanged; parquet min/max row-group
     stats then skip-prune predicates on prefixes of the Z columns).
-    Delta backend: the native ``optimize().executeZOrderBy``."""
+    Delta backend: the native ``optimize().executeZOrderBy``. The
+    version number is kept: history and time travel read the same."""
     if table_format() == "delta":
         from delta.tables import DeltaTable
 
         DeltaTable.forName(spark, table).optimize().executeZOrderBy(*zorder_cols)
         return
     clustered = zorder_layout(spark.table(table), zorder_cols, num_partitions)
-    staging = f"{table}__stage_{uuid.uuid4().hex[:8]}"
-    retired = f"{table}__old_{uuid.uuid4().hex[:8]}"
-    clustered.write.mode("overwrite").format(table_format()).saveAsTable(staging)
-    spark.sql(f"ALTER TABLE {_q(table)} RENAME TO {_q(retired)}")
-    spark.sql(f"ALTER TABLE {_q(staging)} RENAME TO {_q(table)}")
-    spark.sql(f"DROP TABLE {_q(retired)}")
-    spark.catalog.refreshTable(table)
+    _swap_in(spark, table, clustered, _current_version(spark, table))

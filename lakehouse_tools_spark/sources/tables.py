@@ -45,34 +45,48 @@ NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 #: call measured warm at sf0.1, vs ~20 ms with an explicit schema).
 #: A real deployment reads table schemas from its catalog/metastore
 #: exactly once — this memo is that metastore lookup for pathed
-#: fixture files. Keyed on (abspath, mtime_ns, size) and restricted
-#: to regular files, so any rewrite of the file invalidates the entry
-#: and directory-shaped tables (whose parts can change without the
-#: dir stat moving) always take the full-inference path. BOUNDED
-#: (ADVICE r12): on insert, stale stat-keys for the same path are
-#: dropped, so the cache holds at most one schema per distinct path.
+#: fixture files. Keyed by :func:`_stat_key`; :func:`_memo_put` keeps
+#: at most one schema per distinct path.
 _FOOTER_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
 
 
-def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
-    """Footer schema of ``path``, memoized for unchanged regular files."""
+def _stat_key(path: str) -> tuple[str, int, int] | None:
+    """``(abspath, mtime_ns, size)`` of a regular file, else None —
+    the key of both table memos: any rewrite of the file changes it,
+    and directory-shaped tables (whose parts can change without the
+    dir stat moving) are never memoized."""
     try:
         st = os.stat(path)
     except OSError:
-        st = None
+        return None
     # S_ISREG on the ONE stat result — a second isfile() call would
     # open a TOCTOU window where a path replaced by a directory
     # between the calls keys a directory as a file (ADVICE r12)
-    if st is None or not statmod.S_ISREG(st.st_mode):
+    if not statmod.S_ISREG(st.st_mode):
+        return None
+    return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
+def _memo_put(memo: dict, key: tuple[str, int, int], value) -> None:
+    """Insert ``value`` under ``key``, first evicting the stale stat-keys
+    of the same path — at most one entry per distinct path (ADVICE r12)."""
+    for k in [k for k in memo if k[0] == key[0]]:
+        del memo[k]
+    memo[key] = value
+
+
+def _parquet_schema(
+    spark: SparkSession, path: str, key: tuple[str, int, int] | None = None
+) -> T.StructType:
+    """Footer schema of ``path``, memoized for unchanged regular files.
+    ``key`` is the caller's ``_stat_key(path)`` when it already has one."""
+    key = key or _stat_key(path)
+    if key is None:
         return spark.read.parquet(path).schema
-    abspath = os.path.abspath(path)
-    key = (abspath, st.st_mtime_ns, st.st_size)
     schema = _FOOTER_SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
-        for k in [k for k in _FOOTER_SCHEMA_CACHE if k[0] == abspath]:
-            del _FOOTER_SCHEMA_CACHE[k]
-        _FOOTER_SCHEMA_CACHE[key] = schema
+        _memo_put(_FOOTER_SCHEMA_CACHE, key, schema)
     return schema
 
 
@@ -85,15 +99,13 @@ def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
 #: costs ~0.2 ms and gives each call a FRESH dataset id, so
 #: column-object self-join disambiguation behaves like any other
 #: single-source self-join (use ``.alias()`` per side — the standard
-#: Spark requirement; pinned in tests). Same key discipline as the
-#: footer-schema memo: (session, abspath, mtime_ns, size), regular
-#: files only — a rewritten file changes the key and rebuilds, and
-#: directory-shaped paths always take the full build. BOUNDED two
-#: ways (ADVICE r12 / VERDICT r12 item 8): the outer map weak-keys on
-#: the SparkSession, so a stopped-and-dropped session releases every
-#: JVM Dataset it pinned; and on insert, stale stat-keys for the same
-#: path are dropped, so a rewrite never leaves the replaced Dataset
-#: (and its InMemoryFileIndex) pinned for the life of the process.
+#: Spark requirement; pinned in tests). Keyed by session, then
+#: :func:`_stat_key`. BOUNDED two ways (ADVICE r12 / VERDICT r12
+#: item 8): the outer map weak-keys on the SparkSession, so a
+#: stopped-and-dropped session releases every JVM Dataset it pinned;
+#: and :func:`_memo_put` drops stale stat-keys of the same path, so a
+#: rewrite never leaves the replaced Dataset (and its
+#: InMemoryFileIndex) pinned for the life of the process.
 _TABLE_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -119,20 +131,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # between loads must see it re-asserted exactly as the pre-memo
     # code did (ADVICE r12). One cheap local conf call.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = None
-    try:
-        st = os.stat(path)
-        # S_ISREG on the single stat result — no isfile() TOCTOU
-        if statmod.S_ISREG(st.st_mode):
-            key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    except OSError:
-        pass
+    key = _stat_key(path)
     per = _TABLE_PLAN_CACHE.get(spark) if key is not None else None
     if per is not None:
         jdf = per.get(key)
         if jdf is not None:
             return DataFrame(jdf.toDF(), spark)
-    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    df = spark.read.schema(_parquet_schema(spark, path, key)).parquet(path)
     for f in df.schema.fields:
         if isinstance(f.dataType, T.TimestampNTZType):
             df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
@@ -140,12 +145,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if isinstance(df.schema[c].dataType, T.LongType):
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     if key is not None:
-        if per is None:
-            per = _TABLE_PLAN_CACHE.setdefault(spark, {})
-        # only the latest stat-key per path survives (ADVICE r12)
-        for k in [k for k in per if k[0] == key[0]]:
-            del per[k]
-        per[key] = df._jdf
+        _memo_put(_TABLE_PLAN_CACHE.setdefault(spark, {}), key, df._jdf)
     return df
 
 

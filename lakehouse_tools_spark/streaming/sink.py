@@ -15,10 +15,10 @@ checkpoint directory tracks source progress; pass a stable path to
 resume across restarts.
 
 At scale each micro-batch rewrite costs one full-outer join against
-the target (parquet backend). With delta-spark present, swap
-``upsert_into``'s body for ``DeltaTable.merge`` and this sink is
-unchanged — that is the point of routing streams through the batch
-writer instead of a bespoke streaming path.
+the target (parquet backend). With delta-spark present
+``upsert_into`` runs ``DeltaTable.merge`` and this sink is unchanged
+— that is the point of routing streams through the batch writer
+instead of a bespoke streaming path.
 """
 
 from __future__ import annotations

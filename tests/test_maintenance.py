@@ -117,3 +117,36 @@ def test_compact_small_files_respects_target(spark, tables, tmp_path):
     report = compact_small_files(spark, path, target_file_bytes=target)
     assert report["files_after"] == math.ceil(total / target)
     assert report["bytes_total"] == total
+
+
+def test_compact_small_files_restores_table_when_swap_fails(
+    spark, tables, tmp_path, monkeypatch
+):
+    """If the staging→path rename fails, the original directory is
+    renamed back, so the table stays readable at ``path``."""
+    import os
+
+    import pytest
+
+    from lakehouse_tools_spark.operators.maintenance import compact_small_files
+
+    path = str(tmp_path / "frag3")
+    tables["nation"].repartition(5).write.parquet(path)
+    before = sorted(spark.read.parquet(path).collect())
+
+    real_rename = os.rename
+    calls = []
+
+    def failing_rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("rename failed")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="rename failed"):
+        compact_small_files(spark, path, target_file_bytes=64 * 1024 * 1024)
+    monkeypatch.undo()
+
+    assert not os.path.exists(path + "__precompact")
+    assert sorted(spark.read.parquet(path).collect()) == before

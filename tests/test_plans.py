@@ -196,7 +196,7 @@ def test_partitioned_read_prunes_partitions(spark):
     from pyspark.sql import functions as F
 
     docs = load_table(spark, SF, "documents")
-    path = "/root/repo/spark-warehouse/_io/_plans_partitioned"
+    path = E._warehouse_path(spark, "_io", "_plans_partitioned")
     write_partitioned(docs, path, ["lang"])
     back = read_partitioned(spark, path).filter(F.col("lang") == "en")
     plan = plan_of(back)

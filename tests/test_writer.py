@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
 from lakehouse_tools_spark.operators.merge import not_in
@@ -179,3 +180,90 @@ def test_vacuum_versions_never_drops_current(spark):
     # keep_last=0 empties the archive but never the live generation
     assert vacuum_versions(spark, tbl, keep_last=0) == [3]
     assert [r.v for r in spark.table(tbl).collect()] == [12]
+
+
+def _drop_all(spark, tbl):
+    for t in spark.catalog.listTables():
+        if t.name.startswith(tbl):
+            spark.sql(f"DROP TABLE `{t.name}`")
+
+
+def test_optimize_keeps_version_number(spark):
+    """OPTIMIZE rewrites the layout, not the rows: the version counter
+    must carry through, so the next versioned MERGE archives the
+    optimized state under the number it was read as."""
+    from lakehouse_tools_spark.operators.writer import read_version, table_history
+
+    tbl = "t_writer_opt_version"
+    _drop_all(spark, tbl)
+    create_or_replace(spark, spark.createDataFrame([Row(k="a", v=1)]), tbl)
+    upsert_into(spark, tbl, spark.createDataFrame([Row(k="b", v=2)]), ["k"])
+    upsert_into(spark, tbl, spark.createDataFrame([Row(k="c", v=3)]), ["k"])
+    optimize_clustered(spark, tbl, ["k"], num_partitions=2)
+    current = [r.version for r in table_history(spark, tbl).collect() if r.is_current]
+    assert current == [3]
+    optimized = sorted(map(tuple, spark.table(tbl).collect()))
+    upsert_into(
+        spark, tbl, spark.createDataFrame([Row(k="d", v=4)]), ["k"], keep_versions=1
+    )
+    assert sorted(map(tuple, read_version(spark, tbl, 3).collect())) == optimized
+    assert [r.v for r in read_version(spark, tbl, 4).where("k = 'd'").collect()] == [4]
+
+
+@pytest.mark.parametrize("op", ["upsert_into", "optimize_clustered"])
+def test_failed_swap_rolls_back(spark, monkeypatch, op):
+    """If the staging→live rename fails, the old generation is live
+    again with its rows and version, and no staging or retired table
+    is left behind."""
+    from lakehouse_tools_spark.operators.writer import table_history
+
+    tbl = f"t_writer_rollback_{op}"
+    _drop_all(spark, tbl)
+    create_or_replace(spark, spark.createDataFrame([Row(k="a", v=1)]), tbl)
+    upsert_into(spark, tbl, spark.createDataFrame([Row(k="b", v=2)]), ["k"])
+    before = sorted(map(tuple, spark.table(tbl).collect()))
+
+    real_sql = spark.sql
+
+    def failing_sql(query, *args, **kwargs):
+        if "__stage_" in query and "RENAME TO" in query:
+            raise RuntimeError("rename failed")
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", failing_sql)
+    with pytest.raises(RuntimeError, match="rename failed"):
+        if op == "upsert_into":
+            upsert_into(spark, tbl, spark.createDataFrame([Row(k="c", v=3)]), ["k"])
+        else:
+            optimize_clustered(spark, tbl, ["k"], num_partitions=2)
+    monkeypatch.undo()
+
+    assert sorted(map(tuple, spark.table(tbl).collect())) == before
+    assert [(r.version, r.is_current) for r in table_history(spark, tbl).collect()] == [
+        (2, True)
+    ]
+    leftovers = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith(f"{tbl}__stage_") or t.name.startswith(f"{tbl}__old_")
+    ]
+    assert leftovers == []
+
+
+def test_vacuum_versions_keeps_all_when_fewer_than_keep_last(spark):
+    from lakehouse_tools_spark.operators.writer import vacuum_versions
+
+    tbl = "t_writer_vacuum_few"
+    _drop_all(spark, tbl)
+    create_or_replace(spark, spark.createDataFrame([Row(k="a", v=1)]), tbl)
+    for i in range(3):
+        upsert_into(
+            spark,
+            tbl,
+            spark.createDataFrame([Row(k="a", v=10 + i)]),
+            ["k"],
+            keep_versions=4,
+        )
+    names = {t.name for t in spark.catalog.listTables() if t.name.startswith(f"{tbl}__v")}
+    assert names == {f"{tbl}__v1", f"{tbl}__v2", f"{tbl}__v3"}
+    assert vacuum_versions(spark, tbl, keep_last=4) == []

@@ -274,7 +274,10 @@ def connected_components_contract(
         start_partitions = _sized_start_partitions(vertices, edges)
     e = e.repartition(start_partitions, "u")
 
-    def _forest(batches):
+    def _union_find(batches, seen=None):
+        """Union every (u, v) edge of ``batches``; returns the parent
+        map and its path-compressing ``find``. Vertices are added to
+        ``seen`` when given."""
         parent: dict = {}
 
         def find(x):
@@ -287,12 +290,19 @@ def connected_components_contract(
 
         for b in batches:
             for u, v in zip(b["u"], b["v"]):
+                if seen is not None:
+                    seen.add(u)
+                    seen.add(v)
                 ru, rv = find(u), find(v)
                 if ru != rv:
                     # min-id as root keeps the star edges canonical
                     if rv < ru:
                         ru, rv = rv, ru
                     parent[rv] = ru
+        return parent, find
+
+    def _forest(batches):
+        parent, find = _union_find(batches)
         rows_u, rows_v = [], []
         for x in parent:
             r = find(x)
@@ -302,26 +312,8 @@ def connected_components_contract(
         yield pd.DataFrame({"u": rows_u, "v": rows_v})
 
     def _final(batches):
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        seen = set()
-        for b in batches:
-            for u, v in zip(b["u"], b["v"]):
-                seen.add(u)
-                seen.add(v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    if rv < ru:
-                        ru, rv = rv, ru
-                    parent[rv] = ru
+        seen: set = set()
+        _, find = _union_find(batches, seen)
         # exact component minimum per root (roots are min-id by
         # construction, but the reduction is cheap and makes the
         # invariant independent of union order)

@@ -8,14 +8,15 @@ snapshots with the SAME edges and sum (p−q)·ln(p/q) over bins.
 Rule-of-thumb thresholds: <0.1 stable, 0.1–0.25 drifting, >0.25
 shifted.
 
-Scale shape: identical to :func:`profile.numeric_histogram` — one
-tiny min/max aggregate on the baseline (bounds become plan
-literals), then ONE melt + groupBy(column, bin) count per side; the
-shuffle carries ≤ columns × bins rows. The PSI join runs on those
-bounded count relations, never on data. Bin edges come from the
-BASELINE only (current values outside the baseline range clamp into
-the edge bins) — drift must be measured against the reference
-distribution, not a moving target.
+Scale shape: the profiler's bin helpers, shared with
+:func:`profile.numeric_histogram` — one tiny min/max aggregate on the
+baseline (``profile._numeric_bounds``; bounds become plan literals),
+then ONE melt + groupBy(column, bin) count per side
+(``profile._bin_counts``); the shuffle carries ≤ columns × bins
+rows. The PSI join runs on those bounded count relations, never on
+data. Bin edges come from the BASELINE only (current values outside
+the baseline range clamp into the edge bins) — drift must be
+measured against the reference distribution, not a moving target.
 
 Determinism: bin membership is the same IEEE double ops any engine
 computes; smoothing is Laplace-0.5 (portable arithmetic, no epsilon
@@ -30,46 +31,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_tools_spark.functions.memo import expr_memo
-
-
-def _bin_counts(
-    df: DataFrame, fields, stats, bins: int
-) -> DataFrame:
-    """Melt numeric columns to (columnName, bin) counts using the
-    provided baseline stats; values outside [min, max] clamp to the
-    edge bins. The melt expression is memoized on (schema, bounds,
-    bins) — same baseline -> memo hit, changed data -> fresh build
-    (functions/memo.py)."""
-    bounds_key = tuple(
-        (f.name, stats[f"_mn_{f.name}"], stats[f"_mx_{f.name}"]) for f in fields
-    )
-
-    def _build():
-        branches = []
-        for f in fields:
-            mn, mx = stats[f"_mn_{f.name}"], stats[f"_mx_{f.name}"]
-            x = F.col(f"`{f.name}`").cast("double")
-            w = (mx - mn) / bins
-            if w == 0.0:
-                b = F.when(x.isNotNull(), F.lit(0).cast("long"))
-            else:
-                b = F.least(
-                    F.greatest(
-                        F.floor((x - F.lit(mn)) / F.lit(w)).cast("long"), F.lit(0)
-                    ),
-                    F.lit(bins - 1).cast("long"),
-                )
-            branches.extend([F.lit(f.name), b])
-        return {
-            "melt": F.stack(F.lit(len(fields)), *branches).alias(
-                "columnName", "bin"
-            ),
-            "count": F.count(F.lit(1)).alias("cnt"),
-        }
-
-    bundle = expr_memo(("drift_bin_counts", bins, bounds_key), _build)
-    melted = df.select(bundle["melt"]).filter(F.col("bin").isNotNull())
-    return melted.groupBy("columnName", "bin").agg(bundle["count"])
+from lakehouse_tools_spark.operators.profile import (
+    _bin_counts,
+    _bin_exprs,
+    _labels,
+    _numeric_bounds,
+)
 
 
 def histogram_drift(
@@ -93,25 +60,20 @@ def histogram_drift(
         for f in baseline.schema.fields
         if isinstance(f.dataType, T.NumericType) and f.name in cur_types
     ]
-    stats_row = baseline.agg(
-        *[
-            F.min(F.col(f"`{f.name}`").cast("double")).alias(f"_mn_{f.name}")
-            for f in fields
-        ],
-        *[
-            F.max(F.col(f"`{f.name}`").cast("double")).alias(f"_mx_{f.name}")
-            for f in fields
-        ],
-    ).collect()[0]
-    fields = [f for f in fields if stats_row[f"_mn_{f.name}"] is not None]
-    if not fields:
+    bounds = _numeric_bounds(baseline, fields)
+    if not bounds:
         return baseline.sparkSession.createDataFrame(
             [],
             "databaseName string, tableName string, columnName string,"
             " n_base long, n_curr long, psi double",
         )
-    base_counts = _bin_counts(baseline, fields, stats_row, bins)
-    curr_counts = _bin_counts(current, fields, stats_row, bins).select(
+    # the melt is memoized on (bounds, bins) — same baseline -> memo
+    # hit, changed data -> fresh build (functions/memo.py)
+    bundle = expr_memo(
+        ("drift_bin_counts", bins, bounds), lambda: _bin_exprs(bounds, bins)
+    )
+    base_counts = _bin_counts(baseline, bundle)
+    curr_counts = _bin_counts(current, bundle).select(
         "columnName", "bin", F.col("cnt").alias("cnt_c")
     )
     # the full (column × bin) frame — tiny plan literals — so both
@@ -119,7 +81,7 @@ def histogram_drift(
     frame = (
         baseline.sparkSession.range(1)
         .select(
-            F.explode(F.array(*[F.lit(f.name) for f in fields])).alias(
+            F.explode(F.array(*[F.lit(name) for name, _, _ in bounds])).alias(
                 "columnName"
             )
         )
@@ -155,8 +117,7 @@ def histogram_drift(
     return terms.groupBy("columnName", "tb", "tc").agg(
         F.round(F.sum("_term"), 6).alias("psi")
     ).select(
-        F.lit(database).alias("databaseName"),
-        F.lit(table).alias("tableName"),
+        *_labels(database, table),
         "columnName",
         F.col("tb").cast("long").alias("n_base"),
         F.col("tc").cast("long").alias("n_curr"),
@@ -190,6 +151,11 @@ def ks_drift(
     ``(columnName, n_base, n_curr, ks)``, KS floored to 1e-6 with the
     house 1e-9 boundary nudge.
     """
+    if not columns:
+        return baseline.sparkSession.createDataFrame(
+            [], "columnName string, n_base bigint, n_curr bigint, ks double"
+        )
+
     def melt(df: DataFrame, side: str) -> DataFrame:
         branches = []
         for c in columns:

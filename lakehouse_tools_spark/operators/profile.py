@@ -103,6 +103,133 @@ def profilable_columns(df: DataFrame) -> list[T.StructField]:
     return [f for f in df.schema.fields if is_profilable(f.dataType)]
 
 
+# Each mechanism below exists once: an expression builder, called
+# inside the operator's ``expr_memo`` build so its Columns are
+# memoized with the operator's bundle, and a relation helper that
+# applies the built expressions to the data.
+
+
+def _labels(database: str, table: str, fields=None) -> list:
+    """The catalog label columns every profiler output starts with —
+    ``databaseName, tableName`` and, given the profiled ``fields``,
+    ``columnName`` plus its ``dataType`` looked up in one
+    name→type map."""
+    labels = [F.lit(database).alias("databaseName"), F.lit(table).alias("tableName")]
+    if fields is None:
+        return labels
+    dtype_map = F.create_map(
+        *[x for f in fields for x in (F.lit(f.name), F.lit(f.dataType.simpleString()))]
+    )
+    return labels + [
+        F.col("columnName"),
+        dtype_map[F.col("columnName")].alias("dataType"),
+    ]
+
+
+def _melt_expr(fields) -> F.Column:
+    """The rendered melt: every field as (columnName, value) rows,
+    value rendered by :func:`stable_string`."""
+    branches = []
+    for f in fields:
+        branches.append(F.lit(f.name))
+        branches.append(stable_string(F.col(f"`{f.name}`"), f.dataType))
+    return F.stack(F.lit(len(fields)), *branches).alias("columnName", "value")
+
+
+def _rendered_melt(df: DataFrame, fields, melt: F.Column) -> DataFrame:
+    # the melt multiplies rows ×len(fields) and renders every value to
+    # text BEFORE the aggregate's map-side combine — spread the scan
+    # size-aware (expansion = the melt multiplier) so each task's
+    # melted working set fits its execution-memory share; sized by
+    # core count alone, the partial-agg map outgrows its share on
+    # high-cardinality tables and falls back to sort+spill (measured:
+    # stage CPU 319 s -> 1065 s for 2x data at sf10, e(5->10)=2.1,
+    # restored to ~linear by this sizing — SCALING.md r07)
+    return ensure_parallelism(
+        df.select(*[f"`{f.name}`" for f in fields]), expansion=len(fields)
+    ).select(melt)
+
+
+def _numeric_bounds(df: DataFrame, fields) -> tuple:
+    """One min/max aggregate over every field (as double), collected:
+    ``(name, min, max)`` per column with a non-null value — the bounds
+    become plan literals, and the tuple is a memo key."""
+    if not fields:
+        return ()
+    stats = df.agg(
+        *[F.min(F.col(f"`{f.name}`").cast("double")).alias(f"_mn_{f.name}") for f in fields],
+        *[F.max(F.col(f"`{f.name}`").cast("double")).alias(f"_mx_{f.name}") for f in fields],
+    ).collect()[0]
+    return tuple(
+        (f.name, stats[f"_mn_{f.name}"], stats[f"_mx_{f.name}"])
+        for f in fields
+        if stats[f"_mn_{f.name}"] is not None
+    )
+
+
+def _bin_exprs(bounds: tuple, bins: int) -> dict:
+    """Equi-width bin membership on the given bounds:
+    ``least(greatest(floor((x − min)/w), 0), bins−1)`` in double
+    precision — the same IEEE ops any engine computes; values outside
+    [min, max] clamp to the edge bins, nulls get no bin and a constant
+    column lands in bin 0."""
+    branches = []
+    for name, mn, mx in bounds:
+        x = F.col(f"`{name}`").cast("double")
+        w = (mx - mn) / bins
+        if w == 0.0:
+            b = F.when(x.isNotNull(), F.lit(0).cast("long"))
+        else:
+            b = F.least(
+                F.greatest(
+                    F.floor((x - F.lit(mn)) / F.lit(w)).cast("long"), F.lit(0)
+                ),
+                F.lit(bins - 1).cast("long"),
+            )
+        branches.extend([F.lit(name), b])
+    return {
+        "bins": F.stack(F.lit(len(bounds)), *branches).alias("columnName", "bin"),
+        "count": F.count(F.lit(1)).alias("cnt"),
+    }
+
+
+def _bin_counts(df: DataFrame, bundle: dict) -> DataFrame:
+    """(columnName, bin, cnt): one melt + groupBy(columnName, bin)
+    count for every column — the shuffle carries ≤ columns × bins
+    rows."""
+    melted = df.select(bundle["bins"]).filter(F.col("bin").isNotNull())
+    return melted.groupBy("columnName", "bin").agg(bundle["count"])
+
+
+def _fence_exprs(cols: list[str], k: float) -> dict:
+    """Tukey fences ``q1 − k·IQR`` / ``q3 + k·IQR`` per column as
+    ``_lo_<c>`` / ``_hi_<c>``, from quartiles pivoted out of
+    :func:`exact_quantile_cells` and rounded to 6 BEFORE the fence
+    arithmetic, so fences are bit-identical across engines (absent =
+    all-null columns get NULL fences)."""
+    quart_pivot = [
+        F.round(F.max(F.when(F.col("columnName") == c, F.col(f"q{i}"))), 6).alias(
+            f"_q{tag}_{c}"
+        )
+        for c in cols
+        for i, tag in ((0, "1"), (1, "3"))
+    ]
+    fences = []
+    for c in cols:
+        q1, q3 = F.col(f"`_q1_{c}`"), F.col(f"`_q3_{c}`")
+        fences.append((q1 - k * (q3 - q1)).alias(f"_lo_{c}"))
+        fences.append((q3 + k * (q3 - q1)).alias(f"_hi_{c}"))
+    return {"quart_pivot": quart_pivot, "fences": fences}
+
+
+def _tukey_fences(df: DataFrame, cols: list[str], bundle: dict) -> DataFrame:
+    """The 1-row fence relation, broadcast for a cross join back over
+    the data. Quartiles come from the DISTRIBUTED exact path
+    (bit-identical to ``F.percentile``, bounded memory, guide §5)."""
+    quarts = exact_quantile_cells(df, list(cols), (0.25, 0.75))
+    return F.broadcast(quarts.agg(*bundle["quart_pivot"]).select(*bundle["fences"]))
+
+
 def profile_table(
     df: DataFrame,
     database: str,
@@ -145,8 +272,7 @@ def profile_table(
                 "count": F.count(F.lit(1)).alias("_n"),
                 "selects": [
                     [
-                        F.lit(database).alias("databaseName"),
-                        F.lit(table).alias("tableName"),
+                        *_labels(database, table),
                         F.lit(f.name).alias("columnName"),
                         F.lit(f.dataType.simpleString()).alias("dataType"),
                         F.lit(f.name).alias("value"),
@@ -178,27 +304,11 @@ def profile_table(
     # several hundred py4j round trips of rebuilding it (functions/
     # memo.py; the expressions are object-identical, not re-created)
     def _build() -> dict:
-        branches = []
-        for f in fields:
-            branches.append(F.lit(f.name))
-            branches.append(stable_string(F.col(f"`{f.name}`"), f.dataType))
-        dtype_map = F.create_map(
-            *[
-                x
-                for f in fields
-                for x in (F.lit(f.name), F.lit(f.dataType.simpleString()))
-            ]
-        )
         return {
-            "melt": F.stack(F.lit(len(fields)), *branches).alias(
-                "columnName", "value"
-            ),
+            "melt": _melt_expr(fields),
             "count": F.count(F.lit(1)).alias("_n"),
             "select": [
-                F.lit(database).alias("databaseName"),
-                F.lit(table).alias("tableName"),
-                F.col("columnName"),
-                dtype_map[F.col("columnName")].alias("dataType"),
+                *_labels(database, table, fields),
                 F.col("value"),
                 F.col("_n").cast("float").alias("num_records"),
             ],
@@ -209,18 +319,7 @@ def profile_table(
         ("profile_table", database, table, top_k, fields_key(fields)), _build
     )
 
-    # the melt multiplies rows ×len(fields) and renders every value to
-    # text BEFORE the aggregate's map-side combine — spread the scan
-    # size-aware (expansion = the melt multiplier) so each task's
-    # melted working set fits its execution-memory share; sized by
-    # core count alone, the partial-agg map outgrows its share on
-    # high-cardinality tables and falls back to sort+spill (measured:
-    # stage CPU 319 s -> 1065 s for 2x data at sf10, e(5->10)=2.1,
-    # restored to ~linear by this sizing — SCALING.md r07)
-    melted = ensure_parallelism(
-        df.select(*[f"`{f.name}`" for f in fields]), expansion=len(fields)
-    ).select(bundle["melt"])
-
+    melted = _rendered_melt(df, fields, bundle["melt"])
     counts = melted.groupBy("columnName", "value").agg(bundle["count"])
 
     if top_k is not None:
@@ -306,18 +405,8 @@ def profile_summary(
                 if exact_distinct
                 else F.col(f"`_nd_{f.name}`")
             )
-        melt_branches = []
-        for f in fields:
-            melt_branches.append(F.lit(f.name))
-            melt_branches.append(stable_string(F.col(f"`{f.name}`"), f.dataType))
-        dtype_map = F.create_map(
-            *[
-                x
-                for f in fields
-                for x in (F.lit(f.name), F.lit(f.dataType.simpleString()))
-            ]
-        )
         return {
+            "melt": _melt_expr(fields),
             "aggs": aggs,
             "long": [
                 F.col("_n").alias("n_rows"),
@@ -325,15 +414,9 @@ def profile_summary(
                     "columnName", "n_nulls", "min_value", "max_value", "n_distinct"
                 ),
             ],
-            "melt": F.stack(F.lit(len(fields)), *melt_branches).alias(
-                "columnName", "value"
-            ),
             "nd": F.count_distinct(F.col("value")).alias("_nd_exact"),
             "select": [
-                F.lit(database).alias("databaseName"),
-                F.lit(table).alias("tableName"),
-                F.col("columnName"),
-                dtype_map[F.col("columnName")].alias("dataType"),
+                *_labels(database, table, fields),
                 F.col("n_rows"),
                 F.col("n_nulls"),
                 F.col("n_distinct"),
@@ -357,15 +440,8 @@ def profile_summary(
     long = wide.select(*bundle["long"])
 
     if exact_distinct:
-        nd = (
-            ensure_parallelism(
-                df.select(*[f"`{f.name}`" for f in fields]),
-                expansion=len(fields),
-            )
-            .select(bundle["melt"])
-            .groupBy("columnName")
-            .agg(bundle["nd"])
-        )
+        melted = _rendered_melt(df, fields, bundle["melt"])
+        nd = melted.groupBy("columnName").agg(bundle["nd"])
         long = long.drop("n_distinct").join(nd, "columnName", "left").withColumn(
             "n_distinct", F.col("_nd_exact")
         )
@@ -442,22 +518,12 @@ def numeric_quantiles(
             branches.append(F.lit(f.name))
             for i in range(3):
                 branches.append(q[i].cast("double"))
-        dtype_map = F.create_map(
-            *[
-                x
-                for f in fields
-                for x in (F.lit(f.name), F.lit(f.dataType.simpleString()))
-            ]
-        )
         return {
             "long": F.stack(F.lit(len(fields)), *branches).alias(
                 "columnName", "q25", "q50", "q75"
             ),
             "select": [
-                F.lit(database).alias("databaseName"),
-                F.lit(table).alias("tableName"),
-                F.col("columnName"),
-                dtype_map[F.col("columnName")].alias("dataType"),
+                *_labels(database, table, fields),
                 F.col("q25"),
                 F.col("q50"),
                 F.col("q75"),
@@ -645,13 +711,6 @@ def numeric_quantiles_exact(
         return df.sparkSession.createDataFrame([], QUANTILE_SCHEMA)
 
     def _build() -> dict:
-        dtype_map = F.create_map(
-            *[
-                x
-                for f in fields
-                for x in (F.lit(f.name), F.lit(f.dataType.simpleString()))
-            ]
-        )
         return {
             # all-null columns yield no exact_quantile_cells row; the
             # column spine restores them as NULL-quartile rows (what
@@ -660,10 +719,7 @@ def numeric_quantiles_exact(
                 F.array(*[F.lit(f.name) for f in fields])
             ).alias("columnName"),
             "select": [
-                F.lit(database).alias("databaseName"),
-                F.lit(table).alias("tableName"),
-                F.col("columnName"),
-                dtype_map[F.col("columnName")].alias("dataType"),
+                *_labels(database, table, fields),
                 F.round(F.col("q0"), 6).alias("q25"),
                 F.round(F.col("q1"), 6).alias("q50"),
                 F.round(F.col("q2"), 6).alias("q75"),
@@ -723,7 +779,7 @@ def numeric_correlations(
         )
     wide = df.agg(
         *[
-            F.round(F.corr(F.col(a), F.col(b)), 6).alias(f"_r_{i}")
+            F.round(F.corr(F.col(f"`{a}`"), F.col(f"`{b}`")), 6).alias(f"_r_{i}")
             for i, (a, b) in enumerate(pairs)
         ]
     )
@@ -732,13 +788,7 @@ def numeric_correlations(
         branches.extend([F.lit(a), F.lit(b), F.col(f"_r_{i}")])
     return wide.select(
         F.stack(F.lit(len(pairs)), *branches).alias("col1", "col2", "corr")
-    ).select(
-        F.lit(database).alias("databaseName"),
-        F.lit(table).alias("tableName"),
-        "col1",
-        "col2",
-        "corr",
-    )
+    ).select(*_labels(database, table), "col1", "col2", "corr")
 
 
 def numeric_outliers(
@@ -753,16 +803,12 @@ def numeric_outliers(
     for sensor glitches, unit mixups, and fat-tailed columns that need
     clipping before training.
 
-    Two passes by necessity (the fences depend on the quartiles): one
-    wide exact-percentile aggregate for all columns' quartiles, then
-    one wide conditional-count aggregate with the 1-row fence relation
-    broadcast back — never a per-column job pair. Quartiles are
-    rounded to 6 decimals BEFORE the fence arithmetic, so the fences
-    (and therefore every comparison) are bit-identical across engines.
-    Exact percentile buffers all values per column in the aggregate
-    state — like :func:`numeric_quantiles_exact`, prune ``cols`` to
-    the measures that matter at scale, or derive fences from the GK
-    sketch when auditability isn't required.
+    Two passes by necessity (the fences depend on the quartiles): the
+    1-row fence relation of :func:`_tukey_fences` for all columns,
+    then one wide conditional-count aggregate with it broadcast back —
+    never a per-column job pair. The fences (and therefore every
+    comparison) are bit-identical across engines, and identical to
+    the ones :func:`clip_outliers` clamps to.
     """
     if cols is None:
         cols = [
@@ -777,68 +823,34 @@ def numeric_outliers(
             " lo_fence double, hi_fence double, n_outliers bigint,"
             " n_values bigint",
         )
-    # Quartiles come from the DISTRIBUTED exact path since r13
-    # (exact_quantile_cells — bit-identical to the former wide
-    # F.percentile aggregate, guide §5: no unbounded per-column
-    # value→count buffer in a single reducer). The long (columnName,
-    # q1, q3) relation pivots to the same 1-row wide fence relation
-    # the wide aggregate produced (absent = all-null columns surface
-    # as NULL fences, as before), which broadcasts back over the data
-    # for the conditional-count pass exactly as before.
-    # All Columns are (cols, k, db, table)-derived — memoized.
+
+    # Columns are (cols, k, db, table)-derived — memoized.
     def _build() -> dict:
-        quart_pivot = [
-            F.round(
-                F.max(F.when(F.col("columnName") == c, F.col(f"q{i}"))), 6
-            ).alias(f"_q{tag}_{c}")
-            for c in cols
-            for i, tag in ((0, "1"), (1, "3"))
-        ]
-        count_aggs = [
-            e
-            for c in cols
-            for e in (
-                F.sum(
-                    F.when(
-                        (
-                            F.col(c)
-                            < F.col(f"_q1_{c}")
-                            - k * (F.col(f"_q3_{c}") - F.col(f"_q1_{c}"))
-                        )
-                        | (
-                            F.col(c)
-                            > F.col(f"_q3_{c}")
-                            + k * (F.col(f"_q3_{c}") - F.col(f"_q1_{c}"))
-                        ),
-                        1,
-                    ).otherwise(0)
-                ).alias(f"_n_{c}"),
-                F.count(F.col(c)).alias(f"_cnt_{c}"),
-                F.first(f"_q1_{c}").alias(f"_fq1_{c}"),
-                F.first(f"_q3_{c}").alias(f"_fq3_{c}"),
-            )
-        ]
+        count_aggs = []
         branches = []
         for c in cols:
-            iqr = F.col(f"_fq3_{c}") - F.col(f"_fq1_{c}")
-            branches.extend(
-                [
-                    F.lit(c),
-                    F.round(F.col(f"_fq1_{c}") - k * iqr, 6),
-                    F.round(F.col(f"_fq3_{c}") + k * iqr, 6),
-                    F.col(f"_n_{c}").cast("long"),
-                    F.col(f"_cnt_{c}").cast("long"),
-                ]
-            )
+            x, lo, hi = F.col(f"`{c}`"), F.col(f"`_lo_{c}`"), F.col(f"`_hi_{c}`")
+            count_aggs += [
+                F.sum(F.when((x < lo) | (x > hi), 1).otherwise(0)).alias(f"_n_{c}"),
+                F.count(x).alias(f"_cnt_{c}"),
+                F.first(lo).alias(f"_flo_{c}"),
+                F.first(hi).alias(f"_fhi_{c}"),
+            ]
+            branches += [
+                F.lit(c),
+                F.round(F.col(f"`_flo_{c}`"), 6),
+                F.round(F.col(f"`_fhi_{c}`"), 6),
+                F.col(f"`_n_{c}`").cast("long"),
+                F.col(f"`_cnt_{c}`").cast("long"),
+            ]
         return {
-            "quart_pivot": quart_pivot,
+            **_fence_exprs(cols, k),
             "count_aggs": count_aggs,
             "long": F.stack(F.lit(len(cols)), *branches).alias(
                 "columnName", "lo_fence", "hi_fence", "n_outliers", "n_values"
             ),
             "select": [
-                F.lit(database).alias("databaseName"),
-                F.lit(table).alias("tableName"),
+                *_labels(database, table),
                 F.col("columnName"),
                 F.col("lo_fence"),
                 F.col("hi_fence"),
@@ -850,10 +862,8 @@ def numeric_outliers(
     bundle = expr_memo(
         ("numeric_outliers", database, table, tuple(cols), k), _build
     )
-    quarts = exact_quantile_cells(df, list(cols), (0.25, 0.75)).agg(
-        *bundle["quart_pivot"]
-    )
-    counts = df.crossJoin(F.broadcast(quarts)).agg(*bundle["count_aggs"])
+    fences = _tukey_fences(df, cols, bundle)
+    counts = df.crossJoin(fences).agg(*bundle["count_aggs"])
     return counts.select(bundle["long"]).select(*bundle["select"])
 
 
@@ -884,8 +894,7 @@ def grouped_quantiles(
         agg.alias("_q"), F.count(F.col(value_col)).alias("n_values")
     )
     return g.select(
-        F.lit(database).alias("databaseName"),
-        F.lit(table).alias("tableName"),
+        *_labels(database, table),
         F.lit(value_col).alias("columnName"),
         "groupValue",
         F.round(F.col("_q")[0].cast("double"), 6).alias("q25"),
@@ -905,60 +914,27 @@ def clip_outliers(
     action for what :func:`numeric_outliers` reports (clip the fat
     tail before training instead of dropping rows).
 
-    Same two-pass shape as the report: one wide exact-quartile
-    aggregate, then the 1-row fence relation broadcast back into a
-    pure projection (no second shuffle). Quartiles round to 6 before
-    the fence arithmetic, so the clamped values are bit-identical
-    across engines. Nulls pass through unchanged.
+    Same two-pass shape as the report: the 1-row fence relation of
+    :func:`_tukey_fences` broadcast back into a pure projection (no
+    second shuffle), so the clamped values are bit-identical across
+    engines. Nulls pass through unchanged.
     """
     if not cols:
         return df
 
-    # Quartiles via the DISTRIBUTED exact path since r13 (see
-    # numeric_outliers — bit-identical, bounded memory, guide §5).
     # Columns are (cols, k)-derived — memoized.
     def _build() -> dict:
-        return {
-            "quart_pivot": [
-                F.round(
-                    F.max(F.when(F.col("columnName") == c, F.col(f"q{i}"))), 6
-                ).alias(f"_q{tag}_{c}")
-                for c in cols
-                for i, tag in ((0, "1"), (1, "3"))
-            ],
-            "clips": [
-                (
-                    c,
-                    F.when(
-                        F.col(c)
-                        < F.col(f"_q1_{c}")
-                        - k * (F.col(f"_q3_{c}") - F.col(f"_q1_{c}")),
-                        F.col(f"_q1_{c}")
-                        - k * (F.col(f"_q3_{c}") - F.col(f"_q1_{c}")),
-                    )
-                    .when(
-                        F.col(c)
-                        > F.col(f"_q3_{c}")
-                        + k * (F.col(f"_q3_{c}") - F.col(f"_q1_{c}")),
-                        F.col(f"_q3_{c}")
-                        + k * (F.col(f"_q3_{c}") - F.col(f"_q1_{c}")),
-                    )
-                    .otherwise(F.col(c)),
-                )
-                for c in cols
-            ],
-        }
+        clips = []
+        for c in cols:
+            x, lo, hi = F.col(f"`{c}`"), F.col(f"`_lo_{c}`"), F.col(f"`_hi_{c}`")
+            clips.append((c, F.when(x < lo, lo).when(x > hi, hi).otherwise(x)))
+        return {**_fence_exprs(cols, k), "clips": clips}
 
     bundle = expr_memo(("clip_outliers", tuple(cols), k), _build)
-    quarts = exact_quantile_cells(df, list(cols), (0.25, 0.75)).agg(
-        *bundle["quart_pivot"]
-    )
-    out = df.crossJoin(F.broadcast(quarts))
+    out = df.crossJoin(_tukey_fences(df, cols, bundle))
     for c, clip in bundle["clips"]:
         out = out.withColumn(c, clip)
-    return out.drop(
-        *[f"_q{tag}_{c}" for c in cols for tag in ("1", "3")]
-    )
+    return out.drop(*[f"_{tag}_{c}" for c in cols for tag in ("lo", "hi")])
 
 
 def column_entropy(
@@ -1010,8 +986,7 @@ def column_entropy(
             F.sum(F.col("_c") * F.log(F.col("_c"))).alias("_clogc"),
         )
         .select(
-            F.lit(database).alias("databaseName"),
-            F.lit(table).alias("tableName"),
+            *_labels(database, table),
             "columnName",
             F.col("_nv").cast("long").alias("n_values"),
             # H = ln(n) − (Σ c·ln c)/n  — algebraically −Σ p ln p, but
@@ -1048,56 +1023,31 @@ def numeric_histogram(
     collect — the bounds become plan literals), then one melt +
     ``groupBy(columnName, bin)`` count — the profiler's single-scan
     shape, never an aggregate per column. Bin membership is
-    ``least(floor((x − min)/w), bins−1)`` in double precision, the
-    same IEEE ops any engine computes, so counts are exactly
-    reproducible (nulls excluded; a constant column lands in bin 0).
+    :func:`_bin_exprs` (``greatest(…, 0)`` is a no-op on the column's
+    own bounds), so counts are exactly reproducible (nulls excluded; a
+    constant column lands in bin 0).
     """
     fields = [
         f for f in df.schema.fields if isinstance(f.dataType, T.NumericType)
     ]
-    if not fields:
-        return df.sparkSession.createDataFrame([], HISTOGRAM_SCHEMA)
-    stats = df.agg(
-        *[F.min(F.col(f"`{f.name}`").cast("double")).alias(f"_mn_{f.name}") for f in fields],
-        *[F.max(F.col(f"`{f.name}`").cast("double")).alias(f"_mx_{f.name}") for f in fields],
-    ).collect()[0]
-    kept = [f for f in fields if stats[f"_mn_{f.name}"] is not None]
-    if not kept:  # all-null columns: no histogram rows
+    bounds = _numeric_bounds(df, fields)
+    if not bounds:  # no numeric or only all-null columns: no rows
         return df.sparkSession.createDataFrame([], HISTOGRAM_SCHEMA)
 
     # keyed on the COLLECTED bounds as well as the schema: same data
     # -> same bounds -> memo hit on repeat profiles; changed data ->
     # new key -> fresh expressions (functions/memo.py)
-    bounds_key = tuple(
-        (f.name, stats[f"_mn_{f.name}"], stats[f"_mx_{f.name}"]) for f in kept
-    )
-
     def _build() -> dict:
-        branches, mn_map, w_map = [], [], []
-        for f in kept:
-            mn, mx = stats[f"_mn_{f.name}"], stats[f"_mx_{f.name}"]
-            w = (mx - mn) / bins
-            x = F.col(f"`{f.name}`").cast("double")
-            if w == 0.0:
-                b = F.when(x.isNotNull(), F.lit(0).cast("long"))
-            else:
-                b = F.least(
-                    F.floor((x - F.lit(mn)) / F.lit(w)).cast("long"),
-                    F.lit(bins - 1).cast("long"),
-                )
-            branches.extend([F.lit(f.name), b])
-            mn_map.extend([F.lit(f.name), F.lit(mn)])
-            w_map.extend([F.lit(f.name), F.lit(w)])
+        mn_map, w_map = [], []
+        for name, mn, mx in bounds:
+            mn_map.extend([F.lit(name), F.lit(mn)])
+            w_map.extend([F.lit(name), F.lit((mx - mn) / bins)])
         mns = F.create_map(*mn_map)[F.col("columnName")]
         ws = F.create_map(*w_map)[F.col("columnName")]
         return {
-            "melt": F.stack(F.lit(len(kept)), *branches).alias(
-                "columnName", "bin"
-            ),
-            "count": F.count(F.lit(1)).alias("cnt"),
+            **_bin_exprs(bounds, bins),
             "select": [
-                F.lit(database).alias("databaseName"),
-                F.lit(table).alias("tableName"),
+                *_labels(database, table),
                 F.col("columnName"),
                 F.col("bin").cast("int").alias("bin"),
                 (mns + F.col("bin") * ws).alias("lo"),
@@ -1107,11 +1057,9 @@ def numeric_histogram(
         }
 
     bundle = expr_memo(
-        ("numeric_histogram", database, table, bins, bounds_key), _build
+        ("numeric_histogram", database, table, bins, bounds), _build
     )
-    melted = df.select(bundle["melt"]).filter(F.col("bin").isNotNull())
-    counts = melted.groupBy("columnName", "bin").agg(bundle["count"])
-    return counts.select(*bundle["select"])
+    return _bin_counts(df, bundle).select(*bundle["select"])
 
 
 NESTED_SCHEMA = T.StructType(
@@ -1209,18 +1157,8 @@ def profile_nested(df: DataFrame, database: str, table: str) -> DataFrame:
             "n_null_elements",
         ),
     )
-    dtype_map = F.create_map(
-        *[
-            x
-            for f, _, _ in specs
-            for x in (F.lit(f.name), F.lit(f.dataType.simpleString()))
-        ]
-    )
     return long.select(
-        F.lit(database).alias("databaseName"),
-        F.lit(table).alias("tableName"),
-        F.col("columnName"),
-        dtype_map[F.col("columnName")].alias("dataType"),
+        *_labels(database, table, [f for f, _, _ in specs]),
         F.col("_nrows").cast("long").alias("n_rows"),
         F.col("n_null").cast("long"),
         F.col("len_min").cast("long"),
@@ -1322,6 +1260,12 @@ def equi_depth_histogram(
     aggregates cost more than ntile's single sorted pass. Reverted
     per the measure-first rule.)
     """
+    if not cols:
+        return df.sparkSession.createDataFrame(
+            [],
+            "databaseName string, tableName string, columnName string,"
+            " bucket int, n_rows bigint, lo double, hi double",
+        )
     branches = []
     for c in cols:
         branches.extend([F.lit(c), F.col(f"`{c}`").cast("double")])
@@ -1338,8 +1282,7 @@ def equi_depth_histogram(
             F.max("x").alias("hi"),
         )
         .select(
-            F.lit(database).alias("databaseName"),
-            F.lit(table).alias("tableName"),
+            *_labels(database, table),
             "columnName",
             "bucket",
             "n_rows",

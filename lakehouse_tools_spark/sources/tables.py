@@ -111,6 +111,19 @@ _TABLE_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 
+def _normalize_types(df: DataFrame, schema: T.StructType, name: str) -> DataFrame:
+    """TIMESTAMP_NTZ → TIMESTAMP, and table ``name``'s registered nanos
+    columns (longs, per ``schema`` — the raw read schema) → TIMESTAMP
+    floored to micros. Shared by the batch and streaming loaders."""
+    for f in schema.fields:
+        if isinstance(f.dataType, T.TimestampNTZType):
+            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
+    for c in NANOS_TS_COLUMNS.get(name, ()):
+        if isinstance(schema[c].dataType, T.LongType):
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Columnar scan; Catalyst prunes/pushes.
 
@@ -137,13 +150,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         jdf = per.get(key)
         if jdf is not None:
             return DataFrame(jdf.toDF(), spark)
-    df = spark.read.schema(_parquet_schema(spark, path, key)).parquet(path)
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.TimestampNTZType):
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
-    for c in NANOS_TS_COLUMNS.get(name, ()):
-        if isinstance(df.schema[c].dataType, T.LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    schema = _parquet_schema(spark, path, key)
+    df = _normalize_types(spark.read.schema(schema).parquet(path), schema, name)
     if key is not None:
         _memo_put(_TABLE_PLAN_CACHE.setdefault(spark, {}), key, df._jdf)
     return df
@@ -305,11 +313,4 @@ def load_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # path works as-is.
     if os.path.isfile(path):
         path = path[:-1] + f"[{path[-1]}]"
-    df = spark.readStream.schema(schema).parquet(path)
-    for f in schema.fields:
-        if isinstance(f.dataType, T.TimestampNTZType):
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
-    for c in NANOS_TS_COLUMNS.get(name, ()):
-        if isinstance(schema[c].dataType, T.LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    return _normalize_types(spark.readStream.schema(schema).parquet(path), schema, name)

@@ -118,3 +118,11 @@ def test_ks_partitioning_invariant_and_null_safe(spark):
     assert got["x"][1] == got["x"][2] == 200 - len(range(0, 200, 7))
     assert got["x"][3] > 0.0
     assert got["k"][3] == 0.0
+
+
+def test_no_common_numeric_column_gives_empty_frame(spark):
+    base = spark.createDataFrame([Row(x=1.0, s="a")])
+    cur = spark.createDataFrame([Row(y=1.0, s="a")])
+    out = histogram_drift(base, cur, "db", "t")
+    assert out.count() == 0
+    assert out.columns == ["databaseName", "tableName", "columnName", "n_base", "n_curr", "psi"]

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -221,13 +222,74 @@ def test_column_entropy(spark):
     assert abs(out["b"].entropy - math.floor(expected * 1e6) / 1e6) < 2e-6
 
 
-def test_column_entropy_no_cols(spark):
-    from pyspark.sql import Row
+def _column_list_ops():
+    from lakehouse_tools_spark.operators import drift, profile
 
-    from lakehouse_tools_spark.operators.profile import column_entropy
+    return {
+        "column_entropy": lambda df, cols: profile.column_entropy(df, "db", "t", cols),
+        "numeric_correlations": lambda df, cols: profile.numeric_correlations(
+            df, "db", "t", cols=cols
+        ),
+        "numeric_outliers": lambda df, cols: profile.numeric_outliers(
+            df, "db", "t", cols=cols
+        ),
+        "clip_outliers": lambda df, cols: profile.clip_outliers(df, cols),
+        "equi_depth_histogram": lambda df, cols: profile.equi_depth_histogram(
+            df, "db", "t", cols
+        ),
+        "ks_drift": lambda df, cols: drift.ks_drift(df, df, cols),
+    }
 
-    df = spark.createDataFrame([Row(a="x")])
-    assert column_entropy(df, "db", "t", []).count() == 0
+
+@pytest.mark.parametrize("op", sorted(_column_list_ops()))
+def test_empty_column_list(spark, op):
+    """Every operator that takes a column list accepts an empty one:
+    the profilers return their empty typed frame (same columns and
+    types as a non-empty call), and clip_outliers returns its input."""
+    run = _column_list_ops()[op]
+    df = spark.createDataFrame([Row(a="x", b=1.0, c=2.0)])
+    empty = run(df, [])
+    if op == "clip_outliers":
+        assert empty.collect() == df.collect()
+        return
+    assert empty.count() == 0
+    assert empty.dtypes == run(df, ["b", "c"]).dtypes
+
+
+def test_fence_and_correlation_operators_quote_dotted_names(spark):
+    from lakehouse_tools_spark.operators.profile import (
+        clip_outliers,
+        numeric_correlations,
+        numeric_outliers,
+    )
+
+    vals = [float(v) for v in range(1, 9)] + [100.0, -100.0]
+    df = spark.createDataFrame([(v, 2.0 * v) for v in vals], "`a.x` double, b double")
+    out = {r.columnName: r for r in numeric_outliers(df, "db", "t").collect()}
+    assert out["a.x"].n_values == 10 and out["a.x"].n_outliers == 2
+    clipped = [r["a.x"] for r in clip_outliers(df, ["a.x"]).collect()]
+    assert -100.0 < min(clipped) and max(clipped) < 100.0
+    corr = {(r.col1, r.col2): r.corr for r in numeric_correlations(df, "db", "t").collect()}
+    assert corr == {("a.x", "b"): 1.0}
+
+
+def test_clip_bounds_equal_outlier_fences(spark):
+    """clip_outliers clamps to exactly the fences numeric_outliers
+    reports: on data with outliers on both tails, the clipped min/max
+    rounded to 6 places are the reported lo/hi fences."""
+    from lakehouse_tools_spark.operators.profile import clip_outliers, numeric_outliers
+
+    vals = [1.3 * i for i in range(1, 21)] + [-97.7, 123.4, 250.1]
+    df = spark.createDataFrame([Row(x=v) for v in vals])
+    r = numeric_outliers(df, "db", "t", ["x"]).collect()[0]
+    assert r.n_outliers == 3
+    lo, hi = (
+        clip_outliers(df, ["x"])
+        .agg(F.round(F.min("x"), 6), F.round(F.max("x"), 6))
+        .first()
+    )
+    assert min(vals) < lo and hi < max(vals)
+    assert (lo, hi) == (r.lo_fence, r.hi_fence)
 
 
 def test_clip_outliers(spark):

@@ -5,7 +5,8 @@ The reference discovers its workload from the catalog at run time:
 enumerates the profiling targets minus a self-exclusion list
 (dbc cell@4.0:5-11), and per-table ``DESCRIBE`` output is treated as
 data (dbc cell@8.0:8-10). This module re-expresses each step with the
-``spark.catalog`` API / ``df.schema`` reflection — zero data scans —
+``spark.catalog`` API, one parameter-bound ``SHOW TABLES`` command, or
+``df.schema`` reflection — zero data scans —
 while keeping a DESCRIBE-parsing mode for behavioral fidelity
 (partition-information rows leaking into output, SURVEY.md §7.3).
 """
@@ -66,16 +67,19 @@ def list_tables(
     Matches the reference's SHOW TABLES schema
     ``(database, tableName, isTemporary)`` (dbc results@4.0) and its
     filter ``tableName not in (...) and database != ''``
-    (dbc cell@4.0:8-9). Catalog metadata is tiny; this never scans data.
+    (dbc cell@4.0:8-9). One ``SHOW TABLES`` command, with the database
+    bound as a parameter: catalog metadata only, no per-table lookups
+    and no data scan. Temporary views list under database ``''`` and are
+    filtered out.
     """
     db = database or current_database(spark)
-    rows = [
-        Row(database=t.namespace[-1] if t.namespace else "", tableName=t.name,
-            isTemporary=t.isTemporary)
-        for t in spark.catalog.listTables(db)
-    ]
-    df = spark.createDataFrame(rows, SHOW_TABLES_SCHEMA) if rows else (
-        spark.createDataFrame([], SHOW_TABLES_SCHEMA)
+    df = (
+        spark.sql(
+            "SHOW TABLES IN IDENTIFIER(:db)",
+            args={"db": "`" + db.replace("`", "``") + "`"},
+        )
+        .withColumnRenamed("namespace", "database")
+        .to(SHOW_TABLES_SCHEMA)
     )
     lowered = F.lower(F.col("tableName"))
     return df.filter(~lowered.isin([e.lower() for e in exclusions]) & (F.col("database") != ""))

@@ -22,6 +22,13 @@ def stable_double_string(col: Column, scale: int = 6) -> Column:
     return F.round(col, scale).cast(T.DecimalType(28, scale)).cast("string")
 
 
+def _col(name: str) -> Column:
+    """The top-level column called exactly ``name``: backtick-quoted,
+    with backticks doubled, so dots, quotes and backticks in the name
+    are not parsed as SQL."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def floor6(col: Column) -> Column:
     """Truncate a double to 6 decimals: ``floor(x*1e6)/1e6``.
 

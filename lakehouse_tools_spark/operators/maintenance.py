@@ -27,6 +27,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_tools_spark.functions.portable import _col
+
 
 def compact(df: DataFrame, num_files: int) -> DataFrame:
     """Coalesce a relation to ``num_files`` output files' worth of
@@ -41,7 +43,7 @@ def zorder_layout(df: DataFrame, cols: list[str], num_partitions: int | None = N
     Equivalent data-skipping behavior to OPTIMIZE ZORDER for prefix
     predicates; row set is unchanged (property-tested).
     """
-    ncols = [F.col(c) for c in cols]
+    ncols = [_col(c) for c in cols]
     if num_partitions:
         out = df.repartitionByRange(num_partitions, *ncols)
     else:

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_tools_spark.functions.memo import expr_memo, fields_key
+from lakehouse_tools_spark.functions.portable import _col
 
 #: A residual ON-clause predicate, expressed as a function of the
 #: (aliased) source relation so references resolve unambiguously in
@@ -136,21 +137,21 @@ def upsert(
         s_sel = [
             F.lit(1).alias("_src_present"),
             F.col("_residual_ok"),
-            *[F.col(f"`{c}`").alias(f"_s_{c}") for c in cols],
+            *[_col(c).alias(f"_s_{c}") for c in cols],
         ]
-        t_cols = [F.col(f"`{c}`").alias(f"_t_{c}") for c in target.columns]
+        t_cols = [_col(c).alias(f"_t_{c}") for c in target.columns]
         cond = F.col("_residual_ok")
         for k in keys:
-            cond = cond & F.col(f"`_t_{k}`").eqNullSafe(F.col(f"`_s_{k}`"))
+            cond = cond & _col(f"_t_{k}").eqNullSafe(_col(f"_s_{k}"))
         s_types = {f.name: f.dataType for f in source.schema.fields}
         out_exprs = []
         for c in list(target.columns) + s_new:
             if c in t_only:
-                out_exprs.append(F.col(f"`_t_{c}`").alias(c))
+                out_exprs.append(_col(f"_t_{c}").alias(c))
             elif c in s_new:
                 out_exprs.append(
                     F.when(
-                        F.col("_src_present").isNotNull(), F.col(f"`_s_{c}`")
+                        F.col("_src_present").isNotNull(), _col(f"_s_{c}")
                     )
                     .otherwise(F.lit(None).cast(s_types[c]))
                     .alias(c)
@@ -158,9 +159,9 @@ def upsert(
             else:
                 out_exprs.append(
                     F.when(
-                        F.col("_src_present").isNotNull(), F.col(f"`_s_{c}`")
+                        F.col("_src_present").isNotNull(), _col(f"_s_{c}")
                     )
-                    .otherwise(F.col(f"`_t_{c}`"))
+                    .otherwise(_col(f"_t_{c}"))
                     .alias(c)
                 )
         return {"s_sel": s_sel, "t_cols": t_cols, "cond": cond, "out": out_exprs}

@@ -12,10 +12,11 @@ this environment has no delta-spark and no PyPI route, see
 same semantics:
 
 - ``create_or_replace``: saveAsTable(overwrite) with an explicit
-  schema — the C8 contract.
+  schema — the C8 contract. The new table declares no clustering.
 - ``upsert_into``: read target ⟗ merge (operators.merge).
-- ``optimize_clustered``: Z-order-style layout (maintenance.zorder_layout)
-  — the data-skipping payoff OPTIMIZE ZORDER buys, at rewrite time.
+- ``optimize_clustered``: declares the table clustered on its Z
+  columns (maintenance.zorder_layout) — the data-skipping payoff
+  OPTIMIZE ZORDER buys.
 
 Every parquet rewrite of a stored table goes through ONE generation
 swap, :func:`_swap_in` — a staging table plus two metastore-only
@@ -23,12 +24,22 @@ renames, rolled back if the second fails — so readers see the old or
 the new table, never a partial write. MERGE advances the version
 counter; OPTIMIZE keeps it (a layout rewrite keeps the row set).
 
-All table names are backtick-quoted; nothing here interpolates user
-data into SQL text (the reference's F6 injection weakness).
+Clustering is a declared property of the stored table, as in Delta's
+liquid clustering: OPTIMIZE stamps the Z columns next to the version
+counter, and every later swap writes its generation through that
+layout. So a MERGE into a clustered table leaves it clustered, and an
+OPTIMIZE that finds its columns already declared is a metadata check
+that writes nothing — one write per refresh instead of two.
+
+All table names are backtick-quoted, and property values are bound as
+query parameters; nothing here interpolates user data into SQL text
+(the reference's F6 injection weakness).
 """
 
 from __future__ import annotations
 
+import json
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +60,10 @@ def _q(name: str) -> str:
 
 def create_or_replace(spark: SparkSession, df: DataFrame, table: str) -> None:
     """C8 — ``CREATE OR REPLACE TABLE`` as a managed table (Delta when
-    delta-spark is present, else parquet — backend.table_format())."""
+    delta-spark is present, else parquet — backend.table_format()).
+    Like Delta's ``CREATE OR REPLACE`` without ``CLUSTER BY``, the new
+    table declares no clustering: the overwrite drops every table
+    property of the replaced one."""
     df.write.mode("overwrite").format(table_format()).saveAsTable(table)
 
 
@@ -91,38 +105,64 @@ def _delta_merge(
 
 
 _VERSION_PROP = "lakehouse_tools.version"
+_CLUSTER_PROP = "lakehouse_tools.cluster_by"
 
 
-def _current_version(spark: SparkSession, table: str) -> int:
-    """The live table's version number.
+def _table_state(spark: SparkSession, table: str) -> tuple[int, list[str] | None]:
+    """The live table's version number and declared clustering
+    columns (None when undeclared), from one ``SHOW TBLPROPERTIES``.
 
-    Authoritative source is the ``lakehouse_tools.version`` table
-    property — a monotone counter stamped by every swap, so dropping
-    archives (or never keeping any) can't re-bind a version number to
-    a different state. Tables written before the counter existed fall
-    back to the legacy rule (newest archive + 1)."""
+    The version's authoritative source is the
+    ``lakehouse_tools.version`` table property — a monotone counter
+    stamped by every swap, so dropping archives (or never keeping any)
+    can't re-bind a version number to a different state. Tables
+    written before the counter existed fall back to the legacy rule
+    (newest archive + 1)."""
+    props = {}
     try:
-        # filtered on the driver: a DataFrame filter re-plans the
+        # read on the driver: a DataFrame filter re-plans the
         # command's result and costs about 3x the collect itself
-        for row in spark.sql(f"SHOW TBLPROPERTIES {_q(table)}").collect():
-            if row["key"] == _VERSION_PROP:
-                return int(row["value"])
+        props = {
+            r["key"]: r["value"]
+            for r in spark.sql(f"SHOW TBLPROPERTIES {_q(table)}").collect()
+        }
     except Exception:
         pass
+    cluster_by = json.loads(props[_CLUSTER_PROP]) if _CLUSTER_PROP in props else None
+    if _VERSION_PROP in props:
+        return int(props[_VERSION_PROP]), cluster_by
     have = _archived_versions(spark, table)
-    return (have[-1] + 1) if have else 1
+    return (have[-1] + 1) if have else 1, cluster_by
+
+
+def _stamp(
+    spark: SparkSession, table: str, version: int, cluster_by: list[str] | None
+) -> None:
+    """Set the version counter and, when given, the clustering
+    declaration in one ``ALTER``. The column list is stored as JSON and
+    bound as a query parameter: column names never enter the SQL text,
+    so quotes, backslashes and ``${...}`` (which variable substitution
+    would expand) are stored as written."""
+    args = {"version": str(int(version))}
+    props = [f"'{_VERSION_PROP}' = :version"]
+    if cluster_by:
+        args["cluster_by"] = json.dumps(list(cluster_by))
+        props.append(f"'{_CLUSTER_PROP}' = :cluster_by")
+    spark.sql(
+        f"ALTER TABLE {_q(table)} SET TBLPROPERTIES ({', '.join(props)})", args=args
+    )
 
 
 def _archived_versions(spark: SparkSession, table: str) -> list[int]:
     """Version numbers archived for ``table`` (``<table>__v<n>``
-    metastore entries). Simple (un-databased) table names only — the
-    durable layer's convention throughout."""
-    import re
-
-    pat = re.compile(re.escape(table) + r"__v(\d+)$")
+    metastore entries), from one ``SHOW TABLES`` command. Simple
+    (un-databased) table names only — the durable layer's convention
+    throughout. The session catalog stores names lower-cased, so the
+    match ignores case."""
+    pat = re.compile(re.escape(table) + r"__v(\d+)", re.IGNORECASE)
     out = []
-    for t in spark.catalog.listTables():
-        m = pat.fullmatch(t.name)
+    for row in spark.sql("SHOW TABLES").collect():
+        m = pat.fullmatch(row["tableName"])
         if m:
             out.append(int(m.group(1)))
     return sorted(out)
@@ -133,14 +173,21 @@ def _swap_in(
     table: str,
     df: DataFrame,
     version: int,
+    cluster_by: list[str] | None,
     archive: int | None = None,
+    num_partitions: int | None = None,
 ) -> None:
     """Replace stored ``table`` with ``df``, stamped ``version``.
 
     ``df`` is staged first (computing it over the target while
     overwriting the target would read-after-delete the very files
-    being replaced). The retired generation becomes
-    ``<table>__v<archive>``, or is dropped when ``archive`` is None."""
+    being replaced). With ``cluster_by`` the staged generation is
+    written through ``zorder_layout(df, cluster_by, num_partitions)``
+    and the columns are declared on the new generation. The retired
+    generation becomes ``<table>__v<archive>``, or is dropped when
+    ``archive`` is None."""
+    if cluster_by:
+        df = zorder_layout(df, cluster_by, num_partitions)
     staging = f"{table}__stage_{uuid.uuid4().hex[:8]}"
     retired = f"{table}__old_{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").format(table_format()).saveAsTable(staging)
@@ -151,10 +198,7 @@ def _swap_in(
         spark.sql(f"ALTER TABLE {_q(retired)} RENAME TO {_q(table)}")
         spark.sql(f"DROP TABLE IF EXISTS {_q(staging)}")
         raise
-    spark.sql(
-        f"ALTER TABLE {_q(table)} SET TBLPROPERTIES "
-        f"('{_VERSION_PROP}'='{int(version)}')"
-    )
+    _stamp(spark, table, version, cluster_by)
     if archive is None:
         spark.sql(f"DROP TABLE {_q(retired)}")
     else:
@@ -191,7 +235,9 @@ def upsert_into(
     the transaction log.)
 
     Every upsert advances the version counter, ``keep_versions=0``
-    ones included.
+    ones included. A table declared clustered by
+    :func:`optimize_clustered` stays clustered: the merged generation
+    is written through the declared layout.
     """
     if table_format() == "delta":
         _delta_merge(
@@ -207,9 +253,11 @@ def upsert_into(
         full_sync=full_sync,
         delete_condition=delete_condition,
     )
-    old = _current_version(spark, table)
+    old, cluster_by = _table_state(spark, table)
     # the retired generation IS version ``old``
-    _swap_in(spark, table, merged, old + 1, old if keep_versions > 0 else None)
+    _swap_in(
+        spark, table, merged, old + 1, cluster_by, old if keep_versions > 0 else None
+    )
     if keep_versions > 0:
         vacuum_versions(spark, table, keep_versions)
 
@@ -221,7 +269,7 @@ def table_history(spark: SparkSession, table: str) -> DataFrame:
     parquet stand-in for ``DESCRIBE HISTORY``."""
     have = _archived_versions(spark, table)
     rows = [(v, False, f"{table}__v{v}") for v in have]
-    rows.append((_current_version(spark, table), True, table))
+    rows.append((_table_state(spark, table)[0], True, table))
     return spark.createDataFrame(
         rows, "version int, is_current boolean, table_name string"
     )
@@ -232,7 +280,7 @@ def read_version(spark: SparkSession, table: str, version: int) -> DataFrame:
     table for the current version) — ``VERSION AS OF`` on the parquet
     backend. Raises for pruned/unknown versions."""
     have = _archived_versions(spark, table)
-    current = _current_version(spark, table)
+    current = _table_state(spark, table)[0]
     if version == current:
         return spark.table(table)
     if version in have:
@@ -293,9 +341,21 @@ def optimize_clustered(
     zorder_cols: list[str],
     num_partitions: int | None = None,
 ) -> None:
-    """O1 — OPTIMIZE … ZORDER BY: rewrite the stored table clustered
-    on ``zorder_cols`` (row set unchanged; parquet min/max row-group
+    """O1 — OPTIMIZE … ZORDER BY: cluster the stored table on
+    ``zorder_cols`` (row set unchanged; parquet min/max row-group
     stats then skip-prune predicates on prefixes of the Z columns).
+
+    Parquet backend: the columns become the table's declared
+    clustering, stamped in the same ``ALTER`` as the version counter,
+    and every later swap (each :func:`upsert_into`) writes through that
+    layout. So when ``zorder_cols`` is already declared and no
+    ``num_partitions`` is given, the layout is current and this is a
+    metadata check that writes nothing. A first call, new columns or an
+    explicit ``num_partitions`` rewrite the table and re-declare the
+    columns. Writes that bypass this module (a raw ``INSERT INTO``)
+    are not seen; pass ``num_partitions`` to force a rewrite after
+    one. :func:`create_or_replace` drops the declaration.
+
     Delta backend: the native ``optimize().executeZOrderBy``. The
     version number is kept: history and time travel read the same."""
     if table_format() == "delta":
@@ -303,5 +363,8 @@ def optimize_clustered(
 
         DeltaTable.forName(spark, table).optimize().executeZOrderBy(*zorder_cols)
         return
-    clustered = zorder_layout(spark.table(table), zorder_cols, num_partitions)
-    _swap_in(spark, table, clustered, _current_version(spark, table))
+    cols = list(zorder_cols)
+    version, declared = _table_state(spark, table)
+    if declared == cols and not num_partitions:
+        return
+    _swap_in(spark, table, spark.table(table), version, cols, num_partitions=num_partitions)

@@ -8,6 +8,8 @@ from lakehouse_tools_spark.catalog import (
     current_database,
     drop_temp_view,
     list_databases,
+    list_tables,
+    table_names,
 )
 
 
@@ -35,6 +37,34 @@ def test_default_exclusions_match_reference(spark):
         "schemainformation",
         "tableoptimizations",
     )
+
+
+def test_list_tables(spark):
+    """The reference's SHOW TABLES shape minus the exclusion list
+    (compared case-insensitively); temp views never list; an empty
+    database gives an empty frame of the same shape."""
+    spark.sql("DROP DATABASE IF EXISTS t_c6_db CASCADE")
+    spark.sql("CREATE DATABASE t_c6_db")
+    spark.sql("CREATE DATABASE IF NOT EXISTS t_c6_empty")
+    try:
+        for t in ("orders", "ProfileData", "Audit"):
+            spark.sql(f"CREATE TABLE t_c6_db.{t} (a int) USING parquet")
+        spark.range(1).createOrReplaceTempView("t_c6_view")
+        shape = [("database", "string"), ("tableName", "string"), ("isTemporary", "boolean")]
+
+        df = list_tables(spark, "t_c6_db", exclusions=("PROFILEDATA", "audit"))
+        assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == shape
+        assert [tuple(r) for r in df.collect()] == [("t_c6_db", "orders", False)]
+        # the default exclusions drop profileData but keep audit
+        assert sorted(table_names(spark, "t_c6_db")) == ["audit", "orders"]
+
+        empty = list_tables(spark, "t_c6_empty")
+        assert [(f.name, f.dataType.simpleString()) for f in empty.schema.fields] == shape
+        assert empty.collect() == []
+    finally:
+        spark.catalog.dropTempView("t_c6_view")
+        spark.sql("DROP DATABASE t_c6_db CASCADE")
+        spark.sql("DROP DATABASE t_c6_empty")
 
 
 def test_describe_columns_shape(spark, tables):

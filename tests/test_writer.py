@@ -6,9 +6,13 @@ import pytest
 from pyspark.sql import Row
 
 from lakehouse_tools_spark.operators.merge import not_in
+from lakehouse_tools_spark.operators.layout import file_stats, skipping_effectiveness
 from lakehouse_tools_spark.operators.writer import (
+    _table_state,
     create_or_replace,
     optimize_clustered,
+    read_version,
+    table_history,
     upsert_into,
 )
 
@@ -221,6 +225,7 @@ def test_failed_swap_rolls_back(spark, monkeypatch, op):
     _drop_all(spark, tbl)
     create_or_replace(spark, spark.createDataFrame([Row(k="a", v=1)]), tbl)
     upsert_into(spark, tbl, spark.createDataFrame([Row(k="b", v=2)]), ["k"])
+    optimize_clustered(spark, tbl, ["k"])
     before = sorted(map(tuple, spark.table(tbl).collect()))
 
     real_sql = spark.sql
@@ -235,19 +240,35 @@ def test_failed_swap_rolls_back(spark, monkeypatch, op):
         if op == "upsert_into":
             upsert_into(spark, tbl, spark.createDataFrame([Row(k="c", v=3)]), ["k"])
         else:
-            optimize_clustered(spark, tbl, ["k"], num_partitions=2)
+            optimize_clustered(spark, tbl, ["v", "k"], num_partitions=2)
     monkeypatch.undo()
 
     assert sorted(map(tuple, spark.table(tbl).collect())) == before
     assert [(r.version, r.is_current) for r in table_history(spark, tbl).collect()] == [
         (2, True)
     ]
+    # the old generation's clustering declaration is live again
+    assert _table_state(spark, tbl) == (2, ["k"])
     leftovers = [
         t.name
         for t in spark.catalog.listTables()
         if t.name.startswith(f"{tbl}__stage_") or t.name.startswith(f"{tbl}__old_")
     ]
     assert leftovers == []
+
+
+def test_archives_found_for_mixed_case_table(spark):
+    """The session catalog lower-cases table names; archives of a
+    mixed-case table must still be found by history and time travel."""
+    tbl = "T_Writer_MixedCase"
+    _drop_all(spark, tbl.lower())
+    create_or_replace(spark, spark.createDataFrame([Row(k="a", v=1)]), tbl)
+    upsert_into(spark, tbl, spark.createDataFrame([Row(k="a", v=2)]), ["k"], keep_versions=1)
+    assert sorted(map(tuple, table_history(spark, tbl).select("version", "is_current").collect())) == [
+        (1, False),
+        (2, True),
+    ]
+    assert [r.v for r in read_version(spark, tbl, 1).collect()] == [1]
 
 
 def test_vacuum_versions_keeps_all_when_fewer_than_keep_last(spark):
@@ -267,3 +288,134 @@ def test_vacuum_versions_keeps_all_when_fewer_than_keep_last(spark):
     names = {t.name for t in spark.catalog.listTables() if t.name.startswith(f"{tbl}__v")}
     assert names == {f"{tbl}__v1", f"{tbl}__v2", f"{tbl}__v3"}
     assert vacuum_versions(spark, tbl, keep_last=4) == []
+
+
+def _files(spark, tbl):
+    return set(spark.table(tbl).inputFiles())
+
+
+def _rows(spark, tbl):
+    return sorted(map(tuple, spark.table(tbl).collect()))
+
+
+@pytest.fixture
+def no_coalesce(spark):
+    """Write 8 range partitions as 8 files, so a layout shows in the
+    file count and per-file min/max (AQE would otherwise merge this
+    small table into one file)."""
+    confs = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in old.items():
+        spark.conf.set(k, v)
+
+
+def _skipping(spark, tbl, col, values):
+    """Per value of ``col``: the share of the table's files a min/max
+    reader skips for ``col = value``."""
+    path = spark.table(tbl).inputFiles()[0].rsplit("/", 1)[0]
+    stats = file_stats(spark, path, [col])
+    return [skipping_effectiveness(stats, col, v, v) for v in values]
+
+
+def test_upsert_keeps_declared_clustering(spark, no_coalesce):
+    """MERGE into a clustered table writes through the declared layout:
+    its files prune the leading column exactly as a freshly optimized
+    copy does, and the next OPTIMIZE writes nothing and keeps history."""
+    tbl, fresh = "t_writer_declared", "t_writer_declared_fresh"
+    _drop_all(spark, tbl)
+    # 16 leading values over ~200 rows: the range sample sees every row,
+    # so both layouts draw the same partition bounds
+    rows = [Row(g=i % 16, k=i, v=i * 10) for i in range(160)]
+    create_or_replace(spark, spark.createDataFrame(rows).repartition(4), tbl)
+    optimize_clustered(spark, tbl, ["g", "k"])
+    upsert_into(
+        spark,
+        tbl,
+        spark.createDataFrame([Row(g=i % 16, k=i, v=-i) for i in range(150, 200)]),
+        ["k"],
+        keep_versions=1,
+    )
+    create_or_replace(spark, spark.table(tbl), fresh)
+    optimize_clustered(spark, fresh, ["g", "k"])
+
+    values = list(range(16))
+    assert len(_files(spark, tbl)) > 1
+    assert _skipping(spark, tbl, "g", values) == _skipping(spark, fresh, "g", values)
+    assert min(_skipping(spark, tbl, "g", values)) > 0.5
+
+    files, rows_before = _files(spark, tbl), _rows(spark, tbl)
+    history = sorted(map(tuple, table_history(spark, tbl).collect()))
+    assert _table_state(spark, tbl) == (2, ["g", "k"])
+    optimize_clustered(spark, tbl, ["g", "k"])
+    assert _files(spark, tbl) == files
+    assert _rows(spark, tbl) == rows_before
+    assert sorted(map(tuple, table_history(spark, tbl).collect())) == history
+    assert sorted(map(tuple, read_version(spark, tbl, 1).collect())) == sorted(
+        map(tuple, rows)
+    )
+    assert sorted(map(tuple, read_version(spark, tbl, 2).collect())) == rows_before
+
+
+@pytest.mark.parametrize(
+    "cols, num_partitions", [(["v"], None), (["k"], 2)], ids=["new_columns", "num_partitions"]
+)
+def test_optimize_rewrites_on_new_layout(spark, cols, num_partitions):
+    """New columns, or an explicit partition count, rewrite the table
+    and re-declare; the version counter stays."""
+    tbl = "t_writer_relayout"
+    _drop_all(spark, tbl)
+    create_or_replace(spark, spark.createDataFrame([Row(k=i, v=-i) for i in range(8)]), tbl)
+    upsert_into(spark, tbl, spark.createDataFrame([Row(k=9, v=-9)]), ["k"])
+    optimize_clustered(spark, tbl, ["k"])
+    files, rows = _files(spark, tbl), _rows(spark, tbl)
+    optimize_clustered(spark, tbl, cols, num_partitions)
+    assert _files(spark, tbl).isdisjoint(files)
+    assert _rows(spark, tbl) == rows
+    assert _table_state(spark, tbl) == (2, cols)
+
+
+def test_create_or_replace_clears_clustering(spark):
+    tbl = "t_writer_replace_clears"
+    _drop_all(spark, tbl)
+    create_or_replace(spark, spark.createDataFrame([Row(k=1, v=1)]), tbl)
+    optimize_clustered(spark, tbl, ["k"])
+    assert _table_state(spark, tbl)[1] == ["k"]
+    create_or_replace(spark, spark.createDataFrame([Row(k=2, v=2)]), tbl)
+    assert _table_state(spark, tbl)[1] is None
+    # undeclared again, so the next OPTIMIZE rewrites
+    files = _files(spark, tbl)
+    optimize_clustered(spark, tbl, ["k"])
+    assert _files(spark, tbl).isdisjoint(files)
+
+
+def test_clustering_declaration_quotes_column_names(spark):
+    """Column names that are SQL-significant (comma, quote, backtick,
+    dot, variable reference) or non-ASCII survive the declaration as
+    written: clustering, MERGE and a no-op re-OPTIMIZE all work."""
+    tbl = "t_writer_odd_names"
+    _drop_all(spark, tbl)
+    odd = ["a,b", "it's", "x`y", "p.q", "wert_ä名", "${spark.sql.shuffle.partitions}"]
+    ddl = ", ".join(["k int"] + [f"`{c.replace('`', '``')}` string" for c in odd])
+    base = [(i, *[f"{c}-{i}" for c in odd]) for i in range(6)]
+    create_or_replace(spark, spark.createDataFrame(base, ddl), tbl)
+    optimize_clustered(spark, tbl, odd)
+    assert _table_state(spark, tbl)[1] == odd
+    upsert_into(
+        spark,
+        tbl,
+        spark.createDataFrame([(5, *["new"] * len(odd)), (9, *["ins"] * len(odd))], ddl),
+        ["k"],
+    )
+    assert _rows(spark, tbl) == sorted(
+        base[:5] + [(5, *["new"] * len(odd)), (9, *["ins"] * len(odd))]
+    )
+    assert _table_state(spark, tbl) == (2, odd)
+    files = _files(spark, tbl)
+    optimize_clustered(spark, tbl, odd)
+    assert _files(spark, tbl) == files

@@ -512,16 +512,8 @@ def q_sketch_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     est = estimate_distinct(merge_sketches(batches))
     exact = orders.agg(
-        *[
-            F.countDistinct(F.col(c).cast("string")).alias(f"_d_{c}")
-            for c in cols
-        ]
-    ).select(
-        F.stack(
-            F.lit(len(cols)),
-            *[x for c in cols for x in (F.lit(c), F.col(f"`_d_{c}`"))],
-        ).alias("columnName", "n_exact")
-    )
+        *[F.countDistinct(F.col(c).cast("string")).alias(c) for c in cols]
+    ).unpivot([], cols, "columnName", "n_exact")
     return (
         est.join(exact, "columnName")
         .select(
@@ -848,13 +840,8 @@ def q_summary_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cols = [f.name for f in orders.schema.fields]
     exact = orders.agg(
-        *[F.countDistinct(F.col(c)).alias(f"_d_{c}") for c in cols]
-    ).select(
-        F.stack(
-            F.lit(len(cols)),
-            *[x for c in cols for x in (F.lit(c), F.col(f"`_d_{c}`"))],
-        ).alias("columnName", "n_exact")
-    )
+        *[F.countDistinct(F.col(c)).alias(c) for c in cols]
+    ).unpivot([], cols, "columnName", "n_exact")
     return (
         approx.join(exact, "columnName")
         .select(
@@ -897,70 +884,52 @@ def q_quantile_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only ``profile_quantiles`` path to a driver-checked
     guarantee.
 
-    The GK sketches build in the production wide aggregate (the very
-    expressions ``numeric_quantiles`` builds, via the shared
-    ``quantile_sketch_exprs`` — so the audit exercises the production
-    aggregate). The exact ±eps brackets come from the DISTRIBUTED
-    exact-percentile path (``exact_quantile_cells``, optimization
-    r13): the former fused single-scan shape kept an exact
+    The GK sketches are ``numeric_quantiles``'s own rows, so the audit
+    exercises the production aggregate. The exact ±eps brackets come
+    from the DISTRIBUTED exact-percentile path
+    (``exact_quantile_cells``, optimization r13): the former fused single-scan shape kept an exact
     ``F.percentile`` value→count buffer per column whose final merge
     holds every distinct value of a column in ONE reducer's memory —
     the last unbounded-memory aggregate in the package (guide §5).
     The two sides join per column (a handful of rows each); the
     second scan this reintroduces is linear and bounded, which at
     100 TB is the difference between slower and impossible."""
-    from lakehouse_tools_spark.functions.memo import expr_memo, fields_key
+    from lakehouse_tools_spark.functions.memo import expr_memo
     from lakehouse_tools_spark.operators.profile import (
         exact_quantile_cells,
-        quantile_sketch_exprs,
+        numeric_quantiles,
     )
 
+    def _build() -> dict:
+        bracket_sel = [F.col("columnName")]
+        for i, nm in enumerate(("lo25", "hi25", "lo50", "hi50", "lo75", "hi75")):
+            bracket_sel.append(F.round(F.col(f"q{i}"), 6).alias(nm))
+        within = None
+        for p, q in zip(("25", "50", "75"), ("q25", "q50", "q75")):
+            ok = (F.col(q) >= F.col(f"lo{p}")) & (F.col(q) <= F.col(f"hi{p}"))
+            within = ok if within is None else (within & ok)
+        return {
+            "bracket_sel": bracket_sel,
+            "select": [
+                F.col("tableName"),
+                F.col("columnName"),
+                F.col("lo25"),
+                F.col("hi25"),
+                F.col("lo50"),
+                F.col("hi50"),
+                F.col("lo75"),
+                F.col("hi75"),
+                within.alias("within_bracket"),
+            ],
+        }
+
+    bundle = expr_memo(("q_quantile_error_report",), _build)
     s = _spark(spark)
     probs = (0.25, 0.5, 0.75)
     parts = []
     for t, cols in _QUANT_COLS.items():
         df = load_table(s, sf_dir, t).select(*[c for c, _ in cols])
-        fields = df.schema.fields
-
-        def _build(t=t, cols=cols, fields=fields) -> dict:
-            branches = []
-            for c, _ in cols:
-                q = F.col(f"`_q_{c}`")
-                branches.append(F.lit(c))
-                for i in range(3):
-                    branches.append(q[i].cast("double"))
-            bracket_sel = [F.col("columnName")]
-            for i, nm in enumerate(
-                ("lo25", "hi25", "lo50", "hi50", "lo75", "hi75")
-            ):
-                bracket_sel.append(F.round(F.col(f"q{i}"), 6).alias(nm))
-            within = None
-            for p, q in zip(("25", "50", "75"), ("q25", "q50", "q75")):
-                ok = (F.col(q) >= F.col(f"lo{p}")) & (F.col(q) <= F.col(f"hi{p}"))
-                within = ok if within is None else (within & ok)
-            return {
-                "aggs": list(quantile_sketch_exprs(fields)),
-                "long": F.stack(F.lit(len(cols)), *branches).alias(
-                    "columnName", "q25", "q50", "q75"
-                ),
-                "bracket_sel": bracket_sel,
-                "select": [
-                    F.lit(t).alias("tableName"),
-                    F.col("columnName"),
-                    F.col("lo25"),
-                    F.col("hi25"),
-                    F.col("lo50"),
-                    F.col("hi50"),
-                    F.col("lo75"),
-                    F.col("hi75"),
-                    within.alias("within_bracket"),
-                ],
-            }
-
-        bundle = expr_memo(
-            ("q_quantile_error_report", t, fields_key(fields)), _build
-        )
-        sketch_long = df.agg(*bundle["aggs"]).select(bundle["long"])
+        sketch_long = numeric_quantiles(df, DB, t)
         brackets = exact_quantile_cells(
             df,
             [c for c, _ in cols],
@@ -7396,16 +7365,8 @@ def q_events_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     est = estimate_distinct(merge_sketches([parts]))
     exact = ev.agg(
-        *[
-            F.countDistinct(F.col(c).cast("string")).alias(f"_d_{c}")
-            for c in cols
-        ]
-    ).select(
-        F.stack(
-            F.lit(len(cols)),
-            *[x for c in cols for x in (F.lit(c), F.col(f"`_d_{c}`"))],
-        ).alias("columnName", "n_exact")
-    )
+        *[F.countDistinct(F.col(c).cast("string")).alias(c) for c in cols]
+    ).unpivot([], cols, "columnName", "n_exact")
     return (
         est.join(exact, "columnName")
         .select(

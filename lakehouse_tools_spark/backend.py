@@ -8,15 +8,10 @@ can be imported, else the managed-parquet implementations in
 :mod:`operators.writer` (same call signatures, same semantics — the
 blue/green swap stands in for Delta's ACID commit).
 
-Detection is import-based, not install-based: this environment has no
-delta-spark wheel and no PyPI route (``pip download delta-spark`` →
-"No matching distribution found"; re-confirmed 2026-08-17 late in
-round 12 (DNS resolution to the index fails outright on every retry
-of ``pip download delta-spark``; ``import delta`` still absent) —
-retried once per round since 2026-08-13;
-installing is also out-of-bounds for this build), so the Delta branch
-cannot be exercised here. It is wired so that dropping delta-spark into the
-environment activates it with no code change:
+Detection is import-based: delta-spark is not a dependency, so the
+Delta branch is not exercised by the test suite. It is wired so that
+dropping delta-spark into the environment activates it with no code
+change:
 
 - :func:`delta_available` — can ``import delta``?
 - :func:`table_format` — "delta" iff available (overridable via

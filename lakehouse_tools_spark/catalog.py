@@ -131,7 +131,6 @@ def describe_columns(
         if partition_columns:
             rows.append(Row(col_name="", data_type="", comment=""))
             for i, pc in enumerate(partition_columns):
-                dtype = dict((f.name, f.dataType.simpleString()) for f in df.schema.fields).get(pc, "")
                 rows.append(Row(col_name=f"Part {i}", data_type=pc, comment=""))
         else:
             rows.append(Row(col_name="", data_type="", comment=""))

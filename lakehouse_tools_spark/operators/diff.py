@@ -25,6 +25,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_tools_spark.functions.portable import _col
+
 CHANGE_COL = "_change_type"
 
 
@@ -57,27 +59,27 @@ def snapshot_diff(
 
     o = old.select(
         F.lit(1).alias("_o_present"),
-        *[F.col(f"`{c}`").alias(f"_o_{c}") for c in cols],
+        *[_col(c).alias(f"_o_{c}") for c in cols],
     )
     n = new.select(
         F.lit(1).alias("_n_present"),
-        *[F.col(f"`{c}`").alias(f"_n_{c}") for c in cols],
+        *[_col(c).alias(f"_n_{c}") for c in cols],
     )
     cond = reduce(
         lambda a, b: a & b,
-        [F.col(f"`_o_{k}`").eqNullSafe(F.col(f"`_n_{k}`")) for k in keys],
+        [_col(f"_o_{k}").eqNullSafe(_col(f"_n_{k}")) for k in keys],
     )
     j = o.join(n, cond, "full_outer")
 
     def image(side: str, tag: str) -> Column:
         return F.struct(
             F.lit(tag).alias(CHANGE_COL),
-            *[F.col(f"`_{side}_{c}`").alias(c) for c in cols],
+            *[_col(f"_{side}_{c}").alias(c) for c in cols],
         )
 
     changed: Column | None = None
     for c in compare:
-        d = ~F.col(f"`_o_{c}`").eqNullSafe(F.col(f"`_n_{c}`"))
+        d = ~_col(f"_o_{c}").eqNullSafe(_col(f"_n_{c}"))
         changed = d if changed is None else (changed | d)
     if changed is None:  # key-only table: matched rows can never differ
         changed = F.lit(False)
@@ -96,7 +98,7 @@ def snapshot_diff(
     )
     return (
         j.select(F.explode(events).alias("_e"))
-        .select(F.col(f"_e.{CHANGE_COL}").alias(CHANGE_COL), *[F.col(f"_e.`{c}`").alias(c) for c in cols])
+        .select(F.col(f"_e.{CHANGE_COL}").alias(CHANGE_COL), *[F.col("_e")[c].alias(c) for c in cols])
     )
 
 

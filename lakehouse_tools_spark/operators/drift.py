@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_tools_spark.functions.memo import expr_memo
+from lakehouse_tools_spark.functions.portable import _col
 from lakehouse_tools_spark.operators.profile import (
     _bin_counts,
     _bin_exprs,
@@ -157,17 +158,9 @@ def ks_drift(
         )
 
     def melt(df: DataFrame, side: str) -> DataFrame:
-        branches = []
-        for c in columns:
-            branches.extend(
-                [F.lit(c), F.col(f"`{c}`").cast("double")]
-            )
+        values = [_col(c).cast("double").alias(c) for c in columns]
         return (
-            df.select(
-                F.stack(
-                    F.lit(len(columns)), *branches
-                ).alias("columnName", "value")
-            )
+            df.unpivot([], values, "columnName", "value")
             .filter(F.col("value").isNotNull())
             .groupBy("columnName", "value")
             .agg(F.count(F.lit(1)).alias(f"c_{side}"))

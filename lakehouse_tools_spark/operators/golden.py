@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_tools_spark.functions.portable import _col
+
 Rules = dict[str, str]
 
 
@@ -56,13 +58,13 @@ def golden_records(
     required iff any rule is ``latest``."""
     aggs = []
     for col, rule in rules.items():
-        c = F.col(f"`{col}`")
+        c = _col(col)
         if rule == "latest":
             if recency_col is None:
                 raise ValueError("rule 'latest' needs recency_col")
             order = F.when(
                 c.isNotNull(),
-                F.struct(F.col(f"`{recency_col}`").alias("r"), c.alias("v")),
+                F.struct(_col(recency_col).alias("r"), c.alias("v")),
             )
             aggs.append(F.max_by(c, order).alias(f"{col}_latest"))
         elif rule == "max":
@@ -73,4 +75,4 @@ def golden_records(
             aggs.append(_mode_smallest(c).alias(f"{col}_most_common"))
         else:
             raise ValueError(f"unknown survivorship rule {rule!r} for {col}")
-    return df.groupBy(F.col(f"`{cluster_col}`")).agg(*aggs)
+    return df.groupBy(_col(cluster_col)).agg(*aggs)

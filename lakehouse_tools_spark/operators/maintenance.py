@@ -6,8 +6,8 @@ multi-dimensional clustering so min/max data skipping prunes files for
 predicates on the Z columns. Without delta-spark (SURVEY.md §7.5) the
 same physical layout is achieved at write time:
 
-- ``compact(df, target_file_rows)``: AQE-style small-file control via
-  an explicit repartition before write.
+- ``compact(df, num_files)``: small-file control via an explicit
+  round-robin repartition to ``num_files`` partitions before write.
 - ``zorder_layout(df, cols)``: ``repartitionByRange(cols)`` +
   ``sortWithinPartitions(cols)`` — lexicographic multi-column
   clustering. Parquet then stores per-file/rowgroup min-max on the
@@ -31,9 +31,11 @@ from lakehouse_tools_spark.functions.portable import _col
 
 
 def compact(df: DataFrame, num_files: int) -> DataFrame:
-    """Coalesce a relation to ``num_files`` output files' worth of
-    partitions (write-time small-file compaction, the OSS analog of
-    the reference's Delta optimizeWrite conf, ``dbc cell@1.5:1``)."""
+    """Repartition a relation to ``num_files`` partitions, one output
+    file each (write-time small-file compaction, the OSS analog of
+    the reference's Delta optimizeWrite conf, ``dbc cell@1.5:1``).
+    This is a full round-robin shuffle, not a ``coalesce``: the
+    partitions come out evenly sized."""
     return df.repartition(num_files)
 
 

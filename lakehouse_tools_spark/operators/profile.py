@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_tools_spark.functions.memo import expr_memo, fields_key
-from lakehouse_tools_spark.functions.portable import floor6
+from lakehouse_tools_spark.functions.portable import _col, floor6
 from lakehouse_tools_spark.sources.tables import ensure_parallelism
 
 PROFILE_DATA_SCHEMA = T.StructType(
@@ -106,7 +106,13 @@ def profilable_columns(df: DataFrame) -> list[T.StructField]:
 # Each mechanism below exists once: an expression builder, called
 # inside the operator's ``expr_memo`` build so its Columns are
 # memoized with the operator's bundle, and a relation helper that
-# applies the built expressions to the data.
+# applies the built expressions to the data. Column-labelled melts
+# are ``DataFrame.unpivot`` over expressions aliased to the column's
+# own name, so the label is the name itself, never parsed: row melts
+# unpivot the cast columns; wide-to-long reshapes aggregate one struct
+# of measures per column, unpivot the one-row result and expand the
+# struct. The rendered melt is the one ``stack`` left
+# (:func:`_melt_expr`).
 
 
 def _labels(database: str, table: str, fields=None) -> list:
@@ -128,11 +134,18 @@ def _labels(database: str, table: str, fields=None) -> list:
 
 def _melt_expr(fields) -> F.Column:
     """The rendered melt: every field as (columnName, value) rows,
-    value rendered by :func:`stable_string`."""
+    value rendered by :func:`stable_string`. The one column-labelled
+    melt that stays a ``stack``: on the profiler's hot path a paired
+    A/B in one JVM over ``lakebench/base`` (4 vCPU shared with a
+    concurrent benchmark run, 10 alternating pairs, noop write)
+    measured the unpivot's ``Expand`` slower than ``Generate stack``
+    (median 1.97 vs 1.82 s, stack faster in 7 of 10). The labels are
+    literals and every column goes through ``_col``, so any name
+    works."""
     branches = []
     for f in fields:
         branches.append(F.lit(f.name))
-        branches.append(stable_string(F.col(f"`{f.name}`"), f.dataType))
+        branches.append(stable_string(_col(f.name), f.dataType))
     return F.stack(F.lit(len(fields)), *branches).alias("columnName", "value")
 
 
@@ -146,7 +159,7 @@ def _rendered_melt(df: DataFrame, fields, melt: F.Column) -> DataFrame:
     # stage CPU 319 s -> 1065 s for 2x data at sf10, e(5->10)=2.1,
     # restored to ~linear by this sizing — SCALING.md r07)
     return ensure_parallelism(
-        df.select(*[f"`{f.name}`" for f in fields]), expansion=len(fields)
+        df.select(*[_col(f.name) for f in fields]), expansion=len(fields)
     ).select(melt)
 
 
@@ -157,13 +170,14 @@ def _numeric_bounds(df: DataFrame, fields) -> tuple:
     if not fields:
         return ()
     stats = df.agg(
-        *[F.min(F.col(f"`{f.name}`").cast("double")).alias(f"_mn_{f.name}") for f in fields],
-        *[F.max(F.col(f"`{f.name}`").cast("double")).alias(f"_mx_{f.name}") for f in fields],
+        *[F.min(_col(f.name).cast("double")) for f in fields],
+        *[F.max(_col(f.name).cast("double")) for f in fields],
     ).collect()[0]
+    n = len(fields)
     return tuple(
-        (f.name, stats[f"_mn_{f.name}"], stats[f"_mx_{f.name}"])
-        for f in fields
-        if stats[f"_mn_{f.name}"] is not None
+        (f.name, stats[i], stats[n + i])
+        for i, f in enumerate(fields)
+        if stats[i] is not None
     )
 
 
@@ -173,9 +187,9 @@ def _bin_exprs(bounds: tuple, bins: int) -> dict:
     precision — the same IEEE ops any engine computes; values outside
     [min, max] clamp to the edge bins, nulls get no bin and a constant
     column lands in bin 0."""
-    branches = []
+    values = []
     for name, mn, mx in bounds:
-        x = F.col(f"`{name}`").cast("double")
+        x = _col(name).cast("double")
         w = (mx - mn) / bins
         if w == 0.0:
             b = F.when(x.isNotNull(), F.lit(0).cast("long"))
@@ -186,9 +200,9 @@ def _bin_exprs(bounds: tuple, bins: int) -> dict:
                 ),
                 F.lit(bins - 1).cast("long"),
             )
-        branches.extend([F.lit(name), b])
+        values.append(b.alias(name))
     return {
-        "bins": F.stack(F.lit(len(bounds)), *branches).alias("columnName", "bin"),
+        "bins": values,
         "count": F.count(F.lit(1)).alias("cnt"),
     }
 
@@ -197,7 +211,9 @@ def _bin_counts(df: DataFrame, bundle: dict) -> DataFrame:
     """(columnName, bin, cnt): one melt + groupBy(columnName, bin)
     count for every column — the shuffle carries ≤ columns × bins
     rows."""
-    melted = df.select(bundle["bins"]).filter(F.col("bin").isNotNull())
+    melted = df.unpivot([], bundle["bins"], "columnName", "bin").filter(
+        F.col("bin").isNotNull()
+    )
     return melted.groupBy("columnName", "bin").agg(bundle["count"])
 
 
@@ -216,7 +232,7 @@ def _fence_exprs(cols: list[str], k: float) -> dict:
     ]
     fences = []
     for c in cols:
-        q1, q3 = F.col(f"`_q1_{c}`"), F.col(f"`_q3_{c}`")
+        q1, q3 = _col(f"_q1_{c}"), _col(f"_q3_{c}")
         fences.append((q1 - k * (q3 - q1)).alias(f"_lo_{c}"))
         fences.append((q3 + k * (q3 - q1)).alias(f"_hi_{c}"))
     return {"quart_pivot": quart_pivot, "fences": fences}
@@ -289,7 +305,7 @@ def profile_table(
         parts = []
         for f, sel in zip(fields, aw["selects"]):
             parts.append(
-                df.groupBy(F.col(f"`{f.name}`")).agg(aw["count"]).select(*sel)
+                df.groupBy(_col(f.name)).agg(aw["count"]).select(*sel)
             )
         out = parts[0]
         for p in parts[1:]:
@@ -382,38 +398,28 @@ def profile_summary(
     # name/type-derived Columns only — memoized across calls (see
     # profile_table / functions/memo.py)
     def _build() -> dict:
-        aggs = [F.count(F.lit(1)).alias("_n")]
+        aggs = []
         for f in fields:
-            c = F.col(f"`{f.name}`")
+            c = _col(f.name)
             aggs.append(
-                F.sum(F.when(c.isNull(), 1).otherwise(0))
-                .cast("long")
-                .alias(f"_nulls_{f.name}")
-            )
-            aggs.append(stable_string(F.min(c), f.dataType).alias(f"_min_{f.name}"))
-            aggs.append(stable_string(F.max(c), f.dataType).alias(f"_max_{f.name}"))
-            if not exact_distinct:
-                aggs.append(F.approx_count_distinct(c).alias(f"_nd_{f.name}"))
-        branches = []
-        for f in fields:
-            branches.append(F.lit(f.name))
-            branches.append(F.col(f"`_nulls_{f.name}`"))
-            branches.append(F.col(f"`_min_{f.name}`"))
-            branches.append(F.col(f"`_max_{f.name}`"))
-            branches.append(
-                F.lit(None).cast("long")
-                if exact_distinct
-                else F.col(f"`_nd_{f.name}`")
+                F.struct(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum(F.when(c.isNull(), 1).otherwise(0))
+                    .cast("long")
+                    .alias("n_nulls"),
+                    stable_string(F.min(c), f.dataType).alias("min_value"),
+                    stable_string(F.max(c), f.dataType).alias("max_value"),
+                    (
+                        F.lit(None).cast("long")
+                        if exact_distinct
+                        else F.approx_count_distinct(c)
+                    ).alias("n_distinct"),
+                ).alias(f.name)
             )
         return {
             "melt": _melt_expr(fields),
             "aggs": aggs,
-            "long": [
-                F.col("_n").alias("n_rows"),
-                F.stack(F.lit(len(fields)), *branches).alias(
-                    "columnName", "n_nulls", "min_value", "max_value", "n_distinct"
-                ),
-            ],
+            "long": [_col(f.name) for f in fields],
             "nd": F.count_distinct(F.col("value")).alias("_nd_exact"),
             "select": [
                 *_labels(database, table, fields),
@@ -436,8 +442,11 @@ def profile_summary(
         _build,
     )
 
-    wide = df.agg(*bundle["aggs"])
-    long = wide.select(*bundle["long"])
+    long = (
+        df.agg(*bundle["aggs"])
+        .unpivot([], bundle["long"], "columnName", "s")
+        .select("columnName", "s.*")
+    )
 
     if exact_distinct:
         melted = _rendered_melt(df, fields, bundle["melt"])
@@ -462,32 +471,6 @@ QUANTILE_SCHEMA = T.StructType(
 )
 
 
-def quantile_sketch_exprs(
-    fields: list,
-    probs: tuple[float, ...] = (0.25, 0.5, 0.75),
-    accuracy: int = 10000,
-) -> list:
-    """The GK-sketch aggregate expressions :func:`numeric_quantiles`
-    builds (one ``percentile_approx`` per column, aliased ``_q_<col>``)
-    — exposed so audit queries can fuse them into a wider single-scan
-    aggregate alongside their exact-bracket expressions. Memoized per
-    (fields, probs, accuracy) like every schema-derived bundle."""
-
-    def _build() -> list:
-        qs = F.array(*[F.lit(float(p)) for p in probs])
-        return [
-            F.percentile_approx(F.col(f"`{f.name}`"), qs, F.lit(accuracy)).alias(
-                f"_q_{f.name}"
-            )
-            for f in fields
-        ]
-
-    return expr_memo(
-        ("quantile_sketch_exprs", tuple(probs), accuracy, fields_key(fields)),
-        _build,
-    )
-
-
 def numeric_quantiles(
     df: DataFrame,
     database: str,
@@ -509,19 +492,22 @@ def numeric_quantiles(
     ]
     if not fields:
         return df.sparkSession.createDataFrame([], QUANTILE_SCHEMA)
-    wide = df.agg(*quantile_sketch_exprs(fields, probs, accuracy))
 
     def _build() -> dict:
-        branches = []
+        qs = F.array(*[F.lit(float(p)) for p in probs])
+        aggs = []
         for f in fields:
-            q = F.col(f"`_q_{f.name}`")
-            branches.append(F.lit(f.name))
-            for i in range(3):
-                branches.append(q[i].cast("double"))
+            q = F.percentile_approx(_col(f.name), qs, F.lit(accuracy))
+            aggs.append(
+                F.struct(
+                    q[0].cast("double").alias("q25"),
+                    q[1].cast("double").alias("q50"),
+                    q[2].cast("double").alias("q75"),
+                ).alias(f.name)
+            )
         return {
-            "long": F.stack(F.lit(len(fields)), *branches).alias(
-                "columnName", "q25", "q50", "q75"
-            ),
+            "aggs": aggs,
+            "long": [_col(f.name) for f in fields],
             "select": [
                 *_labels(database, table, fields),
                 F.col("q25"),
@@ -531,9 +517,22 @@ def numeric_quantiles(
         }
 
     bundle = expr_memo(
-        ("numeric_quantiles", database, table, fields_key(fields)), _build
+        (
+            "numeric_quantiles",
+            database,
+            table,
+            tuple(probs),
+            accuracy,
+            fields_key(fields),
+        ),
+        _build,
     )
-    return wide.select(bundle["long"]).select(*bundle["select"])
+    return (
+        df.agg(*bundle["aggs"])
+        .unpivot([], bundle["long"], "columnName", "s")
+        .select("columnName", "s.*")
+        .select(*bundle["select"])
+    )
 
 
 def exact_quantile_cells(
@@ -636,10 +635,6 @@ def ranked_value_counts(df: DataFrame, cols: list[str]) -> DataFrame:
     """
 
     def _build() -> dict:
-        branches = []
-        for c in cols:
-            branches.append(F.lit(c))
-            branches.append(F.col(f"`{c}`").cast("double"))
         w_cum = (
             Window.partitionBy("columnName")
             .orderBy("value")
@@ -647,9 +642,7 @@ def ranked_value_counts(df: DataFrame, cols: list[str]) -> DataFrame:
         )
         w_n = Window.partitionBy("columnName")
         return {
-            "melt": F.stack(F.lit(len(cols)), *branches).alias(
-                "columnName", "value"
-            ),
+            "melt": [_col(c).cast("double").alias(c) for c in cols],
             "ranked": [
                 F.col("columnName"),
                 F.col("value"),
@@ -660,10 +653,8 @@ def ranked_value_counts(df: DataFrame, cols: list[str]) -> DataFrame:
         }
 
     bundle = expr_memo(("ranked_value_counts", tuple(cols)), _build)
-    melted = (
-        df.select(*[F.col(f"`{c}`") for c in cols])
-        .select(bundle["melt"])
-        .where(F.col("value").isNotNull())
+    melted = df.unpivot([], bundle["melt"], "columnName", "value").where(
+        F.col("value").isNotNull()
     )
     counts = melted.groupBy("columnName", "value").agg(
         F.count(F.lit(1)).alias("_cnt")
@@ -779,16 +770,18 @@ def numeric_correlations(
         )
     wide = df.agg(
         *[
-            F.round(F.corr(F.col(f"`{a}`"), F.col(f"`{b}`")), 6).alias(f"_r_{i}")
+            F.struct(
+                F.lit(a).alias("col1"),
+                F.lit(b).alias("col2"),
+                F.round(F.corr(_col(a), _col(b)), 6).alias("corr"),
+            ).alias(str(i))
             for i, (a, b) in enumerate(pairs)
         ]
     )
-    branches = []
-    for i, (a, b) in enumerate(pairs):
-        branches.extend([F.lit(a), F.lit(b), F.col(f"_r_{i}")])
-    return wide.select(
-        F.stack(F.lit(len(pairs)), *branches).alias("col1", "col2", "corr")
-    ).select(*_labels(database, table), "col1", "col2", "corr")
+    return (
+        wide.unpivot([], [_col(str(i)) for i in range(len(pairs))], "_pair", "s")
+        .select(*_labels(database, table), "s.*")
+    )
 
 
 def numeric_outliers(
@@ -827,36 +820,23 @@ def numeric_outliers(
     # Columns are (cols, k, db, table)-derived — memoized.
     def _build() -> dict:
         count_aggs = []
-        branches = []
         for c in cols:
-            x, lo, hi = F.col(f"`{c}`"), F.col(f"`_lo_{c}`"), F.col(f"`_hi_{c}`")
-            count_aggs += [
-                F.sum(F.when((x < lo) | (x > hi), 1).otherwise(0)).alias(f"_n_{c}"),
-                F.count(x).alias(f"_cnt_{c}"),
-                F.first(lo).alias(f"_flo_{c}"),
-                F.first(hi).alias(f"_fhi_{c}"),
-            ]
-            branches += [
-                F.lit(c),
-                F.round(F.col(f"`_flo_{c}`"), 6),
-                F.round(F.col(f"`_fhi_{c}`"), 6),
-                F.col(f"`_n_{c}`").cast("long"),
-                F.col(f"`_cnt_{c}`").cast("long"),
-            ]
+            x, lo, hi = _col(c), _col(f"_lo_{c}"), _col(f"_hi_{c}")
+            count_aggs.append(
+                F.struct(
+                    F.round(F.first(lo), 6).alias("lo_fence"),
+                    F.round(F.first(hi), 6).alias("hi_fence"),
+                    F.sum(F.when((x < lo) | (x > hi), 1).otherwise(0))
+                    .cast("long")
+                    .alias("n_outliers"),
+                    F.count(x).cast("long").alias("n_values"),
+                ).alias(c)
+            )
         return {
             **_fence_exprs(cols, k),
             "count_aggs": count_aggs,
-            "long": F.stack(F.lit(len(cols)), *branches).alias(
-                "columnName", "lo_fence", "hi_fence", "n_outliers", "n_values"
-            ),
-            "select": [
-                *_labels(database, table),
-                F.col("columnName"),
-                F.col("lo_fence"),
-                F.col("hi_fence"),
-                F.col("n_outliers"),
-                F.col("n_values"),
-            ],
+            "long": [_col(c) for c in cols],
+            "select": [*_labels(database, table), "columnName", "s.*"],
         }
 
     bundle = expr_memo(
@@ -864,7 +844,9 @@ def numeric_outliers(
     )
     fences = _tukey_fences(df, cols, bundle)
     counts = df.crossJoin(fences).agg(*bundle["count_aggs"])
-    return counts.select(bundle["long"]).select(*bundle["select"])
+    return counts.unpivot([], bundle["long"], "columnName", "s").select(
+        *bundle["select"]
+    )
 
 
 def grouped_quantiles(
@@ -886,12 +868,12 @@ def grouped_quantiles(
     sketch (mergeable, the 100 TB default)."""
     qs = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
     agg = (
-        F.percentile(F.col(value_col), qs)
+        F.percentile(_col(value_col), qs)
         if exact
-        else F.percentile_approx(F.col(value_col), qs, F.lit(accuracy))
+        else F.percentile_approx(_col(value_col), qs, F.lit(accuracy))
     )
-    g = df.groupBy(F.col(group_col).alias("groupValue")).agg(
-        agg.alias("_q"), F.count(F.col(value_col)).alias("n_values")
+    g = df.groupBy(_col(group_col).alias("groupValue")).agg(
+        agg.alias("_q"), F.count(_col(value_col)).alias("n_values")
     )
     return g.select(
         *_labels(database, table),
@@ -926,7 +908,7 @@ def clip_outliers(
     def _build() -> dict:
         clips = []
         for c in cols:
-            x, lo, hi = F.col(f"`{c}`"), F.col(f"`_lo_{c}`"), F.col(f"`_hi_{c}`")
+            x, lo, hi = _col(c), _col(f"_lo_{c}"), _col(f"_hi_{c}")
             clips.append((c, F.when(x < lo, lo).when(x > hi, hi).otherwise(x)))
         return {**_fence_exprs(cols, k), "clips": clips}
 
@@ -962,17 +944,10 @@ def column_entropy(
             "databaseName string, tableName string, columnName string,"
             " n_values bigint, entropy double",
         )
-    stacked = df.select(
-        F.stack(
-            F.lit(n_cols),
-            *[
-                x
-                for c in cols
-                for x in (F.lit(c), F.col(f"`{c}`").cast("string"))
-            ],
-        ).alias("columnName", "_v")
+    melted = df.unpivot(
+        [], [_col(c).cast("string").alias(c) for c in cols], "columnName", "_v"
     )
-    counts = stacked.groupBy("columnName", "_v").agg(
+    counts = melted.groupBy("columnName", "_v").agg(
         F.count(F.lit(1)).alias("_c")
     )
     return (
@@ -1096,7 +1071,7 @@ def profile_nested(df: DataFrame, database: str, table: str) -> DataFrame:
     """
     specs: list[tuple[T.StructField, F.Column, F.Column]] = []
     for f in df.schema.fields:
-        c = F.col(f"`{f.name}`")
+        c = _col(f.name)
         if isinstance(f.dataType, T.ArrayType):
             ln = F.size(c).cast("long")
             nullel = F.size(F.filter(c, lambda x: x.isNull())).cast("long")
@@ -1120,52 +1095,23 @@ def profile_nested(df: DataFrame, database: str, table: str) -> DataFrame:
         specs.append((f, ln, nullel))
     if not specs:
         return df.sparkSession.createDataFrame([], NESTED_SCHEMA)
-    aggs = [F.count(F.lit(1)).alias("_nrows")]
-    for f, ln, nullel in specs:
-        n = f.name
-        c = F.col(f"`{n}`")
-        aggs += [
-            F.sum(c.isNull().cast("long")).alias(f"_nn_{n}"),
-            F.min(ln).alias(f"_mn_{n}"),
-            F.max(ln).alias(f"_mx_{n}"),
-            F.round(F.avg(ln), 6).alias(f"_av_{n}"),
-            F.sum(ln).alias(f"_ne_{n}"),
-            F.sum(nullel).alias(f"_nu_{n}"),
+    wide = df.agg(
+        *[
+            F.struct(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.sum(_col(f.name).isNull().cast("long")).cast("long").alias("n_null"),
+                F.min(ln).cast("long").alias("len_min"),
+                F.max(ln).cast("long").alias("len_max"),
+                F.round(F.avg(ln), 6).cast("double").alias("len_avg"),
+                F.sum(ln).cast("long").alias("n_elements"),
+                F.sum(nullel).cast("long").alias("n_null_elements"),
+            ).alias(f.name)
+            for f, ln, nullel in specs
         ]
-    wide = df.agg(*aggs)
-    branches = []
-    for f, _, _ in specs:
-        n = f.name
-        branches += [
-            F.lit(n),
-            F.col(f"`_nn_{n}`"),
-            F.col(f"`_mn_{n}`"),
-            F.col(f"`_mx_{n}`"),
-            F.col(f"`_av_{n}`"),
-            F.col(f"`_ne_{n}`"),
-            F.col(f"`_nu_{n}`"),
-        ]
-    long = wide.select(
-        F.col("_nrows"),
-        F.stack(F.lit(len(specs)), *branches).alias(
-            "columnName",
-            "n_null",
-            "len_min",
-            "len_max",
-            "len_avg",
-            "n_elements",
-            "n_null_elements",
-        ),
     )
-    return long.select(
-        *_labels(database, table, [f for f, _, _ in specs]),
-        F.col("_nrows").cast("long").alias("n_rows"),
-        F.col("n_null").cast("long"),
-        F.col("len_min").cast("long"),
-        F.col("len_max").cast("long"),
-        F.col("len_avg").cast("double"),
-        F.col("n_elements").cast("long"),
-        F.col("n_null_elements").cast("long"),
+    return (
+        wide.unpivot([], [_col(f.name) for f, _, _ in specs], "columnName", "s")
+        .select(*_labels(database, table, [f for f, _, _ in specs]), "s.*")
     )
 
 
@@ -1266,11 +1212,8 @@ def equi_depth_histogram(
             "databaseName string, tableName string, columnName string,"
             " bucket int, n_rows bigint, lo double, hi double",
         )
-    branches = []
-    for c in cols:
-        branches.extend([F.lit(c), F.col(f"`{c}`").cast("double")])
-    melted = df.select(
-        F.stack(F.lit(len(cols)), *branches).alias("columnName", "x")
+    melted = df.unpivot(
+        [], [_col(c).cast("double").alias(c) for c in cols], "columnName", "x"
     ).filter(F.col("x").isNotNull())
     w = Window.partitionBy("columnName").orderBy(F.col("x").asc())
     return (

@@ -7,15 +7,17 @@ unbounded width). With the list, the pivot compiles to one groupBy
 whose aggregates are ``count/sum(CASE WHEN pivot = v)`` branches —
 single shuffle, map-side combined, schema fixed at plan time.
 
-Melt is the inverse: ``stack`` (codegen'd, zero shuffle) — the same
-primitive the profiler's one-scan-per-table design is built on,
-exposed as a public operator.
+Melt is the inverse: Spark's ``DataFrame.unpivot`` (one Expand, zero
+shuffle) — the same primitive the profiler's one-scan-per-table design
+is built on, exposed as a public operator.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from lakehouse_tools_spark.functions.portable import _col
 
 
 def pivot_counts(
@@ -28,11 +30,11 @@ def pivot_counts(
     """Wide table of per-``values`` counts (or sums of ``agg_col``)
     per group. Absent (group, value) cells are 0, not null, so the
     wide relation joins/compares cleanly."""
-    agg = F.count(F.lit(1)) if agg_col is None else F.sum(F.col(agg_col))
-    wide = df.groupBy(group_col).pivot(pivot_col, values).agg(agg)
+    agg = F.count(F.lit(1)) if agg_col is None else F.sum(_col(agg_col))
+    wide = df.groupBy(_col(group_col)).pivot(pivot_col, values).agg(agg)
     return wide.select(
-        group_col,
-        *[F.coalesce(F.col(f"`{v}`"), F.lit(0)).cast("long").alias(v) for v in values],
+        _col(group_col),
+        *[F.coalesce(_col(v), F.lit(0)).cast("long").alias(v) for v in values],
     )
 
 
@@ -45,15 +47,10 @@ def melt(
 ) -> DataFrame:
     """Wide→long: one output row per (id, value column). All
     ``value_cols`` must share (or be castable to) one type; values
-    pass through unchanged. Pure projection+generate — no shuffle,
-    parallelism and partitioning preserved."""
+    are cast to their least common type. Pure projection+expand — no
+    shuffle, parallelism and partitioning preserved."""
     if not value_cols:
         raise ValueError("melt needs at least one value column")
-    branches = []
-    for c in value_cols:
-        branches.append(F.lit(c))
-        branches.append(F.col(f"`{c}`"))
-    return df.select(
-        *[F.col(f"`{c}`") for c in id_cols],
-        F.stack(F.lit(len(value_cols)), *branches).alias(var_name, value_name),
+    return df.unpivot(
+        [_col(c) for c in id_cols], [_col(c) for c in value_cols], var_name, value_name
     )

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_tools_spark.functions.portable import _col
+
 #: partial columns per measure m: m__cnt, m__sum, m__min, m__max
 _STATS = ("cnt", "sum", "min", "max")
 
@@ -45,14 +47,14 @@ def rollup_partials(
     split-invariant (float addition is not associative; decimal is)."""
     aggs = []
     for m in measures:
-        c = F.col(f"`{m}`")
+        c = _col(m)
         aggs += [
             F.count(c).alias(_pcol(m, "cnt")),
             F.sum(c.cast(T.DecimalType(38, 6))).alias(_pcol(m, "sum")),
             F.min(c).alias(_pcol(m, "min")),
             F.max(c).alias(_pcol(m, "max")),
         ]
-    return df.groupBy(*[F.col(f"`{k}`") for k in keys]).agg(*aggs)
+    return df.groupBy(*[_col(k) for k in keys]).agg(*aggs)
 
 
 def merge_rollups(parts: list[DataFrame], keys: list[str]) -> DataFrame:
@@ -65,12 +67,12 @@ def merge_rollups(parts: list[DataFrame], keys: list[str]) -> DataFrame:
     aggs = []
     for m in measures:
         aggs += [
-            F.sum(F.col(_pcol(m, "cnt"))).alias(_pcol(m, "cnt")),
-            F.sum(F.col(_pcol(m, "sum"))).alias(_pcol(m, "sum")),
-            F.min(F.col(_pcol(m, "min"))).alias(_pcol(m, "min")),
-            F.max(F.col(_pcol(m, "max"))).alias(_pcol(m, "max")),
+            F.sum(_col(_pcol(m, "cnt"))).alias(_pcol(m, "cnt")),
+            F.sum(_col(_pcol(m, "sum"))).alias(_pcol(m, "sum")),
+            F.min(_col(_pcol(m, "min"))).alias(_pcol(m, "min")),
+            F.max(_col(_pcol(m, "max"))).alias(_pcol(m, "max")),
         ]
-    return unioned.groupBy(*keys).agg(*aggs)
+    return unioned.groupBy(*[_col(k) for k in keys]).agg(*aggs)
 
 
 def rollup_result(partials: DataFrame, keys: list[str]) -> DataFrame:
@@ -83,15 +85,15 @@ def rollup_result(partials: DataFrame, keys: list[str]) -> DataFrame:
     )
     out = []
     for m in measures:
-        cnt = F.col(_pcol(m, "cnt"))
-        s = F.col(_pcol(m, "sum"))
+        cnt = _col(_pcol(m, "cnt"))
+        s = _col(_pcol(m, "sum"))
         out += [
             cnt.alias(f"{m}_n"),
             s.cast("double").alias(f"{m}_sum"),
-            F.col(_pcol(m, "min")).alias(f"{m}_min"),
-            F.col(_pcol(m, "max")).alias(f"{m}_max"),
+            _col(_pcol(m, "min")).alias(f"{m}_min"),
+            _col(_pcol(m, "max")).alias(f"{m}_max"),
             # divide in double (exact-sum ÷ exact-count), not decimal:
             # decimal division scale rules differ across engines
             (s.cast("double") / cnt).alias(f"{m}_avg"),
         ]
-    return partials.select(*keys, *out)
+    return partials.select(*[_col(k) for k in keys], *out)

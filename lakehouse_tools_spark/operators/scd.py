@@ -36,6 +36,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_tools_spark.functions.portable import _col
+
 VALID_FROM = "valid_from"
 VALID_TO = "valid_to"
 IS_CURRENT = "is_current"
@@ -86,33 +88,33 @@ def scd2_apply(
 
     c = current.select(
         F.lit(1).alias("_c_present"),
-        *[F.col(f"`{x}`").alias(f"_c_{x}") for x in attr_cols + [VALID_FROM]],
+        *[_col(x).alias(f"_c_{x}") for x in attr_cols + [VALID_FROM]],
     )
     s = snapshot.select(
         F.lit(1).alias("_s_present"),
-        *[F.col(f"`{x}`").alias(f"_s_{x}") for x in attr_cols],
+        *[_col(x).alias(f"_s_{x}") for x in attr_cols],
     )
     cond = reduce(
         lambda a, b: a & b,
-        [F.col(f"`_c_{k}`").eqNullSafe(F.col(f"`_s_{k}`")) for k in keys],
+        [_col(f"_c_{k}").eqNullSafe(_col(f"_s_{k}")) for k in keys],
     )
     j = c.join(s, cond, "full_outer")
 
     changed: Column = F.lit(False)
     for x in compare:
-        changed = changed | ~F.col(f"`_c_{x}`").eqNullSafe(F.col(f"`_s_{x}`"))
+        changed = changed | ~_col(f"_c_{x}").eqNullSafe(_col(f"_s_{x}"))
 
     def row(side: str, vfrom: Column, vto: Column, cur: Column) -> Column:
         return F.struct(
-            *[F.col(f"`_{side}_{x}`").alias(x) for x in attr_cols],
+            *[_col(f"_{side}_{x}").alias(x) for x in attr_cols],
             vfrom.alias(VALID_FROM),
             vto.alias(VALID_TO),
             cur.alias(IS_CURRENT),
         )
 
     null_ts = F.lit(None).cast("timestamp")
-    keep_old = row("c", F.col(f"`_c_{VALID_FROM}`"), null_ts, F.lit(True))
-    closed_old = row("c", F.col(f"`_c_{VALID_FROM}`"), ts, F.lit(False))
+    keep_old = row("c", _col(f"_c_{VALID_FROM}"), null_ts, F.lit(True))
+    closed_old = row("c", _col(f"_c_{VALID_FROM}"), ts, F.lit(False))
     new_version = row("s", ts, null_ts, F.lit(True))
 
     events = (
@@ -129,9 +131,11 @@ def scd2_apply(
         .otherwise(F.array(keep_old))
     )
     merged = j.select(F.explode(events).alias("_e")).select(
-        *[F.col(f"_e.`{x}`").alias(x) for x in attr_cols + list(_META)]
+        *[F.col("_e")[x].alias(x) for x in attr_cols + list(_META)]
     )
-    return history.select(attr_cols + list(_META)).unionByName(merged)
+    return history.select(*[_col(x) for x in attr_cols + list(_META)]).unionByName(
+        merged
+    )
 
 
 def scd2_at(dim: DataFrame, t: _dt.datetime) -> DataFrame:

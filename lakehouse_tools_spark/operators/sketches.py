@@ -31,6 +31,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_tools_spark.functions.portable import _col
+
 
 def distinct_sketches(
     df: DataFrame, cols: list[str] | None = None, lg_k: int = 12
@@ -43,18 +45,11 @@ def distinct_sketches(
     cols = cols or df.columns
     wide = df.agg(
         *[
-            F.hll_sketch_agg(F.col(f"`{c}`").cast("string"), F.lit(lg_k)).alias(
-                f"_s_{c}"
-            )
+            F.hll_sketch_agg(_col(c).cast("string"), F.lit(lg_k)).alias(c)
             for c in cols
         ]
     )
-    branches = []
-    for c in cols:
-        branches.extend([F.lit(c), F.col(f"`_s_{c}`")])
-    return wide.select(
-        F.stack(F.lit(len(cols)), *branches).alias("columnName", "sketch")
-    )
+    return wide.unpivot([], [_col(c) for c in cols], "columnName", "sketch")
 
 
 def merge_sketches(parts: list[DataFrame]) -> DataFrame:
@@ -94,7 +89,7 @@ def countmin_sketch(
     engine building the same sketch gets identical counters, which is
     what lets the driver hash-verify estimates end-to-end (unlike the
     HLL sketches, whose bytes are engine-specific)."""
-    rows = df.select(F.col(f"`{key_col}`").cast("string").alias("_k")).select(
+    rows = df.select(_col(key_col).cast("string").alias("_k")).select(
         "_k",
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("d"),
     )
@@ -134,7 +129,7 @@ def countmin_estimate(
     never touches the original data. ``width``/``depth`` must match
     the sketch's build parameters."""
     cand = (
-        keys.select(F.col(f"`{key_col}`").cast("string").alias("key"))
+        keys.select(_col(key_col).cast("string").alias("key"))
         .distinct()
         .select(
             "key",

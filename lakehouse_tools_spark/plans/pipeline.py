@@ -17,7 +17,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lakehouse_tools_spark.operators.maintenance import zorder_layout
 from lakehouse_tools_spark.operators.merge import not_in, upsert
 from lakehouse_tools_spark.operators.profile import (
     PROFILE_DATA_SCHEMA,
@@ -55,7 +54,6 @@ def create_data_profile(
     mode: str = "intended",
     existing_schema_info: DataFrame | None = None,
     existing_profile_data: DataFrame | None = None,
-    cluster_output: bool = False,
 ) -> ProfileResult:
     """Run the full profiler over ``tables``.
 
@@ -84,14 +82,6 @@ def create_data_profile(
     )
     merged_schema = upsert(schema_tgt, schema_src, MERGE_KEYS, residual)
     merged_profile = upsert(profile_tgt, profile_src, profile_keys, residual)
-
-    if cluster_output:
-        # OPTIMIZE ... ZORDER BY (databaseName, tableName[, columnName])
-        # — dbc cell@9.0 / cell@10.0.
-        merged_schema = zorder_layout(merged_schema, ["databaseName", "tableName"])
-        merged_profile = zorder_layout(
-            merged_profile, ["databaseName", "tableName", "columnName"]
-        )
 
     return ProfileResult(
         schema_information=merged_schema, profile_data=merged_profile

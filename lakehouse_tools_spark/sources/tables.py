@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_tools_spark.functions.portable import _col
+
 TABLE_NAMES: tuple[str, ...] = (
     "region",
     "nation",
@@ -117,7 +119,7 @@ def _normalize_types(df: DataFrame, schema: T.StructType, name: str) -> DataFram
     floored to micros. Shared by the batch and streaming loaders."""
     for f in schema.fields:
         if isinstance(f.dataType, T.TimestampNTZType):
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
+            df = df.withColumn(f.name, _col(f.name).cast("timestamp"))
     for c in NANOS_TS_COLUMNS.get(name, ()):
         if isinstance(schema[c].dataType, T.LongType):
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

@@ -371,3 +371,163 @@ def test_exact_quantile_cells_bit_matches_percentile(spark, tables):
     for c in ("b", "c"):
         for i in range(len(probs)):
             assert repr(float(sref[c][i])) == repr(float(sgot[c][f"q{i}"]))
+
+
+#: Column names that break SQL parsing when spliced unquoted: a
+#: backtick, a dot, a quote, unicode, a comma, a conf-substitution
+#: token, and the profilers' own label column.
+_ANY_NAMES = ["x`y", "p.q", "it's", "wert_ä名", "a,b", "${spark.sql.shuffle.partitions}", "columnName"]
+_PLAIN_NAMES = [f"v{i}" for i in range(len(_ANY_NAMES))]
+
+
+def _any_name_frame(spark, names, nested=False):
+    """``k``, ``s`` and one column per name, each with its own values
+    (doubles with a null and an outlier, or arrays with null
+    elements), so a label bound to the wrong column shows."""
+    from pyspark.sql import types as T
+
+    def value(k, i):
+        if nested:
+            return [k, None][: 1 + (k + i) % 2] if (k + i) % 4 else None
+        return None if k == 5 else (100.0 if k == 11 else 1.5 * k) * (i + 1)
+
+    kind = T.ArrayType(T.IntegerType()) if nested else T.DoubleType()
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("s", T.StringType())]
+        + [T.StructField(n, kind) for n in names]
+    )
+    rows = [(k, f"s{k % 3}", *[value(k, i) for i in range(len(names))]) for k in range(12)]
+    return spark.createDataFrame(rows, schema)
+
+
+def _any_name_ops():
+    """op -> run(df, names). Operators that take one column run once
+    per name and union the results."""
+    import datetime as dt
+    from functools import reduce
+
+    from lakehouse_tools_spark.functions.portable import _col
+    from lakehouse_tools_spark.operators import (
+        diff,
+        drift,
+        golden,
+        reshape,
+        rollup,
+        scd,
+        sketches,
+    )
+    from lakehouse_tools_spark.operators import profile as P
+    from lakehouse_tools_spark.sources.tables import _normalize_types
+
+    def per_name(run):
+        def each(df, names):
+            return reduce(
+                lambda a, b: a.unionByName(b),
+                [run(df, n).withColumn("_name", F.lit(n)) for n in names],
+            )
+
+        return each
+
+    def snapshot_diff(df, names):
+        old = df.select("k", *[_col(n) for n in names])
+        new = old.where(F.col("k") != 1)
+        for n in names:
+            new = new.withColumn(n, F.when(F.col("k") == 2, _col(n) + 1).otherwise(_col(n)))
+        return diff.snapshot_diff(old, new, ["k"])
+
+    def scd2_apply(df, names):
+        snap = df.select("k", *[_col(n) for n in names])
+        dim = scd.scd2_init(snap, dt.datetime(2024, 1, 1))
+        new = snap.where(F.col("k") != 1).withColumn(names[0], _col(names[0]) + 1)
+        return scd.scd2_apply(dim, new, ["k"], dt.datetime(2024, 2, 1))
+
+    def rollups(df, names):
+        p = rollup.rollup_partials(df, ["s"], names)
+        return rollup.rollup_result(rollup.merge_rollups([p, p], ["s"]), ["s"])
+
+    def normalize_types(df, names):
+        ntz = F.to_timestamp_ntz(F.format_string("2024-01-%02d", F.col("k") + 1))
+        d = df.select("k", *[ntz.alias(n) for n in names])
+        return _normalize_types(d, d.schema, "t")
+
+    return {
+        "profile_table": lambda df, names: P.profile_table(df, "db", "t"),
+        # as_written's len is the length of the column NAME itself
+        "profile_table_as_written": lambda df, names: P.profile_table(
+            df, "db", "t", mode="as_written"
+        ).drop("len"),
+        "profile_summary": lambda df, names: P.profile_summary(df, "db", "t"),
+        "profile_summary_approx": lambda df, names: P.profile_summary(
+            df, "db", "t", exact_distinct=False
+        ),
+        "numeric_quantiles": lambda df, names: P.numeric_quantiles(df, "db", "t"),
+        "numeric_quantiles_exact": lambda df, names: P.numeric_quantiles_exact(df, "db", "t"),
+        "numeric_histogram": lambda df, names: P.numeric_histogram(df, "db", "t"),
+        "numeric_correlations": lambda df, names: P.numeric_correlations(df, "db", "t"),
+        "numeric_outliers": lambda df, names: P.numeric_outliers(df, "db", "t"),
+        "clip_outliers": lambda df, names: P.clip_outliers(df, names),
+        "grouped_quantiles": per_name(
+            lambda df, n: P.grouped_quantiles(df, "s", n, "db", "t")
+        ),
+        "column_entropy": lambda df, names: P.column_entropy(df, "db", "t", [*names, "s"]),
+        "equi_depth_histogram": lambda df, names: P.equi_depth_histogram(
+            df, "db", "t", names, bins=4
+        ),
+        "profile_nested": lambda df, names: P.profile_nested(df, "db", "t"),
+        "histogram_drift": lambda df, names: drift.histogram_drift(
+            df, df.where(F.col("k") > 2), "db", "t"
+        ),
+        "ks_drift": lambda df, names: drift.ks_drift(df, df.where(F.col("k") > 2), names),
+        "distinct_sketches": lambda df, names: sketches.estimate_distinct(
+            sketches.distinct_sketches(df, [*names, "s"])
+        ),
+        "melt": lambda df, names: reshape.melt(df, ["k"], names),
+        # named group column; pivot values that become column names
+        "pivot_counts": lambda df, names: reshape.pivot_counts(
+            df.withColumn(
+                "p", F.array(*[F.lit(f"{n}!") for n in names])[F.col("k") % len(names)]
+            ),
+            names[0],
+            "p",
+            [f"{n}!" for n in names],
+        ),
+        "snapshot_diff": snapshot_diff,
+        "golden_records": lambda df, names: golden.golden_records(
+            df, "s", {**{n: "max" for n in names}, "k": "latest"}, recency_col=names[0]
+        ),
+        "scd2_apply": scd2_apply,
+        "rollup": rollups,
+        "countmin_sketch": per_name(
+            lambda df, n: sketches.countmin_estimate(sketches.countmin_sketch(df, n), df, n)
+        ),
+        "normalize_types": normalize_types,
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_any_name_ops()))
+def test_profilers_accept_any_column_name(spark, op):
+    """Every operator gives the same rows for columns named anything
+    as for the same frame with plain names: labels, output column
+    names and types, and values map back one to one."""
+    run = _any_name_ops()[op]
+    nested = op == "profile_nested"
+    plain_out = run(_any_name_frame(spark, _PLAIN_NAMES, nested), _PLAIN_NAMES)
+    fixed = set(plain_out.columns)  # output columns not named after inputs
+
+    def rows(out, names):
+        plain = dict(zip(names, _PLAIN_NAMES))
+
+        def back(c):
+            for n, p in plain.items():
+                c = c if c in fixed else c.replace(n, p)
+            return c
+
+        cols = [back(c) for c in out.columns]
+        return sorted(zip(cols, [t for _, t in out.dtypes])), sorted(
+            repr(sorted(zip(cols, (plain.get(x, x) if isinstance(x, str) else x for x in r))))
+            for r in out.collect()
+        )
+
+    want = rows(plain_out, _PLAIN_NAMES)
+    assert want[1], op  # the case is not vacuous
+    assert rows(run(_any_name_frame(spark, _ANY_NAMES, nested), _ANY_NAMES), _ANY_NAMES) == want

@@ -5,7 +5,8 @@
 implemented operator from SURVEY.md §2 plus the training-data
 extension surface (dedup / similarity / text / event-time windows),
 and ``oracle_sql()`` supplies the DuckDB-runnable ANSI-SQL equivalent
-for every SQL-expressible one.
+for every SQL-expressible one. Both are views of the one ``_REGISTRY``
+table at the bottom of this file.
 
 Cross-engine determinism rules used throughout (see
 lakehouse_tools_spark.functions.portable):
@@ -8822,463 +8823,224 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_profiler_e2e(spark, "/root/testdata/sf0.001")
 
 
+def _name(fn: Callable) -> str:
+    return fn.__name__[2:]
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordered for the driver correctness snapshot, which records the
-    # FIRST ~50 entries only. Round-13 window (staleness floor r10 per
-    # tools/closing_gate.py + the freeze rule + VERDICT r12 item 2):
-    #
-    # - positions 1-41: the r09 staleness cohort (latest driver rows
-    #   r09 — the floor makes every one of them mandatory) MINUS
-    #   profile_corr, displaced by the carrier load below
-    #   (--allow-displaced, r08 precedent: the freeze rule outranks
-    #   the staleness floor when both cannot fit; profile_corr's
-    #   operator file is exercised by the nine profiler-family
-    #   carriers in-window, and it rotates first in r14).
-    # - positions 42-50: the carriers this round's changed defs and
-    #   VERDICT r12 item 2 require fresh rows for:
-    #   quantile_error_report (exact bracket rewritten onto the
-    #   distributed percentile path — r13), sim_recall_report (r12
-    #   restructure + r13 note), profile_quantiles_exact /
-    #   profile_outliers (distributed exact-percentile carriers;
-    #   profile_clip sits in the r09 cohort above),
-    #   dedup_winnow_pairs (narrow fingerprint persist),
-    #   dedup_simhash / dedup_minhash / dedup_lsh_pairs (r12
-    #   expression-bundle memos + this round's tokenize-after-spread),
-    #   text_bigrams (_adjacent_pairs spread carrier; text_pmi shares
-    #   the def and stays at 51+).
-    #
-    # r14 rotation plan (arithmetic): after r13 the rows sit at r13
-    # (the 50 below), r10 (the 45-query remainder incl.
-    # summary/sketch_error_report), r11 (48), r12 (47), and r09
-    # (profile_corr alone — the named displacement). r14's floor is
-    # r11, so its window MUST carry profile_corr plus the 45-query
-    # r10 remainder: 46 <= 50 leaves 4 spare slots for r14's own
-    # freeze-gate carriers.
-    return {
-        "corpus_budget_select": q_corpus_budget_select,
-        "events_stream_sessionize_tws": q_events_stream_sessionize_tws,
-        "profile_entropy": q_profile_entropy,
-        "sim_pca": q_sim_pca,
-        "drift_ks": q_drift_ks,
-        "events_ewma": q_events_ewma,
-        "events_transitions": q_events_transitions,
-        "dedup_graph_triangles": q_dedup_graph_triangles,
-        "integrity_report": q_integrity_report,
-        "profile_clip": q_profile_clip,
-        "events_gap_fill": q_events_gap_fill,
-        "events_forward_fill": q_events_forward_fill,
-        "events_dense_impute": q_events_dense_impute,
-        "profile_heavy_hitters": q_profile_heavy_hitters,
-        "bloom_join_prune": q_bloom_join_prune,
-        "text_repetition": q_text_repetition,
-        "cdc_roundtrip": q_cdc_roundtrip,
-        "rollup_maintenance": q_rollup_maintenance,
-        "golden_records": q_golden_records,
-        "profile_histogram_eqdepth": q_profile_histogram_eqdepth,
-        "compaction_report": q_compaction_report,
-        "sim_hard_negatives": q_sim_hard_negatives,
-        "sim_quantize_report": q_sim_quantize_report,
-        "text_language": q_text_language,
-        "dedup_minhash_estimate": q_dedup_minhash_estimate,
-        "dedup_collapse": q_dedup_collapse,
-        "merge_upsert": q_merge_upsert,
-        "sim_topk": q_sim_topk,
-        "schema_information": q_schema_information,
-        "profile_summary": q_profile_summary,
-        "profile_summary_approx": q_profile_summary_approx,
-        "profile_quantiles": q_profile_quantiles,
-        "asof_join": q_asof_join,
-        "zorder_rowset": q_zorder_rowset,
-        "merge_full_sync": q_merge_full_sync,
-        "sim_neardup_lsh": q_sim_neardup_lsh,
-        "sim_neardup_multiprobe": q_sim_neardup_multiprobe,
-        "dedup_clusters_lsh": q_dedup_clusters_lsh,
-        "dedup_exact": q_dedup_exact,
-        "setop_nations": q_setop_nations,
-        "events_rolling": q_events_rolling,
-        "quantile_error_report": q_quantile_error_report,
-        "sim_recall_report": q_sim_recall_report,
-        "profile_quantiles_exact": q_profile_quantiles_exact,
-        "profile_outliers": q_profile_outliers,
-        "dedup_winnow_pairs": q_dedup_winnow_pairs,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_lsh_pairs": q_dedup_lsh_pairs,
-        "text_bigrams": q_text_bigrams,
-        "profile_corr": q_profile_corr,
-        "text_bpe": q_text_bpe,
-        "profile_fd": q_profile_fd,
-        "events_pattern": q_events_pattern,
-        "profile_benford": q_profile_benford,
-        "tpch_q6": q_tpch_q6,
-        "events_funnel": q_events_funnel,
-        "tpch_q15": q_tpch_q15,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q3": q_tpch_q3,
-        "tpch_q4": q_tpch_q4,
-        "tpch_q5": q_tpch_q5,
-        "tpch_q7": q_tpch_q7,
-        "tpch_q8": q_tpch_q8,
-        "tpch_q10": q_tpch_q10,
-        "tpch_q12": q_tpch_q12,
-        "tpch_q13": q_tpch_q13,
-        "tpch_q14": q_tpch_q14,
-        "tpch_q17": q_tpch_q17,
-        "tpch_q18": q_tpch_q18,
-        "tpch_q19": q_tpch_q19,
-        "tpch_q21": q_tpch_q21,
-        "tpch_q22": q_tpch_q22,
-        "topk_customers": q_topk_customers,
-        "window_rank": q_window_rank,
-        "window_ranking_suite": q_window_ranking_suite,
-        "sql_passthrough": q_sql_passthrough,
-        "rollup_pricing": q_rollup_pricing,
-        "quality_check": q_quality_check,
-        "skew_salted_agg": q_skew_salted_agg,
-        "skew_salted_join": q_skew_salted_join,
-        "dedup_jaccard": q_dedup_jaccard,
-        "dedup_winnow": q_dedup_winnow,
-        "events_retention": q_events_retention,
-        "sim_topk_pandas": q_sim_topk_pandas,
-        "corpus_dedup_e2e": q_corpus_dedup_e2e,
-        "corpus_split_leakage_safe": q_corpus_split_leakage_safe,
-        "dedup_clusters": q_dedup_clusters,
-        "semantic_dedup": q_semantic_dedup,
-        "sim_ivf": q_sim_ivf,
-        "sim_neardup": q_sim_neardup,
-        "events_stream_join": q_events_stream_join,
-        "events_stream_watermark": q_events_stream_watermark,
-        "events_stream_dedup": q_events_stream_dedup,
-        "summary_error_report": q_summary_error_report,
-        "sketch_error_report": q_sketch_error_report,
-        "pack_bins": q_pack_bins,
-        "dedup_incremental": q_dedup_incremental,
-        "source_overlap": q_source_overlap,
-        "sim_covariance": q_sim_covariance,
-        "events_stream_sessionize": q_events_stream_sessionize,
-        "sql_pipe_passthrough": q_sql_pipe_passthrough,
-        "events_json_variant": q_events_json_variant,
-        "events_stream_outer_join": q_events_stream_outer_join,
-        "events_stream_upsert": q_events_stream_upsert,
-        "events_stream_profile": q_events_stream_profile,
-        "corpus_span_dedup": q_corpus_span_dedup,
-        "multimodal_features": q_multimodal_features,
-        "table_versions": q_table_versions,
-        "asof_tolerance": q_asof_tolerance,
-        "catalog_stats": q_catalog_stats,
-        "cdc_apply": q_cdc_apply,
-        "cdc_merge_into": q_cdc_merge_into,
-        "chunk_chars": q_chunk_chars,
-        "chunk_tokens": q_chunk_tokens,
-        "corpus_decontaminate": q_corpus_decontaminate,
-        "corpus_mixture": q_corpus_mixture,
-        "corpus_prepare": q_corpus_prepare,
-        "cube_pricing": q_cube_pricing,
-        "events_json": q_events_json,
-        "events_lag_lead": q_events_lag_lead,
-        "events_pivot": q_events_pivot,
-        "events_range_join": q_events_range_join,
-        "events_sessionize": q_events_sessionize,
-        "events_sliding": q_events_sliding,
-        "events_tumbling": q_events_tumbling,
-        "events_unpivot": q_events_unpivot,
-        "multimodal_decode": q_multimodal_decode,
-        "pack_chunks": q_pack_chunks,
-        "profile_drift": q_profile_drift,
-        "sample_balanced": q_sample_balanced,
-        "sample_stratified": q_sample_stratified,
-        "scd2_customers": q_scd2_customers,
-        "snapshot_diff": q_snapshot_diff,
-        "source_binaryfile": q_source_binaryfile,
-        "source_csv_roundtrip": q_source_csv_roundtrip,
-        "source_json_roundtrip": q_source_json_roundtrip,
-        "source_orc_roundtrip": q_source_orc_roundtrip,
-        "text_fingerprints": q_text_fingerprints,
-        "text_quality": q_text_quality,
-        "text_redact": q_text_redact,
-        "text_tokens": q_text_tokens,
-        "text_vocabulary": q_text_vocabulary,
-        "pca_error_report": q_pca_error_report,
-        "source_python_datasource": q_source_python_datasource,
-        "profiler_e2e": q_profiler_e2e,
-        "profile_intended": q_profile_intended,
-        "profile_as_written": q_profile_as_written,
-        "profile_histogram": q_profile_histogram,
-        "profile_topk": q_profile_topk,
-        "profiler_incremental": q_profiler_incremental,
-        "neardup_recall_report": q_neardup_recall_report,
-        "corpus_e2e": q_corpus_e2e,
-        "graph_pagerank": q_graph_pagerank,
-        "tpch_q2": q_tpch_q2,
-        "tpch_q9": q_tpch_q9,
-        "tpch_q11": q_tpch_q11,
-        "tpch_q16": q_tpch_q16,
-        "tpch_q20": q_tpch_q20,
-        "profile_distinct_sketch": q_profile_distinct_sketch,
-        "catalog_show_tables": q_catalog_show_tables,
-        "profile_nested": q_profile_nested,
-        "pack_report": q_pack_report,
-        "text_keywords": q_text_keywords,
-        "text_logprob": q_text_logprob,
-        "dedup_containment": q_dedup_containment,
-        "sim_centroids": q_sim_centroids,
-        "events_anomaly": q_events_anomaly,
-        "text_pmi": q_text_pmi,
-        "source_partitioned": q_source_partitioned,
-        "merge_evolve": q_merge_evolve,
-        "schema_drift": q_schema_drift,
-        "profile_quantiles_grouped": q_profile_quantiles_grouped,
-        "layout_report": q_layout_report,
-        "quality_quarantine": q_quality_quarantine,
-        "source_evolved": q_source_evolved,
-        "asof_nearest": q_asof_nearest,
-        "events_interval_join": q_events_interval_join,
-        "sample_weighted": q_sample_weighted,
-        "dedup_graph_stats": q_dedup_graph_stats,
-        "events_anomaly_rolling": q_events_anomaly_rolling,
-        "events_stream_enrich": q_events_stream_enrich,
-        "sim_cross_contamination": q_sim_cross_contamination,
-        "events_interpolate": q_events_interpolate,
-        "dedup_cluster_report": q_dedup_cluster_report,
-        "text_bpe_report": q_text_bpe_report,
-        "sim_ann_lsh": q_sim_ann_lsh,
-        "sim_ann_multiprobe": q_sim_ann_multiprobe,
-        "sim_ivf_kmeans": q_sim_ivf_kmeans,
-        "corpus_split": q_corpus_split,
-        "fuzzy_join": q_fuzzy_join,
-    }
-
-
-#: DECLARED AUDIT EXEMPTIONS (VERDICT r12 item: close
-#: profile_distinct_sketch's ``no_oracle``). Exactly four registered
-#: queries are rows-only by construction — their values are
-#: engine-specific sketch/decomposition internals no SQL engine can
-#: replay bit-for-bit — and each is VOUCHED FOR by an oracle-backed
-#: error-report companion that recomputes the exact side in SQL and
-#: hash-asserts the approximation contract (bounds/recall booleans
-#: flip and fail the driver compare on any regression):
-#:
-#:   profile_distinct_sketch  → sketch_error_report   (±5% distinct)
-#:   profile_quantiles        → quantile_error_report (±eps brackets)
-#:   profile_summary_approx   → summary_error_report  (rel-err bound)
-#:   sim_pca                  → pca_error_report      (reconstruction)
-#:
-#: A driver correctness row for one of these four can check rows and
-#: schema but has no oracle hash — scheduling them in the ~50-entry
-#: window buys nothing the companion's row doesn't already assert, so
-#: rotations should place the COMPANION in-window instead (the r13
-#: window carries quantile_error_report; summary/sketch_error_report
-#: rotate with the r10 cohort in r14).
-ROWS_ONLY_AUDIT_COMPANIONS: dict[str, str] = {
-    "profile_distinct_sketch": "sketch_error_report",
-    "profile_quantiles": "quantile_error_report",
-    "profile_summary_approx": "summary_error_report",
-    "sim_pca": "pca_error_report",
-}
+    return {_name(fn): fn for fn, _ in _REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "profile_intended": _profile_intended_oracle(PROFILE_TABLES),
-        "profile_as_written": _profile_as_written_oracle(PROFILE_TABLES),
-        "profile_topk": _profile_topk_oracle(PROFILE_TABLES),
-        "profile_histogram": _profile_histogram_oracle(),
-        "profile_nested": _profile_nested_oracle(),
-        "sim_recall_report": _SIM_RECALL_ORACLE,
-        "catalog_show_tables": _SHOW_TABLES_ORACLE,
-        "sketch_error_report": _SKETCH_ERROR_ORACLE,
-        "quantile_error_report": _QUANT_ERROR_ORACLE,
-        "pack_report": _PACK_REPORT_ORACLE,
-        "neardup_recall_report": _NEARDUP_RECALL_ORACLE,
-        "text_keywords": _TEXT_KEYWORDS_ORACLE,
-        "text_bigrams": _TEXT_BIGRAMS_ORACLE,
-        "text_logprob": _TEXT_LOGPROB_ORACLE,
-        "dedup_containment": _DEDUP_CONTAINMENT_ORACLE,
-        "profile_corr": _PROFILE_CORR_ORACLE,
-        "sim_centroids": _SIM_CENTROIDS_ORACLE,
-        "events_anomaly": _EVENTS_ANOMALY_ORACLE,
-        "text_pmi": _TEXT_PMI_ORACLE,
-        "profile_outliers": _PROFILE_OUTLIERS_ORACLE,
-        "source_partitioned": _PARTITIONED_ORACLE,
-        "merge_evolve": _MERGE_EVOLVE_ORACLE,
-        "events_stream_profile": _STREAM_PROFILE_ORACLE,
-        "schema_drift": _schema_drift_oracle(),
-        "profile_quantiles_grouped": _QUANT_GROUPED_ORACLE,
-        "summary_error_report": _summary_error_oracle(),
-        "text_bpe": _TEXT_BPE_ORACLE,
-        "text_bpe_report": _TEXT_BPE_REPORT_ORACLE,
-        "layout_report": _LAYOUT_REPORT_ORACLE,
-        "quality_quarantine": _QUARANTINE_ORACLE,
-        "corpus_e2e": _corpus_e2e_oracle(),
-        "source_evolved": _SOURCE_EVOLVED_ORACLE,
-        "asof_nearest": _ASOF_NEAREST_ORACLE,
-        "events_interval_join": _EVENTS_INTERVAL_ORACLE,
-        "sample_weighted": _sample_weighted_oracle(),
-        "corpus_budget_select": _BUDGET_SELECT_ORACLE,
-        "dedup_graph_stats": _DEDUP_GRAPH_STATS_ORACLE,
-        "profile_entropy": _PROFILE_ENTROPY_ORACLE,
-        "profile_drift": _profile_drift_oracle(),
-        "profiler_incremental": _profile_intended_oracle(
+    return {_name(fn): o for fn, o in _REGISTRY if isinstance(o, str)}
+
+
+#: One row per registered query, ``(q_fn, oracle)``, named by ``q_fn``
+#: without its ``q_`` prefix. The oracle is the SQL text DuckDB replays,
+#: or, for a rows-only query whose values are engine-specific sketch or
+#: decomposition internals, the oracle-backed error-report companion
+#: that hash-asserts its approximation contract. Row order is the
+#: driver's: it records the first ~50 entries, and
+#: ``tools/closing_gate.py`` checks that window.
+_REGISTRY: tuple[tuple[Callable, str | Callable], ...] = (
+    (q_corpus_budget_select, _BUDGET_SELECT_ORACLE),
+    (q_events_stream_sessionize_tws, _EVENTS_SESSION_ORACLE),
+    (q_profile_entropy, _PROFILE_ENTROPY_ORACLE),
+    (q_sim_pca, q_pca_error_report),
+    (q_drift_ks, _drift_ks_oracle()),
+    (q_events_ewma, _events_ewma_oracle()),
+    (q_events_transitions, _EVENTS_TRANSITIONS_ORACLE),
+    (q_dedup_graph_triangles, _DEDUP_TRIANGLES_ORACLE),
+    (q_integrity_report, _integrity_oracle()),
+    (q_profile_clip, _PROFILE_CLIP_ORACLE),
+    (q_events_gap_fill, _EVENTS_GAP_FILL_ORACLE),
+    (q_events_forward_fill, _EVENTS_FFILL_ORACLE),
+    (q_events_dense_impute, _EVENTS_DENSE_IMPUTE_ORACLE),
+    (q_profile_heavy_hitters, _HEAVY_HITTERS_ORACLE),
+    (q_bloom_join_prune, _BLOOM_PRUNE_ORACLE),
+    (q_text_repetition, _TEXT_REPETITION_ORACLE),
+    (q_cdc_roundtrip, _cdc_roundtrip_oracle()),
+    (q_rollup_maintenance, _ROLLUP_MAINTENANCE_ORACLE),
+    (q_golden_records, _GOLDEN_RECORDS_ORACLE),
+    (q_profile_histogram_eqdepth, _EQDEPTH_ORACLE),
+    (q_compaction_report, _COMPACTION_ORACLE),
+    (q_sim_hard_negatives, _SIM_HARD_NEG_ORACLE),
+    (q_sim_quantize_report, _SIM_QUANTIZE_ORACLE),
+    (q_text_language, _language_oracle()),
+    (q_dedup_minhash_estimate, _DEDUP_MINHASH_EST_ORACLE),
+    (q_dedup_collapse, _DEDUP_COLLAPSE_ORACLE),
+    (q_merge_upsert, _MERGE_ORACLE),
+    (q_sim_topk, _SIM_TOPK_ORACLE),
+    (q_schema_information, _schema_info_oracle(PROFILE_TABLES)),
+    (q_profile_summary, _profile_summary_oracle()),
+    (q_profile_summary_approx, q_summary_error_report),
+    (q_profile_quantiles, q_quantile_error_report),
+    (q_asof_join, _ASOF_ORACLE),
+    (q_zorder_rowset, _ZORDER_ORACLE),
+    (q_merge_full_sync, _MERGE_FULL_SYNC_ORACLE),
+    (q_sim_neardup_lsh, _sim_neardup_lsh_oracle()),
+    (q_sim_neardup_multiprobe, _sim_neardup_multiprobe_sql()),
+    (q_dedup_clusters_lsh, _dedup_clusters_lsh_oracle()),
+    (q_dedup_exact, _DEDUP_EXACT_ORACLE),
+    (q_setop_nations, _SETOP_ORACLE),
+    (q_events_rolling, _EVENTS_ROLLING_ORACLE),
+    (q_quantile_error_report, _QUANT_ERROR_ORACLE),
+    (q_sim_recall_report, _SIM_RECALL_ORACLE),
+    (q_profile_quantiles_exact, _QUANT_EXACT_ORACLE),
+    (q_profile_outliers, _PROFILE_OUTLIERS_ORACLE),
+    (q_dedup_winnow_pairs, _WINNOW_PAIRS_ORACLE),
+    (q_dedup_simhash, _simhash_oracle()),
+    (q_dedup_minhash, _DEDUP_MINHASH_ORACLE),
+    (q_dedup_lsh_pairs, _DEDUP_LSH_ORACLE),
+    (q_text_bigrams, _TEXT_BIGRAMS_ORACLE),
+    (q_profile_corr, _PROFILE_CORR_ORACLE),
+    (q_text_bpe, _TEXT_BPE_ORACLE),
+    (q_profile_fd, _fd_oracle(_FD_PAIRS)),
+    (q_events_pattern, _PATTERN_ORACLE),
+    (q_profile_benford, _BENFORD_ORACLE),
+    (q_tpch_q6, _Q6_ORACLE),
+    (q_events_funnel, _EVENTS_FUNNEL_ORACLE),
+    (q_tpch_q15, _Q15_ORACLE),
+    (q_tpch_q1, _Q1_ORACLE),
+    (q_tpch_q3, _Q3_ORACLE),
+    (q_tpch_q4, _Q4_ORACLE),
+    (q_tpch_q5, _Q5_ORACLE),
+    (q_tpch_q7, _Q7_ORACLE),
+    (q_tpch_q8, _Q8_ORACLE),
+    (q_tpch_q10, _Q10_ORACLE),
+    (q_tpch_q12, _Q12_ORACLE),
+    (q_tpch_q13, _Q13_ORACLE),
+    (q_tpch_q14, _Q14_ORACLE),
+    (q_tpch_q17, _Q17_ORACLE),
+    (q_tpch_q18, _Q18_ORACLE),
+    (q_tpch_q19, _Q19_ORACLE),
+    (q_tpch_q21, _Q21_ORACLE),
+    (q_tpch_q22, _Q22_ORACLE),
+    (q_topk_customers, _TOPK_CUSTOMERS_ORACLE),
+    (q_window_rank, _WINDOW_RANK_ORACLE),
+    (q_window_ranking_suite, _WINDOW_RANKING_ORACLE),
+    (q_sql_passthrough, _RAW_SQL),
+    (q_rollup_pricing, _ROLLUP_ORACLE),
+    (q_quality_check, _QUALITY_CHECK_ORACLE),
+    (q_skew_salted_agg, _SKEW_SALTED_ORACLE),
+    (q_skew_salted_join, _SKEW_SALTED_JOIN_ORACLE),
+    (q_dedup_jaccard, _DEDUP_JACCARD_ORACLE),
+    (q_dedup_winnow, _DEDUP_WINNOW_ORACLE),
+    (q_events_retention, _EVENTS_RETENTION_ORACLE),
+    (q_sim_topk_pandas, _SIM_TOPK_ORACLE),
+    (q_corpus_dedup_e2e, _corpus_dedup_e2e_oracle()),
+    (q_corpus_split_leakage_safe, _corpus_split_leakage_safe_oracle()),
+    (q_dedup_clusters, _DEDUP_CLUSTERS_ORACLE),
+    (q_semantic_dedup, _SEMANTIC_DEDUP_ORACLE),
+    (q_sim_ivf, _SIM_IVF_ORACLE),
+    (q_sim_neardup, _SIM_NEARDUP_ORACLE),
+    (q_events_stream_join, _EVENTS_STREAM_JOIN_ORACLE),
+    (q_events_stream_watermark, _EVENTS_STREAM_WM_ORACLE),
+    (q_events_stream_dedup, _EVENTS_STREAM_DEDUP_ORACLE),
+    (q_summary_error_report, _summary_error_oracle()),
+    (q_sketch_error_report, _SKETCH_ERROR_ORACLE),
+    (q_pack_bins, _PACK_BINS_ORACLE),
+    (q_dedup_incremental, _dedup_incremental_oracle()),
+    (q_source_overlap, _SOURCE_OVERLAP_ORACLE),
+    (q_sim_covariance, _sim_covariance_oracle()),
+    (q_events_stream_sessionize, _EVENTS_SESSION_ORACLE),
+    (q_sql_pipe_passthrough, _SQL_PIPE_ORACLE),
+    (q_events_json_variant, _EVENTS_JSON_VARIANT_ORACLE),
+    (q_events_stream_outer_join, _EVENTS_STREAM_OUTER_ORACLE),
+    (q_events_stream_upsert, _EVENTS_STREAM_UPSERT_ORACLE),
+    (q_events_stream_profile, _STREAM_PROFILE_ORACLE),
+    (q_corpus_span_dedup, _CORPUS_SPAN_DEDUP_ORACLE),
+    (q_multimodal_features, _MULTIMODAL_FEATURES_ORACLE),
+    (q_table_versions, _TABLE_VERSIONS_ORACLE),
+    (q_asof_tolerance, _ASOF_TOLERANCE_ORACLE),
+    (q_catalog_stats, _catalog_stats_oracle()),
+    (q_cdc_apply, _CDC_APPLY_ORACLE),
+    (q_cdc_merge_into, _CDC_APPLY_ORACLE),
+    (q_chunk_chars, _CHUNK_CHARS_ORACLE),
+    (q_chunk_tokens, _CHUNK_TOKENS_ORACLE),
+    (q_corpus_decontaminate, _corpus_decontaminate_oracle()),
+    (q_corpus_mixture, _corpus_mixture_oracle()),
+    (q_corpus_prepare, _corpus_oracle()),
+    (q_cube_pricing, _CUBE_ORACLE),
+    (q_events_json, _EVENTS_JSON_ORACLE),
+    (q_events_lag_lead, _EVENTS_LAG_LEAD_ORACLE),
+    (q_events_pivot, _events_pivot_oracle()),
+    (q_events_range_join, _EVENTS_RANGE_JOIN_ORACLE),
+    (q_events_sessionize, _EVENTS_SESSION_ORACLE),
+    (q_events_sliding, _EVENTS_SLIDING_ORACLE),
+    (q_events_tumbling, _EVENTS_TUMBLING_ORACLE),
+    (q_events_unpivot, _events_unpivot_oracle()),
+    (q_multimodal_decode, _MULTIMODAL_DECODE_ORACLE),
+    (q_pack_chunks, _PACK_CHUNKS_ORACLE),
+    (q_profile_drift, _profile_drift_oracle()),
+    (q_sample_balanced, _sample_balanced_oracle()),
+    (q_sample_stratified, _sample_stratified_oracle()),
+    (q_scd2_customers, _scd2_oracle()),
+    (q_snapshot_diff, _snapshot_diff_oracle()),
+    (q_source_binaryfile, _BINARYFILE_ORACLE),
+    (q_source_csv_roundtrip, _CSV_ROUNDTRIP_ORACLE),
+    (q_source_json_roundtrip, _JSON_ROUNDTRIP_ORACLE),
+    (q_source_orc_roundtrip, _ORC_ROUNDTRIP_ORACLE),
+    (q_text_fingerprints, _TEXT_FP_ORACLE),
+    (q_text_quality, _quality_oracle()),
+    (q_text_redact, _text_redact_oracle()),
+    (q_text_tokens, _TEXT_TOKENS_ORACLE),
+    (q_text_vocabulary, _TEXT_VOCAB_ORACLE),
+    (q_pca_error_report, _pca_error_oracle()),
+    (q_source_python_datasource, _PYSOURCE_ORACLE),
+    (q_profiler_e2e, _profile_intended_oracle(tuple(FIXTURE_SCHEMAS))),
+    (q_profile_intended, _profile_intended_oracle(PROFILE_TABLES)),
+    (q_profile_as_written, _profile_as_written_oracle(PROFILE_TABLES)),
+    (q_profile_histogram, _profile_histogram_oracle()),
+    (q_profile_topk, _profile_topk_oracle(PROFILE_TABLES)),
+    (
+        q_profiler_incremental,
+        _profile_intended_oracle(
             PROFILE_TABLES, table_sql={"orders": _ORDERS_MODIFIED_SQL}
         ),
-        "schema_information": _schema_info_oracle(PROFILE_TABLES),
-        "profile_summary": _profile_summary_oracle(),
-        "profiler_e2e": _profile_intended_oracle(tuple(FIXTURE_SCHEMAS)),
-        "asof_join": _ASOF_ORACLE,
-        "merge_upsert": _MERGE_ORACLE,
-        "merge_full_sync": _MERGE_FULL_SYNC_ORACLE,
-        "table_versions": _TABLE_VERSIONS_ORACLE,
-        "zorder_rowset": _ZORDER_ORACLE,
-        "tpch_q1": _Q1_ORACLE,
-        "tpch_q3": _Q3_ORACLE,
-        "tpch_q5": _Q5_ORACLE,
-        "tpch_q6": _Q6_ORACLE,
-        "tpch_q4": _Q4_ORACLE,
-        "tpch_q17": _Q17_ORACLE,
-        "tpch_q7": _Q7_ORACLE,
-        "tpch_q8": _Q8_ORACLE,
-        "tpch_q10": _Q10_ORACLE,
-        "tpch_q12": _Q12_ORACLE,
-        "tpch_q13": _Q13_ORACLE,
-        "tpch_q14": _Q14_ORACLE,
-        "tpch_q18": _Q18_ORACLE,
-        "tpch_q19": _Q19_ORACLE,
-        "tpch_q22": _Q22_ORACLE,
-        "tpch_q15": _Q15_ORACLE,
-        "tpch_q21": _Q21_ORACLE,
-        "tpch_q2": _Q2_ORACLE,
-        "tpch_q9": _Q9_ORACLE,
-        "tpch_q11": _Q11_ORACLE,
-        "tpch_q16": _Q16_ORACLE,
-        "tpch_q20": _Q20_ORACLE,
-        "source_csv_roundtrip": _CSV_ROUNDTRIP_ORACLE,
-        "source_json_roundtrip": _JSON_ROUNDTRIP_ORACLE,
-        "source_orc_roundtrip": _ORC_ROUNDTRIP_ORACLE,
-        "source_binaryfile": _BINARYFILE_ORACLE,
-        "profile_clip": _PROFILE_CLIP_ORACLE,
-        "events_gap_fill": _EVENTS_GAP_FILL_ORACLE,
-        "events_forward_fill": _EVENTS_FFILL_ORACLE,
-        "events_dense_impute": _EVENTS_DENSE_IMPUTE_ORACLE,
-        "profile_heavy_hitters": _HEAVY_HITTERS_ORACLE,
-        "profile_fd": _fd_oracle(_FD_PAIRS),
-        "profile_benford": _BENFORD_ORACLE,
-        "events_pattern": _PATTERN_ORACLE,
-        "events_stream_upsert": _EVENTS_STREAM_UPSERT_ORACLE,
-        "bloom_join_prune": _BLOOM_PRUNE_ORACLE,
-        "text_repetition": _TEXT_REPETITION_ORACLE,
-        "corpus_split": _corpus_split_oracle(),
-        "cdc_roundtrip": _cdc_roundtrip_oracle(),
-        "rollup_maintenance": _ROLLUP_MAINTENANCE_ORACLE,
-        "golden_records": _GOLDEN_RECORDS_ORACLE,
-        "profile_histogram_eqdepth": _EQDEPTH_ORACLE,
-        "compaction_report": _COMPACTION_ORACLE,
-        "sim_hard_negatives": _SIM_HARD_NEG_ORACLE,
-        "sim_quantize_report": _SIM_QUANTIZE_ORACLE,
-        "events_anomaly_rolling": _EVENTS_ANOMALY_ROLLING_ORACLE,
-        "events_rolling": _EVENTS_ROLLING_ORACLE,
-        "events_stream_enrich": _EVENTS_STREAM_ENRICH_ORACLE,
-        "graph_pagerank": _pagerank_oracle(),
-        "sim_cross_contamination": _SIM_CROSS_ORACLE,
-        "dedup_winnow_pairs": _WINNOW_PAIRS_ORACLE,
-        "events_interpolate": _EVENTS_INTERP_ORACLE,
-        "events_ewma": _events_ewma_oracle(),
-        "events_transitions": _EVENTS_TRANSITIONS_ORACLE,
-        "dedup_graph_triangles": _DEDUP_TRIANGLES_ORACLE,
-        "sim_covariance": _sim_covariance_oracle(),
-        "integrity_report": _integrity_oracle(),
-        "events_stream_outer_join": _EVENTS_STREAM_OUTER_ORACLE,
-        "fuzzy_join": _FUZZY_ORACLE,
-        "cdc_apply": _CDC_APPLY_ORACLE,
-        "cdc_merge_into": _CDC_APPLY_ORACLE,
-        "pack_chunks": _PACK_CHUNKS_ORACLE,
-        "profile_quantiles_exact": _QUANT_EXACT_ORACLE,
-        "semantic_dedup": _SEMANTIC_DEDUP_ORACLE,
-        "skew_salted_agg": _SKEW_SALTED_ORACLE,
-        "skew_salted_join": _SKEW_SALTED_JOIN_ORACLE,
-        "quality_check": _QUALITY_CHECK_ORACLE,
-        "window_ranking_suite": _WINDOW_RANKING_ORACLE,
-        "events_funnel": _EVENTS_FUNNEL_ORACLE,
-        "events_retention": _EVENTS_RETENTION_ORACLE,
-        "rollup_pricing": _ROLLUP_ORACLE,
-        "cube_pricing": _CUBE_ORACLE,
-        "setop_nations": _SETOP_ORACLE,
-        "sql_passthrough": _RAW_SQL,
-        "topk_customers": _TOPK_CUSTOMERS_ORACLE,
-        "window_rank": _WINDOW_RANK_ORACLE,
-        "dedup_exact": _DEDUP_EXACT_ORACLE,
-        "dedup_minhash": _DEDUP_MINHASH_ORACLE,
-        "dedup_lsh_pairs": _DEDUP_LSH_ORACLE,
-        "dedup_jaccard": _DEDUP_JACCARD_ORACLE,
-        "dedup_simhash": _simhash_oracle(),
-        "dedup_winnow": _DEDUP_WINNOW_ORACLE,
-        "sim_topk": _SIM_TOPK_ORACLE,
-        "sim_topk_pandas": _SIM_TOPK_ORACLE,
-        "sim_ivf": _SIM_IVF_ORACLE,
-        "sim_neardup": _SIM_NEARDUP_ORACLE,
-        "dedup_clusters": _DEDUP_CLUSTERS_ORACLE,
-        "multimodal_decode": _MULTIMODAL_DECODE_ORACLE,
-        "multimodal_features": _MULTIMODAL_FEATURES_ORACLE,
-        "corpus_prepare": _corpus_oracle(),
-        "text_quality": _quality_oracle(),
-        "text_language": _language_oracle(),
-        "text_tokens": _TEXT_TOKENS_ORACLE,
-        "text_fingerprints": _TEXT_FP_ORACLE,
-        "text_redact": _text_redact_oracle(),
-        "text_vocabulary": _TEXT_VOCAB_ORACLE,
-        "catalog_stats": _catalog_stats_oracle(),
-        "snapshot_diff": _snapshot_diff_oracle(),
-        "corpus_mixture": _corpus_mixture_oracle(),
-        "corpus_decontaminate": _corpus_decontaminate_oracle(),
-        "scd2_customers": _scd2_oracle(),
-        "sample_stratified": _sample_stratified_oracle(),
-        "sample_balanced": _sample_balanced_oracle(),
-        "chunk_chars": _CHUNK_CHARS_ORACLE,
-        "chunk_tokens": _CHUNK_TOKENS_ORACLE,
-        "events_range_join": _EVENTS_RANGE_JOIN_ORACLE,
-        "events_stream_watermark": _EVENTS_STREAM_WM_ORACLE,
-        "events_stream_join": _EVENTS_STREAM_JOIN_ORACLE,
-        "events_stream_dedup": _EVENTS_STREAM_DEDUP_ORACLE,
-        "events_tumbling": _EVENTS_TUMBLING_ORACLE,
-        "events_sliding": _EVENTS_SLIDING_ORACLE,
-        "events_sessionize": _EVENTS_SESSION_ORACLE,
-        "events_json": _EVENTS_JSON_ORACLE,
-        "events_pivot": _events_pivot_oracle(),
-        "events_unpivot": _events_unpivot_oracle(),
-        "events_lag_lead": _EVENTS_LAG_LEAD_ORACLE,
-        "asof_tolerance": _ASOF_TOLERANCE_ORACLE,
-        "pca_error_report": _pca_error_oracle(),
-        "drift_ks": _drift_ks_oracle(),
-        # round 5: the LSH family is hash-verified after all — the
-        # md5-derived plane literals + sequential-fold dots replay
-        # bit-for-bit in DuckDB (see the _lsh_* helpers)
-        "sim_ann_lsh": _sim_ann_lsh_oracle(),
-        "sim_ann_multiprobe": _sim_ann_multiprobe_oracle(),
-        "sim_neardup_lsh": _sim_neardup_lsh_oracle(),
-        "sim_neardup_multiprobe": _sim_neardup_multiprobe_sql(),
-        "dedup_clusters_lsh": _dedup_clusters_lsh_oracle(),
-        # round 5: flush-sentinel drain makes the stateful streaming
-        # sessionizer equal the batch islands computation exactly
-        "events_stream_sessionize": _EVENTS_SESSION_ORACLE,
-        "events_stream_sessionize_tws": _EVENTS_SESSION_ORACLE,
-        "sql_pipe_passthrough": _SQL_PIPE_ORACLE,
-        "events_json_variant": _EVENTS_JSON_VARIANT_ORACLE,
-        "source_python_datasource": _PYSOURCE_ORACLE,
-        # round 5: quantized-int mean updates make both Lloyd
-        # iterations bit-replayable as chained CTEs
-        "sim_ivf_kmeans": _sim_ivf_kmeans_oracle(),
-        "dedup_incremental": _dedup_incremental_oracle(),
-        "source_overlap": _SOURCE_OVERLAP_ORACLE,
-        "dedup_minhash_estimate": _DEDUP_MINHASH_EST_ORACLE,
-        "dedup_cluster_report": _DEDUP_CLUSTER_REPORT_ORACLE,
-        "dedup_collapse": _DEDUP_COLLAPSE_ORACLE,
-        "corpus_dedup_e2e": _corpus_dedup_e2e_oracle(),
-        "corpus_span_dedup": _CORPUS_SPAN_DEDUP_ORACLE,
-        "corpus_split_leakage_safe": _corpus_split_leakage_safe_oracle(),
-        # round 5: first-fit is sequential state but still a LINEAR
-        # recursion -- the oracle simulates the exact loop as a
-        # recursive CTE carrying open-bin fills as a list column
-        "pack_bins": _PACK_BINS_ORACLE,
-        # Remaining oracle-less entries are rows-only by design; each
-        # carries a hash-verified companion (see test_entry_contract's
-        # annotated set).
-    }
+    ),
+    (q_neardup_recall_report, _NEARDUP_RECALL_ORACLE),
+    (q_corpus_e2e, _corpus_e2e_oracle()),
+    (q_graph_pagerank, _pagerank_oracle()),
+    (q_tpch_q2, _Q2_ORACLE),
+    (q_tpch_q9, _Q9_ORACLE),
+    (q_tpch_q11, _Q11_ORACLE),
+    (q_tpch_q16, _Q16_ORACLE),
+    (q_tpch_q20, _Q20_ORACLE),
+    (q_profile_distinct_sketch, q_sketch_error_report),
+    (q_catalog_show_tables, _SHOW_TABLES_ORACLE),
+    (q_profile_nested, _profile_nested_oracle()),
+    (q_pack_report, _PACK_REPORT_ORACLE),
+    (q_text_keywords, _TEXT_KEYWORDS_ORACLE),
+    (q_text_logprob, _TEXT_LOGPROB_ORACLE),
+    (q_dedup_containment, _DEDUP_CONTAINMENT_ORACLE),
+    (q_sim_centroids, _SIM_CENTROIDS_ORACLE),
+    (q_events_anomaly, _EVENTS_ANOMALY_ORACLE),
+    (q_text_pmi, _TEXT_PMI_ORACLE),
+    (q_source_partitioned, _PARTITIONED_ORACLE),
+    (q_merge_evolve, _MERGE_EVOLVE_ORACLE),
+    (q_schema_drift, _schema_drift_oracle()),
+    (q_profile_quantiles_grouped, _QUANT_GROUPED_ORACLE),
+    (q_layout_report, _LAYOUT_REPORT_ORACLE),
+    (q_quality_quarantine, _QUARANTINE_ORACLE),
+    (q_source_evolved, _SOURCE_EVOLVED_ORACLE),
+    (q_asof_nearest, _ASOF_NEAREST_ORACLE),
+    (q_events_interval_join, _EVENTS_INTERVAL_ORACLE),
+    (q_sample_weighted, _sample_weighted_oracle()),
+    (q_dedup_graph_stats, _DEDUP_GRAPH_STATS_ORACLE),
+    (q_events_anomaly_rolling, _EVENTS_ANOMALY_ROLLING_ORACLE),
+    (q_events_stream_enrich, _EVENTS_STREAM_ENRICH_ORACLE),
+    (q_sim_cross_contamination, _SIM_CROSS_ORACLE),
+    (q_events_interpolate, _EVENTS_INTERP_ORACLE),
+    (q_dedup_cluster_report, _DEDUP_CLUSTER_REPORT_ORACLE),
+    (q_text_bpe_report, _TEXT_BPE_REPORT_ORACLE),
+    (q_sim_ann_lsh, _sim_ann_lsh_oracle()),
+    (q_sim_ann_multiprobe, _sim_ann_multiprobe_oracle()),
+    (q_sim_ivf_kmeans, _sim_ivf_kmeans_oracle()),
+    (q_corpus_split, _corpus_split_oracle()),
+    (q_fuzzy_join, _FUZZY_ORACLE),
+)
+
+ROWS_ONLY_AUDIT_COMPANIONS: dict[str, str] = {
+    _name(fn): _name(o) for fn, o in _REGISTRY if callable(o)
+}

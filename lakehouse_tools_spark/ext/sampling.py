@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from lakehouse_tools_spark.functions.portable import _col
+
 #: 2^32 — the md5-prefix hash space.
 _HASH_SPACE = float(1 << 32)
 
@@ -74,10 +76,8 @@ def stratified_sample(
             for x in (F.lit(k), F.lit(float(v)))
         ]
     )
-    frac = F.coalesce(
-        fmap.getItem(F.col(strata_col)), F.lit(float(default_fraction))
-    )
-    return df.filter(hash_fraction(F.col(key_col), salt) < frac)
+    frac = F.coalesce(fmap[_col(strata_col)], F.lit(float(default_fraction)))
+    return df.filter(hash_fraction(_col(key_col), salt) < frac)
 
 
 def build_mixture(

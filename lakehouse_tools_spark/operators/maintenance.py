@@ -192,7 +192,6 @@ def compact_small_files(
     staging = path.rstrip("/") + "__compacting"
     df = spark.read.parquet(path)
     df.repartition(n_target).write.mode("overwrite").parquet(staging)
-    spark.catalog.clearCache()
     local = path.removeprefix("file:")
     local_staging = staging.removeprefix("file:")
     backup = local + "__precompact"
@@ -202,6 +201,9 @@ def compact_small_files(
     except OSError:
         os.rename(backup, local)
         raise
+    # re-list the path under any cached relation over it; other caches
+    # in the caller's session stay
+    spark.catalog.refreshByPath(path)
     shutil.rmtree(backup)
     files_after = sum(
         1 for f in os.listdir(local) if f.endswith(".parquet")

@@ -31,7 +31,13 @@ def pivot_counts(
     per group. Absent (group, value) cells are 0, not null, so the
     wide relation joins/compares cleanly."""
     agg = F.count(F.lit(1)) if agg_col is None else F.sum(_col(agg_col))
-    wide = df.groupBy(_col(group_col)).pivot(pivot_col, values).agg(agg)
+    # GroupedData.pivot parses a column name as SQL: pivot on an alias
+    wide = (
+        df.withColumn("__pivot", _col(pivot_col))
+        .groupBy(_col(group_col))
+        .pivot("__pivot", values)
+        .agg(agg)
+    )
     return wide.select(
         _col(group_col),
         *[F.coalesce(_col(v), F.lit(0)).cast("long").alias(v) for v in values],

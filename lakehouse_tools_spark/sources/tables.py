@@ -137,7 +137,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Repeat loads of an UNCHANGED regular file serve a clone of the
     memoized plan (see ``_TABLE_PLAN_CACHE``) — lazy metadata only;
     joining two loads of the same table needs ``.alias()`` on each
-    side, exactly like any Spark self-join of one DataFrame.
+    side, exactly like any Spark self-join of one DataFrame. The first
+    load after a rewrite refreshes the path's cached relations, so no
+    persist made over the old file serves its rows again.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     # re-assert the nanos conf on EVERY call, cache hits included: the
@@ -152,6 +154,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         jdf = per.get(key)
         if jdf is not None:
             return DataFrame(jdf.toDF(), spark)
+        if any(k[0] == key[0] for k in per):
+            # rewritten since this session last loaded it
+            spark.catalog.refreshByPath(path)
     schema = _parquet_schema(spark, path, key)
     df = _normalize_types(spark.read.schema(schema).parquet(path), schema, name)
     if key is not None:

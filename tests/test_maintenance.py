@@ -150,3 +150,22 @@ def test_compact_small_files_restores_table_when_swap_fails(
 
     assert not os.path.exists(path + "__precompact")
     assert sorted(spark.read.parquet(path).collect()) == before
+
+
+def test_compact_small_files_keeps_the_callers_caches(spark, tmp_path):
+    """Compaction refreshes only its own path: a frame the caller
+    persisted stays cached, and one cached over the compacted path
+    reads the same rows from the new files."""
+    from lakehouse_tools_spark.operators.maintenance import compact_small_files
+
+    path = str(tmp_path / "frag4")
+    spark.range(6).repartition(3).write.parquet(path)
+    kept = spark.range(10).persist()
+    over = spark.read.parquet(path).persist()
+    assert kept.count() == 10 and over.count() == 6
+    level = kept.storageLevel
+    compact_small_files(spark, path, target_file_bytes=64 * 1024 * 1024)
+    assert kept.storageLevel == level
+    assert sorted(r.id for r in over.collect()) == list(range(6))
+    kept.unpersist()
+    over.unpersist()

@@ -445,6 +445,14 @@ def _any_name_ops():
         p = rollup.rollup_partials(df, ["s"], names)
         return rollup.rollup_result(rollup.merge_rollups([p, p], ["s"]), ["s"])
 
+    def pivot_counts(group_and_pivot):
+        def run(df, names):
+            (g, p), labels = group_and_pivot(names), [f"{n}!" for n in names]
+            pivot = F.array(*map(F.lit, labels))[F.col("k") % len(names)]
+            return reshape.pivot_counts(df.withColumn(p, pivot), g, p, labels)
+
+        return run
+
     def normalize_types(df, names):
         ntz = F.to_timestamp_ntz(F.format_string("2024-01-%02d", F.col("k") + 1))
         d = df.select("k", *[ntz.alias(n) for n in names])
@@ -483,14 +491,9 @@ def _any_name_ops():
         ),
         "melt": lambda df, names: reshape.melt(df, ["k"], names),
         # named group column; pivot values that become column names
-        "pivot_counts": lambda df, names: reshape.pivot_counts(
-            df.withColumn(
-                "p", F.array(*[F.lit(f"{n}!") for n in names])[F.col("k") % len(names)]
-            ),
-            names[0],
-            "p",
-            [f"{n}!" for n in names],
-        ),
+        "pivot_counts": pivot_counts(lambda names: (names[0], "p")),
+        # ...and a named pivot column
+        "pivot_counts_named_pivot": pivot_counts(lambda names: (names[1], names[0])),
         "snapshot_diff": snapshot_diff,
         "golden_records": lambda df, names: golden.golden_records(
             df, "s", {**{n: "max" for n in names}, "k": "latest"}, recency_col=names[0]

@@ -53,6 +53,12 @@ def test_stratified_sample_respects_per_stratum_fractions(spark, tables):
             assert abs(got.get(lang, 0) / base[lang] - f) < 0.15
     # unlisted strata dropped by default
     assert set(got) <= set(fr)
+    # columns named anything keep the same rows
+    odd = docs.withColumnsRenamed({"lang": "l`a.ng", "doc_id": "doc id"})
+    again = stratified_sample(odd, "l`a.ng", fr, "doc id").toDF(*docs.columns)
+    assert sorted(again.select("doc_id").collect()) == sorted(
+        out.select("doc_id").collect()
+    )
 
 
 def test_balanced_sample_caps_and_is_stable(spark, tables):

@@ -21,6 +21,16 @@ def _rows(df):
     return {tuple(r) for r in df.collect()}
 
 
+def _write_file(df, path):
+    """Write ``df`` as ONE regular parquet file at ``path``, replacing it."""
+    import os
+
+    tmp = path + "_w"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = [p for p in os.listdir(tmp) if p.startswith("part")][0]
+    os.replace(os.path.join(tmp, part), path)
+
+
 def test_csv_roundtrip_preserves_rows(spark, tables):
     nation = tables["nation"]
     out = roundtrip(nation, tempfile.mkdtemp(prefix="lts_csv_"), "csv")
@@ -305,12 +315,7 @@ def test_table_plan_memo_hits_invalidates_and_stays_lazy(spark, tmp_path):
 
     d = str(tmp_path)
     f1 = os.path.join(d, "t.parquet")
-    tmp = os.path.join(d, "_w")
-    spark.createDataFrame([Row(a=i) for i in range(5)]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    part = [p for p in os.listdir(tmp) if p.startswith("part")][0]
-    os.rename(os.path.join(tmp, part), f1)
+    _write_file(spark.createDataFrame([Row(a=i) for i in range(5)]), f1)
 
     def path_keys():
         return [
@@ -331,15 +336,42 @@ def test_table_plan_memo_hits_invalidates_and_stays_lazy(spark, tmp_path):
     # rewrite -> new key -> rebuilt plan sees the new rows, and the
     # STALE entry is evicted (ADVICE r12): only the latest stat-key
     # per path survives, so the replaced JVM Dataset is released
-    spark.createDataFrame([Row(a=i) for i in range(7)]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    part = [p for p in os.listdir(tmp) if p.startswith("part")][0]
-    os.replace(os.path.join(tmp, part), f1)
+    _write_file(spark.createDataFrame([Row(a=i) for i in range(7)]), f1)
     assert src.load_table(spark, d, "t").count() == 7
     key2 = path_keys()
     assert len(key2) == 1
     assert key2 != key1
+
+
+def test_load_table_after_rewrite_serves_no_stale_cache(spark, tmp_path):
+    # tfidf_keywords persists its TF relation over the source scan;
+    # Spark's cache manager matches a file relation by path alone, so
+    # after an in-place rewrite the same session must not be served
+    # the old file's keywords — with or without a persist of its own
+    import os
+
+    from lakehouse_tools_spark.ext.text import tfidf_keywords
+    from lakehouse_tools_spark.sources import tables as src
+
+    d = str(tmp_path)
+    f = os.path.join(d, "documents.parquet")
+
+    def keywords(persist=True):
+        docs = src.load_table(spark, d, "documents")
+        out = tfidf_keywords(docs, "text", "doc_id", k=1, persist=persist)
+        return {r.word for r in out.collect()}
+
+    def write(words):
+        rows = [Row(doc_id=i, text=w) for i, w in enumerate(words)]
+        _write_file(spark.createDataFrame(rows), f)
+        return set(words)
+
+    old = write(("apple", "banana", "cherry"))
+    assert keywords() == old
+    new = write(("grape", "lemon", "mango", "peach"))
+    assert spark.read.parquet(f).count() == 4
+    assert keywords() == new
+    assert keywords(persist=False) == new
 
 
 def test_table_plan_cache_dead_session_entries_evicted():

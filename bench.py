@@ -569,12 +569,13 @@ def main() -> None:
         timings[name] = round(best, 3)
         # isolate queries from each other: operators whose relations
         # feed multiple consumers persist them per call (jaccard/
-        # tfidf/pagerank/the TPC-H q15/q21 shapes — see the CACHE
-        # OWNERSHIP notes), and over a 180-query session those caches
-        # accumulate, pinning memory and skewing later queries — the
-        # very "session position" artifact behind the r05 tpch_q16/
-        # q11 outliers. Repeat runs of the SAME query stay warm (the
-        # min is still steady-state); only cross-query state is shed.
+        # containment, the dedup cluster report, winnow pairs, the
+        # TPC-H q21 shape — see the CACHE OWNERSHIP notes), and over a
+        # 180-query session those caches accumulate, pinning memory
+        # and skewing later queries — the very "session position"
+        # artifact behind the r05 tpch_q16/q11 outliers. Repeat runs
+        # of the SAME query stay warm (the min is still steady-state);
+        # only cross-query state is shed.
         spark.catalog.clearCache()
     try:
         bracket_post = _HS.probe_quick() if _HS else {"error": "no probe"}

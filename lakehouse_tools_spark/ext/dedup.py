@@ -599,8 +599,9 @@ def winnow_pairs(
     ``persist=True`` the narrow ``(doc_id, fingerprint)`` projection
     is persisted (MEMORY_AND_DISK) so the pipeline — the dominant
     scan+gram+rolling-min cost — runs ONCE (the broadcast build
-    otherwise re-derives it; optimization r13 A/B at sf0.1:
-    2.3 → 1.95 s warm with clearCache between reps). This function
+    otherwise re-derives it; A/B of the registry query at sf0.1 on
+    4 vCPU, min of 3 with clearCache before each run: 15.8 → 13.8 s,
+    median of 5 pairs). This function
     never unpersists it and returns no handle to it, so a caller
     that opts in owns the release: ``spark.catalog.clearCache()`` or
     session end. At 100 TB this is the §2.4 guide rule: never

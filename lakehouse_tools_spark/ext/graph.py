@@ -371,35 +371,32 @@ def pagerank(
     equi-join + one groupBy — shuffles carry (vertex, partial sum),
     never adjacency lists), dangling mass (outdeg-0 vertices) is
     redistributed uniformly via a broadcast 1-row aggregate, and
-    ``pr' = (1−d)/n + d·(contrib + dangling/n)``. Each iteration
-    persists — the plan would otherwise double per round (the
-    connected-components lesson). Fixed ``iters`` keeps the whole
-    computation expressible as chained relational passes, so a SQL
-    oracle can replay it exactly; production convergence loops swap
-    the range for a delta test without touching the per-round plan.
-    Output: ``(id, pagerank)`` floored at 6 with the exact-rational
-    boundary nudge shared by the scoring operators.
+    ``pr' = (1−d)/n + d·(contrib + dangling/n)``. Fixed ``iters``
+    keeps the whole computation expressible as chained relational
+    passes, so a SQL oracle can replay it exactly; production
+    convergence loops swap the range for a delta test without
+    touching the per-round plan. Output: ``(id, pagerank)`` floored
+    at 6 with the exact-rational boundary nudge shared by the
+    scoring operators.
 
-    Cache ownership: the per-iteration persists (``iters`` + 1
-    relations, each vertex-sized — compact) live until session end,
-    because the result is lazy and unpersisting earlier would forfeit
-    the double-consumer reuse that motivated them. One-shot pipeline
-    runs don't care; a long-lived session iterating many graphs
-    should ``spark.catalog.clearCache()`` between calls (the
-    eager-materialize-and-release alternative would change float
-    summation order and break the bit-exact oracle contract).
+    Nothing is persisted. Each round's rank relation has two
+    consumers (the dangling sum and the contributions), so the plan
+    doubles per round, and persisting the rounds does not cut that
+    lineage: Catalyst still analyzes the whole tree. On 4 vCPU over
+    the registry's sf0.1 graph, a cold call (graph build included)
+    at ``iters`` 3/5/7 took 12–13/20–21/78–99 s with per-round
+    persists and 12–13/19/56–59 s without, with the same rows. The
+    registry uses ``iters=3``; large ``iters`` need a real lineage
+    cut (a checkpoint of the vertex-sized ranks).
     """
     n = vertices.count()
     v = vertices.select(F.col(id_col).alias("_vid"))
     e = edges.select(
         F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
     )
-    outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
     p = v.select("_vid", F.lit(1.0 / n).alias("_pr"))
     for _ in range(int(iters)):
-        p = p.persist(StorageLevel.MEMORY_AND_DISK)
         dangling = (
             p.join(outdeg, p["_vid"] == outdeg["_src"], "left_anti")
             .agg(F.coalesce(F.sum("_pr"), F.lit(0.0)).alias("_dm"))

@@ -307,10 +307,12 @@ def test_source_overlap_bounds_and_identity(spark):
 
 def test_persist_false_same_results_zero_cache_growth(spark):
     # the persist=False escape hatch (cache-ownership contract shared
-    # by jaccard_pairs / containment_pairs / the text scorers) must
-    # change ONLY the caching, never the values — and must leave no
-    # cached relation behind
+    # by jaccard_pairs / containment_pairs / tfidf_keywords /
+    # pmi_bigrams) must change ONLY the caching, never the values — and
+    # must leave no cached relation behind; unigram_logprob and
+    # pagerank cache nothing at all, nor does winnow_pairs by default
     from lakehouse_tools_spark.ext import dedup as D
+    from lakehouse_tools_spark.ext import graph as G
     from lakehouse_tools_spark.ext import text as T
     from lakehouse_tools_spark.sources.tables import load_table
 
@@ -321,17 +323,33 @@ def test_persist_false_same_results_zero_cache_growth(spark):
         return sorted(map(tuple, df.collect()))
 
     jsc = spark.sparkContext._jsc.sc()
-    cached = rows(D.jaccard_pairs(sh, threshold=0.05))
-    before = jsc.getPersistentRDDs().size()
-    plain = rows(D.jaccard_pairs(sh, threshold=0.05, persist=False))
-    assert plain == cached
-    assert jsc.getPersistentRDDs().size() <= before
+    knobs = {
+        "jaccard_pairs": lambda **kw: D.jaccard_pairs(sh, threshold=0.05, **kw),
+        "tfidf_keywords": lambda **kw: T.tfidf_keywords(
+            docs, "text", "doc_id", k=2, **kw
+        ),
+        "pmi_bigrams": lambda **kw: T.pmi_bigrams(docs, "text", "doc_id", **kw),
+    }
+    for name, op in knobs.items():
+        cached = rows(op())
+        before = jsc.getPersistentRDDs().size()
+        assert rows(op(persist=False)) == cached, name
+        assert jsc.getPersistentRDDs().size() <= before, name
 
-    tf_cached = rows(T.tfidf_keywords(docs, "text", "doc_id", k=2))
-    before = jsc.getPersistentRDDs().size()
-    tf_plain = rows(T.tfidf_keywords(docs, "text", "doc_id", k=2, persist=False))
-    assert tf_plain == tf_cached
-    assert jsc.getPersistentRDDs().size() <= before
+    fps = D.winnow_fingerprints(docs, "text", "doc_id", k=8, window=4)
+    verts = spark.createDataFrame([(i,) for i in range(5)], "id long")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (3, 0)], "src long, dst long"
+    )
+    no_cache = {
+        "unigram_logprob": lambda: T.unigram_logprob(docs, "text", "doc_id"),
+        "winnow_pairs": lambda: D.winnow_pairs(fps),
+        "pagerank": lambda: G.pagerank(verts, edges),
+    }
+    for name, op in no_cache.items():
+        before = jsc.getPersistentRDDs().size()
+        assert rows(op()), name
+        assert jsc.getPersistentRDDs().size() == before, name
 
 
 def test_span_dedup_drops_hot_spans_keeps_order(spark):

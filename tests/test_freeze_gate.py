@@ -55,3 +55,14 @@ def test_run_against_self_is_clean():
     # crash, and any reported defs must each carry a verdict line
     rc = FG.run("HEAD", window=50)
     assert rc in (0, 1)
+
+
+def test_local_name_is_not_an_edge_to_a_module_def():
+    # q_sim_topk binds a local variable ``queries``: that is no
+    # reference to the module-level ``queries()`` registry view, so
+    # the gate must not count sim_topk as a carrier of every def
+    # queries() names
+    g = FG._RefGraph()
+    edges = g.edges["__spark_entry__.py::q_sim_topk"]
+    assert "__spark_entry__.py::queries" not in edges
+    assert "__spark_entry__.py::_spark" in edges

@@ -243,6 +243,14 @@ def test_tfidf_consumers_read_the_cached_tf(spark):
     assert plan.count("InMemoryTableScan") >= 2
 
 
+def test_logprob_plan_reads_no_cache(spark):
+    # the unigram-LM scorer recomputes its token and vocabulary
+    # relations instead of caching them (a paired A/B measured the
+    # persists no faster per call), so its plan holds no InMemoryRelation
+    plan = plan_of(E.queries()["text_logprob"](spark, SF))
+    assert "InMemoryRelation" not in plan
+
+
 def test_drift_ks_prunes_to_melted_columns(spark):
     # the KS melt reads only event_id (the split key) + the two
     # profiled columns — not ts/event_type/props

@@ -376,10 +376,10 @@ def test_budget_select_leaves_no_cache(spark):
 
 def test_package_persists_are_owned():
     """Grep-assertable cache-ownership rule (VERDICT r07 item 4):
-    every ``.persist(`` site in the package is (a) released inside
-    the same function, (b) gated behind an explicit ``persist``
-    opt-out parameter, or (c) covered by a "Cache ownership"
-    docstring contract. No silent session-lifetime cache."""
+    every ``.persist(`` site in the package is either released inside
+    the same function or gated behind an explicit ``persist`` opt-out
+    parameter. A docstring that merely describes a session-lifetime
+    cache does not own it."""
     import ast
     import pathlib
 
@@ -401,8 +401,6 @@ def test_package_persists_are_owned():
                 continue
             releases = "unpersist" in calls
             opt_out = "persist" in {a.arg for a in fn.args.args}
-            doc = ast.get_docstring(fn) or ""
-            documented = "Cache ownership" in doc
-            if not (releases or opt_out or documented):
+            if not (releases or opt_out):
                 offenders.append(f"{py.relative_to(root)}::{fn.name}")
     assert offenders == [], offenders

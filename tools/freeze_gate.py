@@ -169,6 +169,31 @@ class _RefGraph:
                             imp[a.asname or a.name] = mf
         return imp
 
+    @staticmethod
+    def _bound(node: ast.AST) -> set[str]:
+        """Names a def binds: its own name, parameters (its own, inner
+        defs' and lambdas'), assignment / for / with / comprehension /
+        walrus / ``except … as`` targets and inner def/class names,
+        less those it declares ``global``. One flat scope per
+        top-level def — a name bound in any nested scope masks the
+        module-level def of that name throughout."""
+        bound: set[str] = set()
+        glob: set[str] = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.arg):
+                bound.add(n.arg)
+            elif isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load):
+                bound.add(n.id)
+            elif isinstance(
+                n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                bound.add(n.name)
+            elif isinstance(n, ast.ExceptHandler) and n.name:
+                bound.add(n.name)
+            elif isinstance(n, ast.Global):
+                glob.update(n.names)
+        return bound - glob
+
     def _wire(self, f: str, tree: ast.Module) -> None:
         mod_imports = self._imports(tree.body)
         local = self.defs_by_module[f]
@@ -181,8 +206,10 @@ class _RefGraph:
             refs = self.edges.setdefault(src_node, set())
             imports = dict(mod_imports)
             imports.update(self._imports([node]))  # in-function imports
+            # a name the def binds itself is a local, not an edge
+            bound = self._bound(node)
             for n in ast.walk(node):
-                if isinstance(n, ast.Name) and n.id != node.name:
+                if isinstance(n, ast.Name) and n.id not in bound:
                     tgt = imports.get(n.id)
                     if isinstance(tgt, tuple):
                         mf, sym = tgt
@@ -197,8 +224,10 @@ class _RefGraph:
                                     refs.add(dm[sym])
                     elif n.id in local:
                         refs.add(local[n.id])
-                elif isinstance(n, ast.Attribute) and isinstance(
-                    n.value, ast.Name
+                elif (
+                    isinstance(n, ast.Attribute)
+                    and isinstance(n.value, ast.Name)
+                    and n.value.id not in bound
                 ):
                     tgt = imports.get(n.value.id)
                     if isinstance(tgt, str):

@@ -3605,8 +3605,8 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship near-dup pipeline: LSH candidates → Jaccard verify,
     composed. The shingle relation is computed ONCE (persisted inside
     jaccard_pairs) and feeds both the MinHash signatures and the
-    intersection join; the intersection is computed only for LSH
-    candidate pairs — the scale path, never the quadratic
+    candidates' shingle sets; the intersection is computed only for
+    LSH candidate pairs — the scale path, never the quadratic
     all-pairs self-join (that form stays in tests/test_dedup.py as
     the recall baseline)."""
     docs = load_table(_spark(spark), sf_dir, "documents")
@@ -5075,12 +5075,12 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-shaped semantic deduplication, end to end: exact
     cosine near-dup pairs → connected components (tree-contraction) →
     keep the min-id representative per cluster, reporting how many
-    members it absorbed. The oracle rebuilds the identical closure
-    with a recursive CTE and keeps v = min(component)."""
-    from lakehouse_tools_spark.ext.graph import (
-        cluster_representatives,
-        connected_components_contract,
-    )
+    members it absorbed. The representative IS the cluster id (the
+    min member, or the vertex itself for a singleton), so one groupBy
+    on it gives both columns and the contraction runs once. The
+    oracle rebuilds the identical closure with a recursive CTE and
+    keeps v = min(component)."""
+    from lakehouse_tools_spark.ext.graph import connected_components_contract
 
     emb = load_table(_spark(spark), sf_dir, "embeddings").filter(
         F.col("vec_id") < 300
@@ -5089,13 +5089,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = connected_components_contract(
         pairs, emb, src_col="vec_id", dst_col="vec_id2", id_col="vec_id"
     )
-    sizes = assign.groupBy("cluster_id").agg(
+    return assign.groupBy(F.col("cluster_id").alias("vec_id")).agg(
         F.count(F.lit(1)).alias("n_members")
-    )
-    return (
-        cluster_representatives(assign, "vec_id")
-        .join(sizes, "cluster_id")
-        .select("vec_id", "n_members")
     )
 
 
@@ -5140,11 +5135,11 @@ def q_dedup_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the md5-replayable LSH+Jaccard screen, so the oracle rebuilds
     the ENTIRE flow — signatures, candidates, verification, and the
     recursive-CTE closure — hash-exactly. Survivor count == corpus
-    minus absorbed duplicates by construction."""
-    from lakehouse_tools_spark.ext.graph import (
-        cluster_representatives,
-        connected_components_contract,
-    )
+    minus absorbed duplicates by construction. The representative IS
+    the cluster id (the min member, or the document itself for a
+    singleton), so one groupBy on it gives both columns and the
+    contraction runs once."""
+    from lakehouse_tools_spark.ext.graph import connected_components_contract
 
     docs = load_table(_spark(spark), sf_dir, "documents")
     sh = X_dedup.word_shingles(docs, "text", "doc_id", k=3)
@@ -5156,13 +5151,8 @@ def q_dedup_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = connected_components_contract(
         pairs, docs, src_col="doc_id", dst_col="doc_id2", id_col="doc_id"
     )
-    sizes = assign.groupBy("cluster_id").agg(
+    return assign.groupBy(F.col("cluster_id").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_members")
-    )
-    return (
-        cluster_representatives(assign, "doc_id")
-        .join(sizes, "cluster_id")
-        .select("doc_id", "n_members")
     )
 
 

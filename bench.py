@@ -563,20 +563,21 @@ def main() -> None:
         # recorded min is steady-state, not a GC/contention artifact —
         # round-over-round regressions on them are then attributable
         for _ in range(3 if is_noisy(name) else 2):
+            # every timed run starts with an empty cache: operators
+            # whose relations feed multiple consumers persist them per
+            # call (jaccard/containment, the dedup cluster report,
+            # winnow pairs, the TPC-H q21 shape — see the CACHE
+            # OWNERSHIP notes). Kept across runs, a repeat run of the
+            # same query is served from that cache and times a cached
+            # rerun, not a call; kept across queries, the caches pin
+            # memory and skew later queries — the "session position"
+            # artifact behind the r05 tpch_q16/q11 outliers. JIT and
+            # plan memos stay warm, so the min is still steady-state.
+            spark.catalog.clearCache()
             t0 = time.time()
             materialize(queries[name](spark, sf_dir))
             best = min(best, time.time() - t0)
         timings[name] = round(best, 3)
-        # isolate queries from each other: operators whose relations
-        # feed multiple consumers persist them per call (jaccard/
-        # containment, the dedup cluster report, winnow pairs, the
-        # TPC-H q21 shape — see the CACHE OWNERSHIP notes), and over a
-        # 180-query session those caches accumulate, pinning memory
-        # and skewing later queries — the very "session position"
-        # artifact behind the r05 tpch_q16/q11 outliers. Repeat runs
-        # of the SAME query stay warm (the min is still steady-state);
-        # only cross-query state is shed.
-        spark.catalog.clearCache()
     try:
         bracket_post = _HS.probe_quick() if _HS else {"error": "no probe"}
         bracket_ok = bool(_HS and _HS.brackets_agree(bracket_pre, bracket_post))
@@ -755,14 +756,17 @@ def main() -> None:
             ),
             "methodology_r06_cache_isolation": (
                 "as of late r06 bench.py calls "
-                "spark.catalog.clearCache() after each query's timed "
-                "runs: per-call persists (jaccard/tfidf/pagerank/"
+                "spark.catalog.clearCache() between queries: per-call "
+                "persists (jaccard/tfidf/pagerank/"
                 "tpch_q15/q21 — see CACHE OWNERSHIP notes) no longer "
                 "accumulate across the 180-query session, removing "
                 "the session-position artifact behind the r05 "
                 "tpch_q16/q11 driver outliers. Repeat runs of the "
-                "same query remain warm; only cross-query cache "
-                "state is shed. Round-over-round comparisons that "
+                "same query no longer read the persists of the run "
+                "before them: since r14 the cache is also cleared "
+                "before EVERY timed run, so each recorded min times "
+                "a call, not a cached rerun. Round-over-round "
+                "comparisons that "
                 "straddle this change should expect driver-session "
                 "numbers to move TOWARD queries_fresh. The shift is "
                 "MEASURED in ab_cache_isolation_r07 (r07 A-B run; "

@@ -17,8 +17,9 @@ Scale notes (the point of this module):
   band-bucket join is an equi-join on (band, bucket-hash) that AQE
   handles for skewed buckets. A same-bucket self-join with
   ``doc_id < doc_id2`` emits candidates once.
-- Jaccard verification re-joins only candidate pairs against the
-  shingle sets (semi-join pruning), never all pairs.
+- Jaccard verification looks up each candidate pair's two per-doc
+  shingle sets (built from shingles semi-join-pruned to candidate
+  docs), never all pairs.
 """
 
 from __future__ import annotations
@@ -183,36 +184,15 @@ def lsh_bands_from_wide(
     ).select("doc_id", F.col("_bb.band").alias("band"), F.col("_bb.bucket").alias("bucket"))
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 4, rows_per_band: int = 2
-) -> DataFrame:
-    """Band the signature matrix and emit same-bucket pairs.
-
-    ``signatures`` is the long form from :func:`minhash_signatures`
-    with ``num_hashes = bands * rows_per_band``. Documents agreeing on
-    *all* rows of any band land in the same bucket. Bucket key is the
-    md5 of the sorted band signature → fixed-width join key.
-    Output: distinct ``(doc_id, doc_id2)`` with doc_id < doc_id2.
-    Prefer :func:`lsh_candidate_pairs_wide` in pipelines that already
-    hold wide signatures (skips this groupBy shuffle entirely).
-    """
-    banded = (
-        signatures.withColumn("band", (F.col("hash_id") / rows_per_band).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(F.md5(F.concat_ws("|", F.sort_array(F.collect_list("minhash")))).alias("bucket"))
-    )
-    return _bucket_pairs(banded)
-
-
 def lsh_candidate_pairs_wide(
     wide: DataFrame, bands: int = 4, rows_per_band: int = 2
 ) -> DataFrame:
-    """Same output as :func:`lsh_candidate_pairs`, fed from wide
-    signatures: one shuffle total (the bucket self-join)."""
-    return _bucket_pairs(lsh_bands_from_wide(wide, bands, rows_per_band))
-
-
-def _bucket_pairs(banded: DataFrame) -> DataFrame:
+    """Band wide signatures (``num_hashes = bands * rows_per_band``)
+    and emit same-bucket pairs: documents agreeing on *all* rows of
+    any band share that band's md5 bucket. Output: distinct
+    ``(doc_id, doc_id2)`` with doc_id < doc_id2. One shuffle total
+    (the bucket self-join)."""
+    banded = lsh_bands_from_wide(wide, bands, rows_per_band)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -235,17 +215,21 @@ def jaccard_pairs(
 ) -> DataFrame:
     """n-gram Jaccard similarity for document pairs.
 
-    With ``candidates`` (from LSH) the intersection is computed ONLY
-    for candidate pairs: candidates join to each side's shingle set
-    directly, so the work is |candidates| × shingles-per-doc — never
-    the bucket-hot self-join. (A post-hoc semi-join on the self-join
-    output would NOT prune: Catalyst cannot push a pair-level semi
-    below a join whose keys reference both sides, so the O(n²)
-    candidate space would still materialize.) Without ``candidates``,
-    all pairs sharing ≥1 shingle are scored — the exact quadratic
-    baseline; fine at test scale, LSH is the scale path.
-    Jaccard = |A∩B| / (|A|+|B|−|A∩B|); sizes come from one
-    aggregate, the intersection from one equi-join on shingle.
+    With ``candidates`` (from LSH) only candidate pairs are scored:
+    each candidate looks up both documents' shingle sets by id, so
+    the volume is |candidates| × one array per side — never the
+    bucket-hot self-join, and no join keyed on ``shingle``. (A
+    post-hoc semi-join on the self-join output would NOT prune:
+    Catalyst cannot push a pair-level semi below a join whose keys
+    reference both sides, so the O(n²) candidate space would still
+    materialize.) Without ``candidates``, all pairs sharing ≥1 shingle are scored — the
+    exact quadratic baseline; fine at test scale, LSH is the scale
+    path. Either way a pair sharing no shingle gets no row.
+    Jaccard = |A∩B| / (|A|+|B|−|A∩B|). Inputs are sets: distinct
+    ``(doc_id, shingle)`` rows (as :func:`word_shingles` emits) and
+    distinct ``doc_id < doc_id2`` candidates (as
+    :func:`lsh_candidate_pairs_wide` emits); nothing here
+    de-duplicates them again.
     Output: ``(doc_id, doc_id2, jaccard)`` floor-truncated to 6 for stable
     cross-engine comparison.
 
@@ -262,20 +246,11 @@ def jaccard_pairs(
     :func:`~lakehouse_tools_spark.ext.corpus.source_overlap`'s
     ``materialize=False``).
     """
-    inter, sizes = _pair_intersections(shingles, candidates, persist)
-    za = sizes.select(F.col("doc_id"), F.col("sz").alias("sz1"))
-    zb = sizes.select(F.col("doc_id").alias("doc_id2"), F.col("sz").alias("sz2"))
-    out = (
-        inter.join(za, "doc_id")
-        .join(zb, "doc_id2")
-        .select(
-            "doc_id",
-            "doc_id2",
-            floor6(
-                F.col("n_inter")
-                / (F.col("sz1") + F.col("sz2") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
+    n_inter = F.col("n_inter")
+    out = _pair_intersections(shingles, candidates, persist).select(
+        "doc_id",
+        "doc_id2",
+        floor6(n_inter / (F.col("sz1") + F.col("sz2") - n_inter)).alias("jaccard"),
     )
     if threshold > 0:
         out = out.filter(F.col("jaccard") >= threshold)
@@ -298,10 +273,11 @@ def containment_pairs(
     corpus dedup pipelines (quote expansion, boilerplate embedding,
     subset scraping).
 
-    Same plan shape and candidate-pruning semantics as
-    :func:`jaccard_pairs` (shared :func:`_pair_intersections` core —
-    one size aggregate, one shingle equi-join; with LSH candidates
-    the join is pruned to candidate docs before any shuffle). One row
+    Same plan shape, set contract and candidate semantics as
+    :func:`jaccard_pairs` (shared :func:`_pair_intersections` core:
+    with LSH candidates, |candidates| × one shingle array per side;
+    without, one shingle equi-join; no row for a pair sharing no
+    shingle). One row
     per unordered pair: both directions plus their max, filtered on
     the max — floor-truncated to 6 for stable cross-engine compare.
     Output: ``(doc_id, doc_id2, c_1in2, c_2in1, containment)``.
@@ -309,24 +285,14 @@ def containment_pairs(
     persists the shared relations for the session; ``persist=False``
     opts out for long-lived callers.
     """
-    inter, sizes = _pair_intersections(shingles, candidates, persist)
-    za = sizes.select(F.col("doc_id"), F.col("sz").alias("sz1"))
-    zb = sizes.select(F.col("doc_id").alias("doc_id2"), F.col("sz").alias("sz2"))
-    out = (
-        inter.join(za, "doc_id")
-        .join(zb, "doc_id2")
-        .select(
-            "doc_id",
-            "doc_id2",
-            floor6(F.col("n_inter") / F.col("sz1")).alias("c_1in2"),
-            floor6(F.col("n_inter") / F.col("sz2")).alias("c_2in1"),
-            floor6(
-                F.greatest(
-                    F.col("n_inter") / F.col("sz1"),
-                    F.col("n_inter") / F.col("sz2"),
-                )
-            ).alias("containment"),
-        )
+    c12 = F.col("n_inter") / F.col("sz1")
+    c21 = F.col("n_inter") / F.col("sz2")
+    out = _pair_intersections(shingles, candidates, persist).select(
+        "doc_id",
+        "doc_id2",
+        floor6(c12).alias("c_1in2"),
+        floor6(c21).alias("c_2in1"),
+        floor6(F.greatest(c12, c21)).alias("containment"),
     )
     if threshold > 0:
         out = out.filter(F.col("containment") >= threshold)
@@ -335,16 +301,20 @@ def containment_pairs(
 
 def _pair_intersections(
     shingles: DataFrame, candidates: DataFrame | None, persist: bool = True
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Shared core of :func:`jaccard_pairs` / :func:`containment_pairs`:
-    per-doc shingle-set sizes and per-pair intersection counts.
-    Returns ``(inter, sizes)`` with columns
-    ``(doc_id, doc_id2, n_inter)`` / ``(doc_id, sz)``."""
-    # the shingle relation feeds THREE consumers (sizes, both join
-    # sides); without materialization each branch re-runs the whole
+    ``(doc_id, doc_id2, n_inter, sz1, sz2)``, all three counts bigint,
+    one row per pair sharing ≥1 shingle (a candidate pair whose
+    documents share none, or that names a document absent from
+    ``shingles``, gets no row). Both inputs must be sets (see
+    :func:`jaccard_pairs`): set sizes are row counts on one path and
+    array sizes on the other, and agree only on distinct rows."""
+    # the shingle relation feeds several consumers (all pairs: sizes
+    # and both join sides; candidates: the sets, looked up twice);
+    # without materialization each branch re-runs the whole
     # normalize→explode→distinct pipeline (and AQE's per-branch
     # replanning defeats exchange reuse). One disk-spillable persist
-    # beats three recomputations at every scale. The caller owns the
+    # beats the recomputations at every scale. The caller owns the
     # cache (see jaccard_pairs's CACHE OWNERSHIP note) and can opt
     # out with persist=False.
     from pyspark import StorageLevel
@@ -352,58 +322,62 @@ def _pair_intersections(
     if persist:
         shingles = shingles.persist(StorageLevel.MEMORY_AND_DISK)
     if candidates is not None:
-        # prune BOTH shingle sides (and the size aggregate) to docs
-        # that appear in some candidate pair before any shuffle: the
-        # candidate doc-id sets are small relative to the corpus by
-        # LSH's design, so these are broadcast semi-joins — the
-        # (doc_id2, shingle) equi-join then shuffles only candidate
-        # docs' shingles, not the whole corpus's. Without the prune
-        # the full shingle relation shuffles for the second join even
-        # though only candidate pairs are scored.
-        # candidates now has FOUR consumers (both id sets, the size
-        # prune, the pair join); without materialization each one
-        # re-runs the entire upstream LSH pipeline. The pair list is
-        # tiny by construction — persist it.
+        # candidates feed two consumers (the id prune and the pair
+        # lookups); without materialization each re-runs the entire
+        # upstream LSH pipeline. The pair list is tiny by
+        # construction — persist it.
         cand = candidates.select("doc_id", "doc_id2")
         if persist:
             cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        left_ids = cand.select("doc_id").distinct()
-        right_ids = cand.select("doc_id2").distinct()
-        sh1 = shingles.join(F.broadcast(left_ids), "doc_id", "left_semi")
-        sh2 = shingles.select(F.col("doc_id").alias("doc_id2"), "shingle").join(
-            F.broadcast(right_ids), "doc_id2", "left_semi"
-        )
-        pair_ids = left_ids.unionByName(
-            right_ids.withColumnRenamed("doc_id2", "doc_id")
+        # prune the shingles to candidate docs before the set
+        # aggregate: the candidate doc-id set is small relative to the
+        # corpus by LSH's design, so this is a broadcast semi-join.
+        # The per-doc shingle sets are corpus-sized at scale — no
+        # broadcast hint on them.
+        ids = cand.select("doc_id").unionByName(
+            cand.select(F.col("doc_id2").alias("doc_id"))
         ).distinct()
-        sizes = (
-            shingles.join(F.broadcast(pair_ids), "doc_id", "left_semi")
+        sets = (
+            shingles.join(F.broadcast(ids), "doc_id", "left_semi")
             .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("sz"))
+            .agg(F.collect_set("shingle").alias("_s"))
         )
-        inter = (
-            cand.join(sh1, "doc_id")
-            .join(sh2, ["doc_id2", "shingle"])
-            .groupBy("doc_id", "doc_id2")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    else:
-        sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-        s1 = shingles.alias("s1")
-        s2 = shingles.alias("s2")
-        inter = (
-            s1.join(
-                s2,
-                (F.col("s1.shingle") == F.col("s2.shingle"))
-                & (F.col("s1.doc_id") < F.col("s2.doc_id")),
+        s1, s2 = F.col("_s1"), F.col("_s2")
+        return (
+            cand.join(sets.withColumnRenamed("_s", "_s1"), "doc_id")
+            .join(
+                sets.select(F.col("doc_id").alias("doc_id2"), F.col("_s").alias("_s2")),
+                "doc_id2",
             )
-            .groupBy(
-                F.col("s1.doc_id").alias("doc_id"),
-                F.col("s2.doc_id").alias("doc_id2"),
+            .select(
+                "doc_id",
+                "doc_id2",
+                F.size(F.array_intersect(s1, s2)).cast("bigint").alias("n_inter"),
+                F.size(s1).cast("bigint").alias("sz1"),
+                F.size(s2).cast("bigint").alias("sz2"),
             )
-            .agg(F.count(F.lit(1)).alias("n_inter"))
+            .filter(F.col("n_inter") > 0)
         )
-    return inter, sizes
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    s1 = shingles.alias("s1")
+    s2 = shingles.alias("s2")
+    return (
+        s1.join(
+            s2,
+            (F.col("s1.shingle") == F.col("s2.shingle"))
+            & (F.col("s1.doc_id") < F.col("s2.doc_id")),
+        )
+        .groupBy(
+            F.col("s1.doc_id").alias("doc_id"),
+            F.col("s2.doc_id").alias("doc_id2"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+        .join(sizes.withColumnRenamed("sz", "sz1"), "doc_id")
+        .join(
+            sizes.select(F.col("doc_id").alias("doc_id2"), F.col("sz").alias("sz2")),
+            "doc_id2",
+        )
+    )
 
 
 def winnow_fingerprints(

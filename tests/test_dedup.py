@@ -7,8 +7,9 @@ from pyspark.sql import Row
 from lakehouse_tools_spark.ext.dedup import (
     exact_duplicates,
     jaccard_pairs,
-    lsh_candidate_pairs,
+    lsh_candidate_pairs_wide,
     minhash_signatures,
+    minhash_wide,
     simhash,
     word_shingles,
 )
@@ -55,36 +56,10 @@ def test_minhash_deterministic_and_shaped(spark):
 
 
 def test_lsh_finds_identical_and_near_dups(spark):
-    sigs = minhash_signatures(docs(spark), "text", "doc_id", num_hashes=8)
-    pairs = {(r.doc_id, r.doc_id2) for r in lsh_candidate_pairs(sigs, 4, 2).collect()}
+    wide = minhash_wide(docs(spark), "text", "doc_id", num_hashes=8)
+    pairs = {(r.doc_id, r.doc_id2) for r in lsh_candidate_pairs_wide(wide, 4, 2).collect()}
     assert (1, 2) in pairs  # identical after normalization: all bands agree
     assert (1, 4) not in pairs and (2, 4) not in pairs
-
-
-def test_lsh_wide_path_equals_long_path(spark, tables):
-    from lakehouse_tools_spark.ext.dedup import (
-        lsh_candidate_pairs_wide,
-        minhash_wide,
-    )
-
-    d = tables["documents"].limit(200)
-    long_pairs = sorted(
-        map(
-            tuple,
-            lsh_candidate_pairs(
-                minhash_signatures(d, "text", "doc_id", num_hashes=8), 4, 2
-            ).collect(),
-        )
-    )
-    wide_pairs = sorted(
-        map(
-            tuple,
-            lsh_candidate_pairs_wide(
-                minhash_wide(d, "text", "doc_id", num_hashes=8), 4, 2
-            ).collect(),
-        )
-    )
-    assert long_pairs == wide_pairs
 
 
 def test_jaccard_values(spark):
@@ -100,22 +75,26 @@ def test_jaccard_candidates_path_matches_restricted_baseline(spark):
     # all-pairs baseline restricted to the candidate set — the
     # recall contract of the composed flagship query
     from lakehouse_tools_spark.ext.dedup import (
-        lsh_candidate_pairs_wide,
+        containment_pairs,
         minhash_wide_from_shingles,
     )
 
     sh = word_shingles(docs(spark), "text", "doc_id", k=3)
-    cand = lsh_candidate_pairs_wide(minhash_wide_from_shingles(sh, 8), 4, 2)
-    pruned = {
-        (r.doc_id, r.doc_id2): r.jaccard
-        for r in jaccard_pairs(sh, candidates=cand).collect()
-    }
-    base = {
-        (r.doc_id, r.doc_id2): r.jaccard for r in jaccard_pairs(sh).collect()
-    }
+    # plus two hand-made candidates that must score no row: docs 1
+    # and 4 share no shingle, and doc 99 has no shingles at all
+    cand = lsh_candidate_pairs_wide(
+        minhash_wide_from_shingles(sh, 8), 4, 2
+    ).unionByName(spark.createDataFrame([(1, 4), (1, 99)], "doc_id long, doc_id2 long"))
     cset = {(r.doc_id, r.doc_id2) for r in cand.collect()}
-    assert pruned == {p: v for p, v in base.items() if p in cset}
-    assert (1, 2) in pruned  # identical pair survives the composition
+    for score in (jaccard_pairs, containment_pairs):
+        pruned = {
+            (r.doc_id, r.doc_id2): tuple(r)
+            for r in score(sh, candidates=cand).collect()
+        }
+        base = {(r.doc_id, r.doc_id2): tuple(r) for r in score(sh).collect()}
+        assert pruned == {p: v for p, v in base.items() if p in cset}, score
+        assert (1, 2) in pruned  # identical pair survives the composition
+        assert (1, 4) not in pruned and (1, 99) not in pruned
 
 
 def test_simhash_identical_docs_equal(spark):

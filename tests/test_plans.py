@@ -130,13 +130,45 @@ def test_range_join_is_equi_not_nested_loop(spark):
 
 
 def test_jaccard_flagship_is_lsh_pruned_not_quadratic(spark):
-    # the composed LSH→Jaccard query must compute intersections via
-    # the candidate join (keys include doc_id2 AND shingle) and never
-    # plan the quadratic shingle-only self-join (keys = [shingle] with
-    # a doc_id< residual) — the O(n²) hot-bucket scale-killer
+    # the composed LSH→Jaccard query must score candidates from
+    # per-doc shingle sets: no join keyed on shingle at all (so never
+    # the quadratic shingle-only self-join — keys = [shingle] with a
+    # doc_id< residual — the O(n²) hot-bucket scale-killer), and
+    # every shingle-set aggregate reads the shingles only through a
+    # broadcast left-semi on the candidate doc ids (the LSH pruning)
     p = plan_of(E.q_dedup_jaccard(spark, SF))
-    assert re.search(r"\[doc_id2#\d+L?, shingle#\d+\]", p), p
     assert not re.search(r"Join \[shingle#\d+\], \[shingle#\d+\]", p), p
+    assert not re.search(r"Join \[[^\]]*shingle#", p), p
+    pruned = re.findall(
+        r"partial_collect_set\(shingle#\d+[^\n]*\n[ :|]*\+- "
+        r"BroadcastHashJoin \[doc_id#\d+L?\], \[doc_id#\d+L?\], LeftSemi",
+        p,
+    )
+    assert pruned and len(pruned) == p.count("partial_collect_set("), p
+
+
+def _contraction_levels(spark, table: str) -> int:
+    """mapInPandas passes of connected_components_contract's ladder
+    over ``table``: one per forest level while P > 1, plus the final."""
+    from lakehouse_tools_spark.ext.graph import _sized_start_partitions
+    from lakehouse_tools_spark.sources.tables import load_table
+
+    p, levels = _sized_start_partitions(load_table(spark, SF, table)), 1
+    while p > 1:
+        p, levels = p // 8, levels + 1
+    return levels
+
+
+def test_collapse_queries_run_the_contraction_ladder_once(spark):
+    # the representative is the cluster id, so the collapse is one
+    # groupBy over the assignment; a reps ⋈ sizes form gives the
+    # assignment two consumers and plans the whole ladder twice
+    for q, table in (
+        (E.q_dedup_collapse, "documents"),
+        (E.q_semantic_dedup, "embeddings"),
+    ):
+        p = plan_of(q(spark, SF))
+        assert p.count("MapInPandas") == _contraction_levels(spark, table), p
 
 
 def test_funnel_is_single_scan_no_join(spark):

@@ -759,7 +759,7 @@ _PATTERN_CASE_SQL = (
     + " END"
 )
 
-#: The oracle mirrors the OPERATOR's row filter exactly (ADVICE r09):
+#: The oracle mirrors the OPERATOR's row filter exactly:
 #: only tokenized events (the CASE maps the event type) with non-null
 #: order keys enter the sequence AND the n_events count — so the
 #: comparison holds for any fixture alphabet / null pattern, not just
@@ -794,8 +794,8 @@ def q_events_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROW)? Project-then-group: the single shuffle carries only
     (user, ts, event_id, token); the sequence forms JVM-side via
     sort_array(collect_list(struct)) and regexp_count — no window
-    sort, no Python. Per-key state = the key's sequence (pre-segment
-    with session_ids for unbounded keys)."""
+    sort, no Python. Per-key state = the key's sequence (key on
+    (user, session ordinal) for unbounded keys)."""
     from lakehouse_tools_spark.operators.sequences import pattern_match
 
     ev = load_table(_spark(spark), sf_dir, "events")
@@ -888,13 +888,13 @@ def q_quantile_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     The GK sketches are ``numeric_quantiles``'s own rows, so the audit
     exercises the production aggregate. The exact ±eps brackets come
     from the DISTRIBUTED exact-percentile path
-    (``exact_quantile_cells``, optimization r13): the former fused single-scan shape kept an exact
-    ``F.percentile`` value→count buffer per column whose final merge
-    holds every distinct value of a column in ONE reducer's memory —
-    the last unbounded-memory aggregate in the package (guide §5).
-    The two sides join per column (a handful of rows each); the
-    second scan this reintroduces is linear and bounded, which at
-    100 TB is the difference between slower and impossible."""
+    (``exact_quantile_cells``): a fused single-scan shape would keep
+    an exact ``F.percentile`` value→count buffer per column whose
+    final merge holds every distinct value of a column in ONE
+    reducer's memory. The two sides join per column (a handful of
+    rows each); the second scan this reintroduces is linear and
+    bounded, which at 100 TB is the difference between slower and
+    impossible."""
     from lakehouse_tools_spark.functions.memo import expr_memo
     from lakehouse_tools_spark.operators.profile import (
         exact_quantile_cells,
@@ -3889,8 +3889,8 @@ FROM est e JOIN ex ON e.doc_id = ex.doc_id AND e.doc_id2 = ex.doc_id2
 
 def q_dedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash cluster-dedup precision/recall, measured not assumed
-    (ext/dedup.cluster_dedup_report — the r12 growth candidate
-    extending ``dedup_minhash_estimate`` from per-pair estimator
+    (ext/dedup.cluster_dedup_report — extending
+    ``dedup_minhash_estimate`` from per-pair estimator
     error to the DECISION level): at each threshold the sketch-only
     predicted duplicate set (LSH candidates with signature agreement
     >= t) is scored against the exact shingle-Jaccard truth set, as
@@ -4425,7 +4425,7 @@ SELECT query_id, vec_id, cos, CAST(rank AS INT) AS rank FROM r WHERE rank <= 10
 
 def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via random-hyperplane LSH bucket probe — the
-    100 TB path. Hash-verified since round 5: the md5-derived plane
+    100 TB path. Hash-verified: the md5-derived plane
     literals and sequential-fold dots replay bit-for-bit in SQL, so
     the oracle recomputes the exact buckets, candidates, and ranks;
     recall vs the exact path is additionally asserted in tests/ and
@@ -4454,7 +4454,7 @@ def q_sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with spherical-k-means-refined centroids and nprobe=2 —
     the production ANN layout (train centroids once, probe several
-    cells). Hash-verified since round 5: the whole pipeline is
+    cells). Hash-verified: the whole pipeline is
     bit-replayable — deterministic lowest-id seeds, assignment by
     1e-6-rounded cosines with lowest-cell tiebreak, and mean updates
     via floor-quantized int64 sums closed by a fixed-order expression
@@ -4589,14 +4589,14 @@ def q_sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the four rows-only ANN queries to a driver-checked guarantee."""
     emb = load_table(_spark(spark), sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 50)
-    # NOTE (r12): deliberately NOT persisted — every branch below runs
+    # NOTE: deliberately NOT persisted — every branch below runs
     # inside ONE action and fills the cores in parallel; a persist
     # serializes the first materialization ahead of every branch
     # (measured 4.7 s → 7.6 s with persist+cold-cache race at sf0.1).
     exact = X_sim.cosine_topk(emb, queries, k=10).select("query_id", "vec_id")
     # the IVF branch's default centroids ARE the k-means seeds — one
-    # collect instead of two identical scan+collect jobs (r12).
-    # r13 NOTE: folding the seed fetch into the first Lloyd job (a
+    # collect instead of two identical scan+collect jobs.
+    # NOTE: folding the seed fetch into the first Lloyd job (a
     # data-derived broadcast centroid array + one tagged-union
     # collect) was built, proven bit-identical, and MEASURED WORSE —
     # 27 → 29 jobs and +0.7 s warm at sf0.1: the broadcast build and
@@ -4612,10 +4612,10 @@ def q_sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, queries, k=10, num_planes=4, dim=64
         ),
     }
-    # r12 restructure: the old shape joined EACH method against its
-    # own copy of the exact relation — four evaluations of the most
-    # expensive subtree (the 2000×50 interpreted-HOF scoring pass) in
-    # one action. Tag-and-union the method candidate sets instead,
+    # Joining EACH method against its own copy of the exact relation
+    # would evaluate the most expensive subtree (the 2000×50
+    # interpreted-HOF scoring pass) four times in one action.
+    # Tag-and-union the method candidate sets instead,
     # cross the single exact relation with a 4-row (method, floor)
     # spine, and left-join once: exact is scored exactly once and the
     # per-method aggregates are identical (per-method n_exact = |exact|
@@ -4692,7 +4692,7 @@ def q_sim_neardup_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH near-dup pairs: right side also probes the
     Hamming-1 bucket flips, recovering pairs split by a single
     hyperplane — candidates ×(planes+1), recall → 1. Hash-verified
-    since round 5 (multi-probe pairing ⇔ Hamming(bucket_a, bucket_b)
+    (multi-probe pairing ⇔ Hamming(bucket_a, bucket_b)
     ≤ 1, which the oracle replays bit-for-bit);
     superset-of-single-probe and subset-of-exact are pinned in
     tests/test_similarity.py."""
@@ -4726,7 +4726,7 @@ WHERE round(list_dot_product(a.v, b.v)
 """
 
 
-# --- LSH bucket replay (round 5): the hyperplanes are md5-derived
+# --- LSH bucket replay: the hyperplanes are md5-derived
 # DOUBLE literals (ext/similarity._hyperplane_value) and the Spark
 # bucket is sign(dot(v, plane)) packed into an int, where the dot is a
 # sequential left fold — the same order DuckDB's list_dot_product
@@ -5028,8 +5028,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus dup clustering — the composed scale path: candidate
     pairs from the multi-probe LSH self-join (never all-pairs), then
-    connected components over them. Hash-verified end to end since
-    round 5: the oracle replays the LSH pair graph bit-for-bit and
+    connected components over them. Hash-verified end to end: the
+    oracle replays the LSH pair graph bit-for-bit and
     closes it with the same recursive-CTE transitive closure as the
     exact `dedup_clusters` variant — so the composed tree-contraction
     union-find over LSH candidates is driver-checked, not just
@@ -5790,8 +5790,8 @@ def q_corpus_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ext/corpus.budget_select): keep the longest documents (score =
     cost = n_chars here) until the cumulative size reaches 50k chars
     — how a fixed-size training mix is filled from a curated pool.
-    The global cumsum is a TWO-PHASE quantile-bucket sum (r08
-    rewrite): driver-computed score quantiles frozen as literals
+    The global cumsum is a TWO-PHASE quantile-bucket sum:
+    driver-computed score quantiles frozen as literals
     assign each row a bucket, a window partitioned BY BUCKET cumsums
     locally, and the per-bucket totals come back as a broadcast
     offset map — never an unpartitioned global window (single-task
@@ -5918,8 +5918,8 @@ def q_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-document first-fit-decreasing packing: documents never
     split; per-bucket sequential fitting runs as applyInPandas (the
     honest escape hatch — first-fit is inherently stateful PER ROW,
-    so no relational pass expresses it). Hash-verified since round 5
-    regardless: sequential state is still a linear RECURSION, and the
+    so no relational pass expresses it). Hash-verified regardless:
+    sequential state is still a linear RECURSION, and the
     oracle simulates the exact first-fit loop as a recursive CTE —
     one step per item per bucket, carrying the open-bin fill levels
     as a list column and picking the first fitting bin with the same
@@ -6653,7 +6653,7 @@ def q_text_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge loop on the capped vocabulary (the production trainer
     architecture; looping over the VOCAB is the algorithm, not a
     collect anti-pattern) — and encode the corpus with them. Encoding
-    is fully distributed since r10: the distinct-word relation is
+    is fully distributed: the distinct-word relation is
     encoded by an Arrow-batched mapInPandas carrying only the tiny
     merge-rank table, then joined back to (doc, word) counts — no
     driver-side vocabulary materialization anywhere in the plan.
@@ -6665,8 +6665,7 @@ def q_text_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the character total (merges only ever shrink). A broken trainer,
     tiebreak, or encoder flips a field and fails the driver hash.
     The contract pins merge-table content and token bounds, not the
-    encode route — so the oracle is unchanged across the r10
-    de-weakening."""
+    encode route."""
     from lakehouse_tools_spark.ext.text import apply_bpe, learn_bpe_merges
 
     docs = load_table(_spark(spark), sf_dir, "documents")
@@ -6739,8 +6738,8 @@ _BPE_REPORT_MERGES: list[tuple[str, str]] = [
 
 
 def q_text_bpe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility report (ext/text.bpe_fertility_report —
-    the r12 growth candidate on the r10-distributed encode): given a
+    """Tokenizer fertility report (ext/text.bpe_fertility_report, on
+    the distributed encode): given a
     FIXED merge table (the standard eval setting: a trained tokenizer
     measured on a corpus), the EXACT corpus token total under the
     iterative BPE encode plus the derived fertility metrics
@@ -6756,7 +6755,7 @@ def q_text_bpe_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_tools_spark.ext.text import bpe_fertility_report
 
     docs = load_table(_spark(spark), sf_dir, "documents")
-    return bpe_fertility_report(docs, "text", "doc_id", _BPE_REPORT_MERGES)
+    return bpe_fertility_report(docs, "text", _BPE_REPORT_MERGES)
 
 
 def _bpe_report_oracle(merges: list[tuple[str, str]]) -> str:
@@ -7000,7 +6999,7 @@ def q_events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a stream-stream join maintains FOUR state stores per shuffle
     # partition and each instance pays fixed setup/commit I/O per
     # micro-batch; size the partition count to the SOURCE volume
-    # (sink.sized_state_partitions — r12: replaces the fixed 8) so the
+    # (sink.sized_state_partitions, not a fixed count) so the
     # instance count tracks the state the join can actually hold; the
     # count is baked into the checkpoint at first start — a real
     # deployment sizes it to rate × range up front
@@ -7436,14 +7435,14 @@ def q_events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     flushes sessions the watermark sealed). Semantics are exactly
     session_window + append — the unsealed-interval SET lives in
     state, so sub-watermark stragglers merge with each other like the
-    batch operator (round-3 divergence closed). Hash-verified since
-    round 5 via the flush-sentinel contract (the outer-join pattern):
-    a far-future sentinel row drives the final watermark past every
-    real session's sealing point, so the drained availableNow run
-    emits EVERY session and equals the batch islands computation
-    exactly — which is the oracle. The sentinel's own session uses an
-    impossible user and is filtered. Batch agreement incl. the
-    straggler case stays pinned in tests/test_stateful.py."""
+    batch operator. Hash-verified via the flush-sentinel contract
+    (the outer-join pattern): a far-future sentinel row drives the
+    final watermark past every real session's sealing point, so the
+    drained availableNow run emits EVERY session and equals the batch
+    islands computation exactly — which is the oracle. The sentinel's
+    own session uses an impossible user and is filtered. Batch
+    agreement incl. the straggler case stays pinned in
+    tests/test_stateful.py."""
     import datetime
     import shutil
     import tempfile
@@ -7468,7 +7467,7 @@ def q_events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             },
             d,
         )
-        # NOT state-partition-sized (r12): the sessionizer's work is
+        # NOT state-partition-sized: the sessionizer's work is
         # per-ROW Python (applyInPandasWithState); shrinking the state
         # partition count serializes that compute onto fewer workers —
         # measured 3.4 s → 4.8 s at 4 partitions. JVM-stateful drains
@@ -7533,7 +7532,7 @@ def q_events_stream_sessionize_tws(
             },
             d,
         )
-        # NOT state-partition-sized (r12): per-row Python sessionizer —
+        # NOT state-partition-sized: per-row Python sessionizer —
         # see q_events_stream_sessionize's note (TWS measured 5.7 s →
         # 9.6 s at 4 partitions; the Python compute wants the cores).
         watermarked = X_win.with_watermark(withsent, "ts", "10 minutes")
@@ -8021,8 +8020,8 @@ def q_sim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles. At d=16 the auto strategy picks the int64-Gram physical
     path (mapInPandas + numpy, the pca_fit shape) over the 153-wide
     Catalyst aggregate: the latter's plan-compile cost is ~6 s FIXED
-    regardless of data volume (measured flat sf0.001→sf0.1, r04
-    attribution), the Gram plan compiles in ms — and the two close
+    regardless of data volume (measured flat sf0.001→sf0.1), the Gram
+    plan compiles in ms — and the two close
     with the same fixed-order arithmetic, so they are bit-identical
     (pinned in tests/test_similarity.py) and this oracle checks
     either."""
@@ -8114,8 +8113,8 @@ def q_pca_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full_stats derives mean and the bit-deterministic trace anchor
     # from the fit's own exact integer sums — ONE corpus scan covers
     # fit + trace + mean (no 64-avg / d-wide-trace Catalyst aggregates
-    # whose plan-compile cost would dominate; the r04 sim_covariance
-    # attribution lesson)
+    # whose plan-compile cost would dominate, as measured on
+    # sim_covariance)
     comps, vals, ratios, n, stats = pca_fit(
         emb, "embedding", k=d, full_stats=True
     )
@@ -8621,9 +8620,10 @@ _ORC_ROUNDTRIP_ORACLE = "SELECT * FROM lineitem"
 def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution by edit distance: supplier names matched
     against a deterministically-corrupted variant (30% of rows get a
-    char substitution) with levenshtein ≤ 1 via q-gram blocking
-    (ext/fuzzy.py) — gram equi-join + exact residual, never a
-    cartesian product (plan pinned). The oracle pays the O(n²) cross
+    char substitution) with levenshtein ≤ 1 via deletion-neighborhood
+    blocking (ext/fuzzy.py) — positional one-deletion variant
+    equi-join + exact residual, never a cartesian product (plan
+    pinned). The oracle pays the O(n²) cross
     join, which is the point: the blocked plan must reproduce the
     brute-force pair set exactly."""
     from lakehouse_tools_spark.ext.fuzzy import edit_distance_join
@@ -8723,7 +8723,7 @@ def q_source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     determinism per the repo rule: 2-decimal values accumulate as
     DECIMAL, cast to double at the edge. pushdown=True is safe here
     because this relation is scanned exactly once (pruning is opt-in
-    since r08 — see the pysource module docstring's Spark 4.1
+    — see the pysource module docstring's Spark 4.1
     shared-relation hazard)."""
     from lakehouse_tools_spark.sources.pysource import read_synthetic_events
 

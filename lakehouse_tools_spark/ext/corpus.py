@@ -207,8 +207,8 @@ def budget_select(
                 for x in (F.lit(pid), F.lit(offsets[pid]))
             ]
         )
-        # fail LOUDLY on a bucket the totals scan never saw (ADVICE
-        # r08): element_at returns null for a missing key, which
+        # fail LOUDLY on a bucket the totals scan never saw:
+        # element_at returns null for a missing key, which
         # would null out _cum and silently drop the bucket's rows —
         # only a nondeterministic input can get here (see docstring)
         cum = F.col("_cum_in") + F.coalesce(

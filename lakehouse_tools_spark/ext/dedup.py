@@ -69,7 +69,7 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> Data
     would be re-evaluated once per shingle (~8× slower, measured;
     safe here because the multi-referenced ``_toks`` blocks
     CollapseProject from inlining it into the lambdas). The split
-    runs after the ``ensure_parallelism`` spread (r13), so it
+    runs after the ``ensure_parallelism`` spread, so it
     tokenizes on every core.
     """
     base = ensure_parallelism(
@@ -119,7 +119,7 @@ def minhash_wide_from_shingles(shingles: DataFrame, num_hashes: int = 8) -> Data
     LSH-candidates → Jaccard-verify) compute them ONCE and reuse the
     persisted relation for both consumers."""
     # num_hashes fully determines the agg bundle (fixed column names,
-    # seed literals) — memoized like the profiler bundles (r12 §8/§12)
+    # seed literals) — memoized like the profiler bundles
     aggs = expr_memo(
         ("minhash_wide_aggs", num_hashes),
         lambda: [
@@ -403,7 +403,7 @@ def winnow_fingerprints(
     """
     # spread the text by doc_id (ensure_parallelism) before the gram
     # expansion; hash(doc_id) is also the rolling window's
-    # distribution. The normalize runs after the spread (r13).
+    # distribution. The normalize runs after the spread.
     base = ensure_parallelism(
         df.select(
             F.col(id_col).alias("doc_id"),
@@ -941,8 +941,8 @@ def cluster_dedup_report(
         # edge volume — the 6 tagged graphs carry at most 6×n_pairs
         # edges, so the ladder starts at its data-appropriate depth
         # instead of defaultParallelism (the audit graphs are orders
-        # of magnitude smaller than the corpus; optimization r12
-        # measured ~2.5 s of pure level/tiny-task overhead here)
+        # of magnitude smaller than the corpus; a defaultParallelism
+        # start measured ~2.5 s of pure level/tiny-task overhead here)
         n_pairs = scored.count()
         cc_start = max(
             1,
@@ -962,9 +962,9 @@ def cluster_dedup_report(
     # (side, threshold-index) keeps the graphs disjoint inside a
     # single run; components can never span tags.
     #
-    # r12 shape fix: the tags are emitted in ONE pass over `scored`
-    # (explode of a per-row conditional tag array) instead of a
-    # 6-branch filter-union — the union form re-scanned the cached
+    # The tags are emitted in ONE pass over `scored` (explode of a
+    # per-row conditional tag array), not a 6-branch filter-union —
+    # the union form re-scanned the cached
     # pair relation once per (side, threshold) and the node-side
     # distinct doubled that again (12 × 32-partition stages of ~30
     # rows each; measured 3.3 s for nodes_all.count() alone on 907
@@ -1027,16 +1027,15 @@ def cluster_dedup_report(
             F.count(F.lit(1)).alias("n_dup_docs"),
         )
     )
-    # r12 shape fix: the pair counts for EVERY threshold come from one
-    # exploded conditional aggregate over `scored` (the pre-r12 form
-    # ran one 3-sum aggregate per threshold — 3 full passes over the
-    # cached pair relation — and assembled the rows from a union of
-    # per-threshold crossJoins whose 18-branch plan alone cost
-    # Catalyst seconds to optimize). A literal threshold spine keeps
-    # the output total when `scored` is empty (the grouped aggregate
-    # would emit zero rows where the old global aggregates emitted
-    # NULL-coalesced zeros), and the per-tag cluster stats pivot onto
-    # it. Same sums, same floor6 arithmetic, same rows.
+    # The pair counts for EVERY threshold come from one exploded
+    # conditional aggregate over `scored` (one 3-sum aggregate per
+    # threshold would be 3 full passes over the cached pair relation,
+    # and a union of per-threshold crossJoins is an 18-branch plan
+    # that alone cost Catalyst seconds to optimize). A literal
+    # threshold spine keeps the output total when `scored` is empty
+    # (the grouped aggregate would emit zero rows where global
+    # aggregates emit NULL-coalesced zeros), and the per-tag cluster
+    # stats pivot onto it. Same sums, same floor6 arithmetic, same rows.
     spark = df.sparkSession
     spine = spark.createDataFrame(
         [(i, float(t)) for i, t in enumerate(thresholds)],

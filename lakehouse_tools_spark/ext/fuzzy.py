@@ -13,14 +13,14 @@ complete (recall-1.0) candidate generator. For the common
 ``(len, deleted_pos, variant)``, whose buckets are bounded by the
 alphabet size — so low-entropy key families (zero-padded IDs,
 shared-prefix name sequences) stay linear where q-gram blocking
-degenerates to ~n² gram collisions (the measured r12 finding that
-motivated this design; SCALING.md "fuzzy_join").
+degenerates to ~n² gram collisions (measured on sf10 supplier names;
+SCALING.md "Fuzzy (edit-distance) join").
 
 Blocking and the exact residual run on DISTINCT strings; row
 multiplicity re-enters only in the final key-expansion joins, so
 the plan pays output cardinality — never repeated blocking work —
-on columns full of duplicate strings. Recall is pinned against the
-brute-force form in tests and against DuckDB's cross-join +
+on columns full of duplicate strings. Recall is pinned against a
+brute-force cross join in tests and against DuckDB's cross-join +
 ``levenshtein`` oracle.
 """
 
@@ -73,20 +73,19 @@ def edit_distance_join(
     left_col: str,
     right_col: str,
     max_distance: int = 1,
-    q: int = 3,
 ) -> DataFrame:
     """All pairs with ``levenshtein(left_col, right_col) ≤
     max_distance``. Output: ``(left_key, right_key, distance)``.
 
-    Plan shape (r12 redesign, replacing q-gram blocking):
+    Plan shape:
 
     1. **Dedup first.** Blocking and the exact residual run on the
        DISTINCT string relations. Row multiplicity re-enters only in
        the final key-expansion joins, so duplicated strings — the
        normal shape of entity columns — cost exactly the output
-       cardinality, never repeated blocking work. (The r12 sweep
-       caught the old per-row form grinding at sf10, where each of
-       1 000 distinct supplier names recurs 100×.)
+       cardinality, never repeated blocking work. (A per-row form
+       was measured grinding at sf10, where each of 1 000 distinct
+       supplier names recurs 100×.)
     2. **Deletion-neighborhood (SymSpell-family) blocking** — exact:
        ``ed(a, b) ≤ k`` implies some alignment edits ≤ k positions,
        and deleting each side's edited positions yields a COMMON
@@ -116,9 +115,6 @@ def edit_distance_join(
        positional refinement left on the table.
     3. **Exact residual on distinct pairs**, then expansion joins
        back to both key relations.
-
-    ``q`` is retained for API compatibility with the pre-r12 q-gram
-    form; the deletion-neighborhood plan does not use it.
     """
     k = int(max_distance)
     l = left.select(F.col(left_key).alias("_lk"), F.col(left_col).alias("_ls"))
@@ -170,29 +166,4 @@ def edit_distance_join(
             F.col("_rk").alias(right_key),
             "distance",
         )
-    )
-
-
-def edit_distance_join_bruteforce(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_col: str,
-    right_col: str,
-    max_distance: int = 1,
-) -> DataFrame:
-    """The O(n·m) reference form (cross join + residual) — the recall
-    baseline the blocked join is tested against. Never the scale
-    path."""
-    l = left.select(F.col(left_key).alias("_lk"), F.col(left_col).alias("_ls"))
-    r = right.select(F.col(right_key).alias("_rk"), F.col(right_col).alias("_rs"))
-    return (
-        l.crossJoin(r)
-        .select(
-            F.col("_lk").alias(left_key),
-            F.col("_rk").alias(right_key),
-            F.levenshtein(F.col("_ls"), F.col("_rs")).alias("distance"),
-        )
-        .filter(F.col("distance") <= max_distance)
     )

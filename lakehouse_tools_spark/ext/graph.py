@@ -1,174 +1,31 @@
-"""Connected components — duplicate-cluster assignment at scale.
+"""Graph operators over pair relations: connected components,
+PageRank and triangle counts.
 
 Pair lists (exact dups, LSH near-dups, embedding near-dups) answer
 "are these two documents duplicates?"; deduplication needs the
 transitive closure: WHICH GROUP does each document belong to, so one
 canonical representative per group survives. That is connected
-components over the pair graph.
+components over the pair graph, computed by
+:func:`connected_components_contract`: union-find inside every
+partition, then a ladder of forest-merging levels that reads the raw
+edge relation once and ends in one exact min-id pass. Every vertex
+maps to the minimum id of its component — same clusters in any engine
+(the driver oracle computes the same closure with a recursive CTE).
 
-Algorithm: iterative min-label propagation with in-plan pointer
-jumping. Every vertex starts labeled with its own id; each round one
-declarative plan computes min over {its label, its neighbors' labels}
-and then follows the label mapping twice more (two pointer jumps), so
-a round's reach is roughly 3× a plain propagation round and the total
-round count is O(log diameter), not O(diameter). Each round is one
-edge⋈label join + one min-aggregate + two labels-only joins —
-shuffles proportional to |E| and |V|, labels only (8 B), never
-payloads. The loop is driver-side but the data never is: the
-convergence check is a changed-flag probe on the materialized round
-output.
-
-Per-round materialization is a PARQUET ROUND-TRIP, not
-``localCheckpoint``/``checkpoint``. Measured on this Spark (4.1):
-iterating localCheckpoint self-joins slows down exponentially
-(~×2.5/round from round ~18; 0.4 s → 65 s by round ~24) even though
-the executed plan, partition count, and row count stay constant — the
-local-checkpoint lineage isn't truly truncated and the self-join
-doubles the untracked graph every round. Reliable ``checkpoint()``
-shows the same drift and recomputes the plan besides. Writing the
-(16 B/row) label relation to parquet and reading it back is flat
-(~0.5 s/round over 30 rounds measured) and is also the right cluster
-shape: the reread gives Catalyst real size stats (enabling broadcast
-of a small label side), and round state survives executor loss, which
-executor-local checkpoint blocks do not.
-
-Determinism: min() over a fixed vertex-id order — same clusters in
-any engine (the driver oracle computes the same closure with a
-recursive CTE).
+Iterative plans here that need a lineage cut should materialize with
+a parquet round-trip, not ``localCheckpoint``: measured on Spark 4.1,
+iterated ``localCheckpoint`` self-joins slow down exponentially
+(~×2.5/round from round ~18; 0.4 s → 65 s by round ~24) while a
+parquet write-and-reread of the same relation stays flat (~0.5 s/round
+over 30 rounds).
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
-
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_tools_spark.sources.tables import _BYTES_PER_TASK, _source_bytes
-
-
-def _label_round(labels: DataFrame, sym: DataFrame, jumps: int) -> DataFrame:
-    """One declarative round: neighbor-min merge, then ``jumps``
-    pointer jumps through the (old) label mapping, all in ONE plan.
-    The label relation is referenced ``jumps + 2`` times — fine,
-    because ``labels`` is a freshly-read parquet relation (a leaf
-    scan), not a lineage chain. Emits ``_v, _label, _chg``."""
-    neigh_min = (
-        sym.join(
-            labels.select(F.col("_v").alias("_u"), F.col("_label").alias("_nl")),
-            "_u",
-        )
-        .groupBy("_v")
-        .agg(F.min("_nl").alias("_nmin"))
-    )
-    out = labels.join(neigh_min, "_v", "left").select(
-        "_v",
-        F.col("_label").alias("_old"),
-        F.least(
-            F.col("_label"), F.coalesce(F.col("_nmin"), F.col("_label"))
-        ).alias("_label"),
-    )
-    for i in range(jumps):
-        m = labels.select(
-            F.col("_v").alias(f"_cl{i}"), F.col("_label").alias(f"_clab{i}")
-        )
-        out = out.join(m, F.col("_label") == F.col(f"_cl{i}"), "left").select(
-            "_v",
-            "_old",
-            F.least(
-                F.col("_label"),
-                F.coalesce(F.col(f"_clab{i}"), F.col("_label")),
-            ).alias("_label"),
-        )
-    return out.select(
-        "_v", "_label", (F.col("_label") < F.col("_old")).alias("_chg")
-    )
-
-
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame,
-    src_col: str = "doc_id",
-    dst_col: str = "doc_id2",
-    id_col: str = "doc_id",
-    max_rounds: int = 50,
-    work_dir: str | None = None,
-    jumps_per_round: int = 2,
-) -> DataFrame:
-    """``(id_col, cluster_id)`` for every vertex; ``cluster_id`` is
-    the minimum vertex id of the component (singletons map to
-    themselves). Raises if the propagation hasn't converged after
-    ``max_rounds`` — with jumped min-label propagation that means a
-    component of diameter ≳ 3^max_rounds, which no real graph has.
-
-    ``work_dir`` holds the per-round label state (16 B/vertex); pass
-    a durable path on a real cluster (restartable and
-    executor-loss-safe), default is a process-local temp dir.
-    """
-    # symmetrize in ONE pass over the (possibly expensive) edge plan:
-    # explode [(v,u),(u,v)] per edge rather than unioning two
-    # projections, which would evaluate the edge relation twice
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("_v"), F.col(dst_col).alias("_u")
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("_v"), F.col(src_col).alias("_u")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e._v", "_e._u")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    spark = edges.sparkSession
-    own_dir = work_dir is None
-    base = work_dir or tempfile.mkdtemp(prefix="lt_cc_")
-    labels = (
-        vertices.select(F.col(id_col).alias("_v"))
-        .distinct()
-        .withColumn("_label", F.col("_v"))
-    )
-    try:
-        for r in range(max_rounds):
-            out = _label_round(labels, sym, jumps_per_round)
-            path = f"{base}/round={r % 2}"  # ping-pong: only 2 states live
-            out.write.mode("overwrite").parquet(path)
-            state = spark.read.parquet(path)
-            labels = state.drop("_chg")
-            if state.filter(F.col("_chg")).limit(1).count() == 0:
-                # nothing moved through an edge or a jump: every edge
-                # joins two equal labels, so labels are the component
-                # minima. Materialize the result OFF the ping-pong
-                # paths in BOTH modes: own_dir is about to be deleted,
-                # and a caller-supplied work_dir's round={0,1} paths
-                # are overwritten in place by any rerun — a lazy scan
-                # of them would silently yield the later run's data.
-                result = labels.select(
-                    F.col("_v").alias(id_col),
-                    F.col("_label").alias("cluster_id"),
-                )
-                if own_dir:
-                    return result.localCheckpoint(eager=True)
-                # unique per-run subpath: a rerun in the same work_dir
-                # must not clobber a handle returned by an earlier run
-                final_path = f"{base}/final_{uuid.uuid4().hex[:8]}"
-                result.write.mode("overwrite").parquet(final_path)
-                return spark.read.parquet(final_path)
-    finally:
-        sym.unpersist()
-        if own_dir:
-            shutil.rmtree(base, ignore_errors=True)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_rounds} rounds"
-    )
 
 
 #: Union-find edges one contraction task absorbs comfortably: the
@@ -183,17 +40,17 @@ def _sized_start_partitions(*dfs: DataFrame) -> int:
     """Size the contraction ladder's level-0 partition count to the
     SOURCE volume feeding the edge plan, not to the local core count.
 
-    The ladder's cost model (optimization r12, measured): each level
-    is one mapInPandas pass whose latency floor is the JVM→Python
-    round-trip per task, so a fixed ``defaultParallelism`` start
-    (e.g. 32) pays a 3-level ladder (32 → 4 → 1 at fan_in=8) even
-    when the whole dup graph is a few thousand edges — ~2.5 s of pure
-    level/task overhead per CC call at fixture scale, multiplied
-    across the seven dedup/cluster queries that compose this
-    operator. Level 0 is ``ceil(source_bytes / 128 MB)`` — one
-    source split ≈ one union-find task — floored at 1 and capped at
-    ``defaultParallelism`` (the pre-r12 start, so the at-scale ladder
-    is unchanged); source bytes come from the same file sizing as
+    The ladder's cost model (measured): each level is one
+    mapInPandas pass whose latency floor is the JVM→Python round-trip
+    per task, so a fixed ``defaultParallelism`` start (e.g. 32) pays
+    a 3-level ladder (32 → 4 → 1 at fan_in=8) even when the whole dup
+    graph is a few thousand edges — ~2.5 s of pure level/task
+    overhead per CC call at fixture scale, multiplied across the
+    seven dedup/cluster queries that compose this operator. Level 0
+    is ``ceil(source_bytes / 128 MB)`` — one source split ≈ one
+    union-find task — floored at 1 and capped at
+    ``defaultParallelism`` (so the at-scale ladder is unchanged);
+    source bytes come from the same file sizing as
     ``sources.tables.ensure_parallelism``.
 
     The candidates in ``dfs`` are tried in order and the first
@@ -243,15 +100,13 @@ def connected_components_contract(
     parallelism (measured: 5.4 s vs 0.8 s on an identity 3-level
     chain) — the stage boundary is what buys parallel level-0/1.
 
-    Versus :func:`connected_components`: label propagation pays
-    O(log diameter) rounds × (one |E| shuffle + materialization)
-    each; contraction pays O(log P) forest-sized passes total. The
-    trade-off is that the final partition materializes the spanning
-    forest of every duplicated vertex in one task — right whenever
-    dup-cluster membership is a modest fraction of the corpus (LSH
-    dedup at 100 TB: forest ≈ #near-dup docs × 16 B; 1 B dup docs ≈
-    16 GB — one fat executor task, still bounded; beyond that, fall
-    back to label propagation, which never concentrates state).
+    Contraction pays O(log P) forest-sized passes total, where label
+    propagation would pay O(log diameter) rounds of one |E| shuffle
+    each. The trade-off is that the final partition materializes the
+    spanning forest of every duplicated vertex in one task — right
+    whenever dup-cluster membership is a modest fraction of the
+    corpus (LSH dedup at 100 TB: forest ≈ #near-dup docs × 16 B; 1 B
+    dup docs ≈ 16 GB — one fat executor task, still bounded).
 
     Python union-find is the right tool here, not a UDF smell: the
     operation is inherently sequential-stateful per partition, α(n)
@@ -260,8 +115,8 @@ def connected_components_contract(
 
     Determinism: spanning stars depend only on partition contents
     (hash of ``src_col``), and the final exact pass replaces every
-    root with the true component minimum, so the output is identical
-    to :func:`connected_components` row-for-row.
+    root with the true component minimum, so the output depends only
+    on the graph, not on partitioning or union order.
     """
     import pandas as pd
 
@@ -351,7 +206,7 @@ def cluster_representatives(
 ) -> DataFrame:
     """One surviving row per duplicate cluster: the member with the
     minimum id (== the cluster id itself, by construction of
-    :func:`connected_components`)."""
+    :func:`connected_components_contract`)."""
     return assignment.filter(F.col(id_col) == F.col("cluster_id"))
 
 

@@ -62,16 +62,6 @@ DECODED_SCHEMA = T.StructType(
     ]
 )
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_index", T.IntegerType(), False),
-        T.StructField("frame_ts_ms", T.IntegerType(), False),
-        T.StructField("frame_checksum", T.StringType(), True),
-    ]
-)
-
-
 def media_from_documents(docs: DataFrame, kind: str = "image") -> DataFrame:
     """Build a media table from the ``documents`` fixture: the text
     bytes stand in for encoded content. Deterministic, engine-free —
@@ -172,65 +162,3 @@ def byte_histogram_features(df: DataFrame, bins: int = 16) -> DataFrame:
             )
 
     return df.mapInPandas(run, out_schema)
-
-
-def resize_media(df: DataFrame, max_dim: int, backend: str = "fake") -> DataFrame:
-    """Resize to fit ``max_dim`` (aspect-preserving). Stub backend
-    rewrites metadata only (a real backend would also transcode
-    ``content``); schema in == schema out so the operator composes."""
-    if backend != "fake":
-        raise NotImplementedError("no codec library in this environment")
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(1.0), F.lit(max_dim) / F.greatest(w, h))
-    new_meta = F.struct(
-        F.col("meta.format").alias("format"),
-        # least() guards the 1-ulp overshoot of w * (max_dim / w)
-        F.least(F.lit(max_dim), F.ceil(w * scale).cast("int")).alias("width"),
-        F.least(F.lit(max_dim), F.ceil(h * scale).cast("int")).alias("height"),
-        F.col("meta.sample_rate").alias("sample_rate"),
-        F.col("meta.duration_ms").alias("duration_ms"),
-    )
-    return df.withColumn("meta", new_meta)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Sample frame timestamps every ``every_ms`` from video items →
-    one row per (media_id, frame). Frame *extraction* is the stubbed
-    codec step; the fan-out, schema and per-frame checksum plumbing
-    are real. Explode happens JVM-side (sequence + explode), the
-    checksum in one Pandas pass."""
-    frames = (
-        df.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            "content",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(
-                        (F.col("meta.duration_ms") - 1) / every_ms, F.lit(0)
-                    ).cast("int"),
-                )
-            ).alias("frame_index"),
-        )
-        .withColumn("frame_ts_ms", F.col("frame_index") * every_ms)
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            checksums = [
-                hashlib.md5(
-                    (c if c is not None else b"") + int(i).to_bytes(4, "big")
-                ).hexdigest()
-                for c, i in zip(batch["content"], batch["frame_index"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"].astype("int64"),
-                    "frame_index": batch["frame_index"].astype("int32"),
-                    "frame_ts_ms": batch["frame_ts_ms"].astype("int32"),
-                    "frame_checksum": checksums,
-                }
-            )
-
-    return frames.mapInPandas(run, FRAME_SCHEMA)

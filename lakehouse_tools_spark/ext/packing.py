@@ -107,38 +107,17 @@ def pack_chunks(
     )
 
 
-def _first_fit_scan(lengths, budget: int) -> list:
-    """Reference first-fit: scan open bins left-to-right, place in the
-    first with room, else open a new bin (oversize docs open a bin and
-    land there regardless). O(n × open bins) — kept ONLY as the
-    semantic reference the tree variant is pinned against in tests;
-    the packing operator itself uses :func:`_first_fit_tree`.
-    """
-    fills: list = []  # fill level per open bin
-    assigned = []
-    for ln in lengths:
-        placed = None
-        for i, fill in enumerate(fills):
-            if fill + ln <= budget:
-                placed = i
-                break
-        if placed is None:
-            fills.append(0)
-            placed = len(fills) - 1
-        fills[placed] += ln
-        assigned.append(placed)
-    return assigned
-
-
 def _first_fit_tree(lengths, budget: int) -> list:
     """Exact first-fit bin assignment in O(n log n).
 
-    Bit-identical to :func:`_first_fit_scan`: a max-segment-tree over
-    per-bin REMAINING capacity answers "leftmost bin with rem >= len"
-    in O(log n). Every potential bin (at most one per document) starts
-    with rem = budget, so the leftmost never-used bin doubles as the
-    scan's "open a new bin" — first-fit finds it only after every
-    opened bin is full, exactly the scan's behaviour. An oversize doc
+    Bit-identical to the naive open-bin scan (place in the first open
+    bin with room, else open a new bin; pinned in tests): a
+    max-segment-tree over per-bin REMAINING capacity answers "leftmost
+    bin with rem >= len" in O(log n). Every potential bin (at most
+    one per document) starts with rem = budget, so the leftmost
+    never-used bin doubles as the scan's "open a new bin" — first-fit
+    finds it only after every opened bin is full, exactly the scan's
+    behaviour. An oversize doc
     (len > budget) matches no leaf (max rem = budget) and is
     force-placed in the next never-used bin, as the scan does.
 

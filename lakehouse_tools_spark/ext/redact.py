@@ -29,14 +29,6 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redacted_text(col: Column) -> Column:
-    """The text with every PII pattern replaced by its tag."""
-    out = col
-    for _, pattern, repl in PII_PATTERNS:
-        out = F.regexp_replace(out, pattern, repl)
-    return out
-
-
 def redact(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

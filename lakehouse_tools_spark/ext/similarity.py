@@ -160,7 +160,7 @@ def neardup_pairs(
 
     ``(vec_id, vec_id2, cos)`` with vec_id < vec_id2. Quadratic by
     design — the correctness baseline the LSH path is checked against;
-    at scale use :func:`lsh_bucket` + per-bucket pairs.
+    at scale use :func:`lsh_bucket_column` + per-bucket pairs.
     """
     a = embeddings.select(
         F.col(id_col).alias("vec_id"),
@@ -218,7 +218,7 @@ def neardup_pairs_lsh(
     """
     # spread the vectors by id (ensure_parallelism) before the
     # bucket/norm projections: each row pays num_planes × dim dot
-    # products (r13). Nothing downstream keys on id; the key only
+    # products. Nothing downstream keys on id; the key only
     # avoids a sort-before-repartition.
     base = ensure_parallelism(
         embeddings.select(F.col(id_col), F.col(vec_col)), id_col
@@ -314,20 +314,6 @@ def lsh_bucket_column(vec_col, num_planes: int = 8, dim: int = 64):
     )
 
 
-def lsh_bucket(
-    embeddings: DataFrame,
-    num_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``(vec_id, bucket)`` via :func:`lsh_bucket_column`."""
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        lsh_bucket_column(F.col(vec_col), num_planes, dim).alias("bucket"),
-    )
-
-
 def with_ivf_cell(
     df: DataFrame,
     vec_col: str,
@@ -384,10 +370,10 @@ def with_ivf_cell(
         # inlines a once-referenced column into the lambda body, where
         # the interpreted HOF re-evaluates it per element — the 64-dim
         # norm fold ran once per CENTROID per row (measured 1.94 s vs
-        # 1.09 s for the heavier exact scoring pass at sf0.1,
-        # optimization r12). An argument is evaluated once per row
-        # wherever it is inlined; the division arithmetic is
-        # unchanged, so cosines stay bit-identical.
+        # 1.09 s for the heavier exact scoring pass at sf0.1). An
+        # argument is evaluated once per row wherever it is inlined;
+        # the division arithmetic is unchanged, so cosines stay
+        # bit-identical.
         norms = F.array_repeat(l2_norm(vec), len(centroids))
         return {
             "coss": F.zip_with(
@@ -453,7 +439,7 @@ def kmeans_refine_centroids(
     literals, so at 100 TB each iteration is one scan + one narrow
     aggregate. Empty cells keep their previous centroid.
 
-    BIT-deterministic (round 5): the mean aggregate sums
+    BIT-deterministic: the mean aggregate sums
     floor-quantized int64 components (the :func:`quantized_covariance`
     contract — associative integer sums, so partition order cannot
     move a bit) and the driver closes each mean with the fixed-order

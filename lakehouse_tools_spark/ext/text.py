@@ -332,7 +332,7 @@ def _adjacent_pairs(
     JVM-side with ``transform`` over token index ranges (the token
     array materialized first, same no-UDF pattern as
     ``dedup.word_shingles``). The token rows are spread by doc_id
-    (``ensure_parallelism``) before the pair expansion (r13)."""
+    (``ensure_parallelism``) before the pair expansion."""
     base = ensure_parallelism(
         df.select(
             F.col(id_col).alias("doc_id"),
@@ -489,7 +489,7 @@ def learn_bpe_merges(
     deterministic total order, so the cap itself is reproducible; the
     orderBy+limit is a distributed top-N, never a full sort
     materialization). Driver memory is O(min(distinct_words,
-    max_vocab)) and — since r10 — ``max_vocab`` DEFAULTS to
+    max_vocab)) and ``max_vocab`` DEFAULTS to
     :data:`DEFAULT_BPE_MAX_VOCAB` so the bound holds without opt-in;
     pass ``max_vocab=None`` to deliberately collect the full
     vocabulary on corpora known to be small. Capping only removes
@@ -577,9 +577,9 @@ def apply_bpe(
     occurrence counts join back to the encoded vocabulary on the word
     key and reduce to per-doc token totals. Nothing corpus- or
     vocabulary-sized ever reaches the driver — on an open-vocabulary
-    web corpus the distinct-word set alone is 1e8–1e9 rows, so the
-    pre-r10 ``distinct().collect()`` + ``create_map`` form was a
-    driver OOM at exactly the scale this engine targets.
+    web corpus the distinct-word set alone is 1e8–1e9 rows, so a
+    ``distinct().collect()`` + ``create_map`` form would be a driver
+    OOM at exactly the scale this engine targets.
 
     Plan shape: explode → partial-aggregated (doc, word) counts (one
     shuffle, carries distinct pairs, not occurrences) → distinct words
@@ -651,7 +651,7 @@ def repetition_signals(
     null fractions (no gram of that size exists — a fact, not a 0).
     """
     # spread the token rows by doc_id (ensure_parallelism) before the
-    # gram expansion (r13); hash(doc_id) is also the per-doc
+    # gram expansion; hash(doc_id) is also the per-doc
     # aggregates' distribution.
     base = ensure_parallelism(
         df.select(
@@ -720,7 +720,6 @@ def repetition_signals(
 def bpe_fertility_report(
     df: DataFrame,
     text_col: str,
-    id_col: str,
     merges: list[tuple[str, str]],
 ) -> DataFrame:
     """Corpus fertility report for a FIXED BPE merge table — the

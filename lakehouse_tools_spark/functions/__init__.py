@@ -1,4 +1,3 @@
 from lakehouse_tools_spark.functions.vectors import cosine_similarity, dot_product, l2_norm
-from lakehouse_tools_spark.functions.portable import stable_double_string
 
-__all__ = ["cosine_similarity", "dot_product", "l2_norm", "stable_double_string"]
+__all__ = ["cosine_similarity", "dot_product", "l2_norm"]

@@ -15,7 +15,7 @@ Driver-CPU only: no data, no results, and no query state are cached —
 the bundle is the *code* of the expression, identical every build.
 Bundles are scoped per py4j gateway so one can never leak across JVMs
 (a new gateway builds fresh), and the scoping map weak-keys on the
-gateway object (VERDICT r12 item 8): when a gateway dies and is
+gateway object: when a gateway dies and is
 dropped, every bundle built against its JVM is released with it —
 a long-lived multi-session process no longer accumulates dead-JVM
 expression trees.

@@ -12,14 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def stable_double_string(col: Column, scale: int = 6) -> Column:
-    """Render a double as ``round(x, scale) :: decimal(28,scale)`` text
-    — positional notation with fixed scale in every engine (Spark's
-    native double→string uses scientific notation above 1e7)."""
-    return F.round(col, scale).cast(T.DecimalType(28, scale)).cast("string")
 
 
 def _col(name: str) -> Column:
@@ -40,17 +32,3 @@ def floor6(col: Column) -> Column:
     of integers. ANSI equivalent: ``floor(x * 1000000) / 1000000``.
     """
     return F.floor(col * F.lit(1000000.0)) / F.lit(1000000.0)
-
-
-def md5_hex(col: Column) -> Column:
-    """md5 hex digest of a string column (portable across engines)."""
-    return F.md5(col.cast("string"))
-
-
-def md5_int32(col: Column) -> Column:
-    """First 8 hex digits of md5 as a non-negative bigint in [0, 2^32).
-
-    Portable integer hash: ANSI equivalent is
-    ``('0x' || substr(md5(x), 1, 8))::bigint``.
-    """
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")

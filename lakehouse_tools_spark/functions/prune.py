@@ -23,7 +23,8 @@ positives at rate ≈ n_keys/num_buckets prune nothing but cost
 nothing). The probe side then drops non-member rows in a broadcast
 LEFT SEMI join *before* its shuffle — map-side, no exchange added.
 
-md5-derived buckets (functions/portable.md5_int32 form) keep the
+md5-derived buckets (the first 8 hex digits of md5 as a bigint,
+ANSI ``('0x' || substr(md5(x), 1, 8))::bigint``) keep the
 fingerprint deterministic across engines, so pruned results are
 oracle-checkable: pruning is semantically transparent — the pruned
 join EQUALS the plain join (pinned in tests/test_prune.py, driver-

@@ -113,7 +113,7 @@ def fd_candidates(
     # per-task working set does not accumulate per distinct value at
     # all — rows stream into 2x|pairs| fixed-size sketches — so
     # NEITHER multiplier applies there: expansion stays 1.0 and the
-    # guard only provides the core-count floor (ADVICE r09; sizing
+    # guard only provides the core-count floor (sizing
     # the 100 TB path's tasks as if the exact-mode maps existed
     # over-partitions up to the 64x-cores cap for pure scheduling
     # overhead).

@@ -10,8 +10,7 @@ without a second scan is a ``when(...)`` that builds a 0-, 1- or
 explode multiplies only changed keys, so output volume tracks churn,
 not table size.
 
-At scale: the join shuffles both snapshots on the key once (or zero
-times if both are bucketed on the key — writer.save_bucketed); the
+At scale: the join shuffles both snapshots on the key once; the
 row-compare is a codegen'd null-safe conjunction, no UDF anywhere.
 
 Change types follow Delta CDF naming: ``insert``,

@@ -12,20 +12,14 @@ same physical layout is achieved at write time:
   ``sortWithinPartitions(cols)`` — lexicographic multi-column
   clustering. Parquet then stores per-file/rowgroup min-max on the
   leading columns, giving the same skip-pruning effect for range and
-  equality predicates on prefixes of ``cols``. A true Z-curve
-  (bit-interleaved) option is provided for workloads that filter on
-  *non-prefix* dimensions, built from plain integer expressions so it
-  stays inside whole-stage codegen.
+  equality predicates on prefixes of ``cols``.
 
 Row-set preservation is the operator's contract: layout changes only.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from lakehouse_tools_spark.functions.portable import _col
 
@@ -51,104 +45,6 @@ def zorder_layout(df: DataFrame, cols: list[str], num_partitions: int | None = N
     else:
         out = df.repartitionByRange(*ncols)
     return out.sortWithinPartitions(*ncols)
-
-
-def _interleave_bits(cols: list[Column], bits: int) -> Column:
-    """Bit-interleave normalized integer columns into one Z-value.
-
-    Pure integer Catalyst expressions (shifts/masks/ors) — no UDF, so
-    the whole computation stays in codegen.
-    """
-    z = F.lit(0).cast("long")
-    n = len(cols)
-    for b in range(bits):
-        for i, c in enumerate(cols):
-            bit = F.shiftrightunsigned(c, b).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, b * n + i))
-    return z
-
-
-def _orderable_key(df: DataFrame, col: str) -> Column:
-    """An order-PRESERVING numeric key for a column, for Z-value
-    normalization. Hashing here would destroy value locality — files
-    would carry near-full-range min/max on the original columns and
-    parquet stats-based skipping (the entire point of the layout)
-    would be lost. So:
-
-    - numeric / boolean → the value itself
-    - date / timestamp → epoch seconds
-    - string → first 7 UTF-8 bytes as a big-endian integer (UTF-8
-      byte order == code-point order, so the key is monotone in the
-      string's lexicographic order; shorter strings zero-pad and sort
-      before longer ones with the same prefix)
-    - anything non-orderable (arrays, structs, maps) → hash, the only
-      remaining option; callers clustering on such a column get
-      grouping, not range locality
-    """
-    dt = dict(df.dtypes)[col]
-    c = F.col(col)
-    if dt in ("tinyint", "smallint", "int", "bigint", "float", "double") or dt.startswith(
-        "decimal"
-    ):
-        return c.cast("double")
-    if dt == "boolean":
-        return c.cast("int").cast("double")
-    if dt in ("date", "timestamp", "timestamp_ntz"):
-        return c.cast("timestamp").cast("double")
-    if dt == "string":
-        # 7 bytes = 14 hex digits < 2^56: exact in a long and a double
-        return F.conv(
-            F.rpad(F.hex(F.encode(F.substring(c, 1, 7), "utf-8")), 14, "0"), 16, 10
-        ).cast("double")
-    return F.hash(c).cast("double")
-
-
-def zorder_curve_layout(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 12,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """True Z-curve clustering: normalize each dimension to a
-    ``bits``-wide integer by min/max-scaling an order-preserving
-    numeric key (one aggregate for all columns — no per-column jobs,
-    no double shuffle an ``ntile``-over-sort would cost), then
-    range-partition + sort by the interleaved Z-value.
-
-    Used when queries filter on non-prefix dimensions; for the
-    reference's workload (filters on databaseName/tableName prefixes)
-    ``zorder_layout`` is the right default.
-    """
-    keys = {c: _orderable_key(df, c) for c in cols}
-    stats = df.agg(
-        *[F.min(k).alias(f"_min_{c}") for c, k in keys.items()],
-        *[F.max(k).alias(f"_max_{c}") for c, k in keys.items()],
-    ).collect()[0]
-    scaled = []
-    for c, k in keys.items():
-        lo, hi = stats[f"_min_{c}"], stats[f"_max_{c}"]
-        if lo is None:  # all-null column: constant dimension
-            scaled.append(F.lit(0).cast("long"))
-            continue
-        span = max(hi - lo, 1e-300)
-        scaled.append(
-            # nulls sort first (lo); clamp guards float rounding at hi
-            F.least(
-                ((F.coalesce(k, F.lit(lo)) - F.lit(lo)) * F.lit(((1 << bits) - 1) / span))
-                .cast("long"),
-                F.lit((1 << bits) - 1).cast("long"),
-            )
-        )
-    z = _interleave_bits(scaled, bits)
-    out = df.withColumn("_z", z)
-    if num_partitions:
-        # explicit count also opts out of AQE partition coalescing,
-        # which would otherwise merge small outputs and widen each
-        # file's min/max span
-        out = out.repartitionByRange(num_partitions, F.col("_z"))
-    else:
-        out = out.repartitionByRange(F.col("_z"))
-    return out.sortWithinPartitions("_z").drop("_z")
 
 
 def compact_small_files(

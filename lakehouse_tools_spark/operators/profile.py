@@ -157,7 +157,7 @@ def _rendered_melt(df: DataFrame, fields, melt: F.Column) -> DataFrame:
     # core count alone, the partial-agg map outgrows its share on
     # high-cardinality tables and falls back to sort+spill (measured:
     # stage CPU 319 s -> 1065 s for 2x data at sf10, e(5->10)=2.1,
-    # restored to ~linear by this sizing — SCALING.md r07)
+    # restored to ~linear by this sizing — SCALING.md)
     return ensure_parallelism(
         df.select(*[_col(f.name) for f in fields]), expansion=len(fields)
     ).select(melt)
@@ -628,7 +628,7 @@ def ranked_value_counts(df: DataFrame, cols: list[str]) -> DataFrame:
 
     NO ensure_parallelism guard on the melt, deliberately: it only
     casts to double (no string render), so the pre-shuffle stage is
-    I/O-bound, and the r12 partial-agg-spread A/B showed the
+    I/O-bound, and a partial-agg-spread A/B showed the
     round-robin exchange (with its mandatory sort-before-repartition)
     costs more than the parallelism returns on these cheap melts. At
     real scale inputs arrive with enough splits.
@@ -675,15 +675,14 @@ def numeric_quantiles_exact(
     oracle-checkable variant (values rounded to 6 decimals on both
     sides to absorb summation-order float drift).
 
-    Since optimization r13 the quantiles come from the DISTRIBUTED
-    exact path (:func:`exact_quantile_cells` — melt → distinct-value
-    counts → per-column cumulative rank → interpolated rank-pick,
-    bit-identical to the former ``F.percentile`` wide aggregate):
-    the percentile aggregate buffered every distinct value of every
-    column in a single reducer's memory, the one remaining
-    unbounded-memory aggregate in the package (guide §5). The sketch
-    variant (:func:`numeric_quantiles`) is still the cheap 100 TB
-    default; this is the audit path — now with bounded memory.
+    The quantiles come from the DISTRIBUTED exact path
+    (:func:`exact_quantile_cells` — melt → distinct-value counts →
+    per-column cumulative rank → interpolated rank-pick,
+    bit-identical to an ``F.percentile`` wide aggregate, which would
+    buffer every distinct value of every column in a single
+    reducer's memory). The sketch variant (:func:`numeric_quantiles`)
+    is the cheap 100 TB default; this is the audit path, with
+    bounded memory.
 
     The output schema labels exactly three quantiles q25/q50/q75, so
     ``probs`` must be exactly three probabilities; non-quartile probs
@@ -1196,8 +1195,8 @@ def equi_depth_histogram(
     precomputed edges.
 
     One melt feeds every column through the same two windows —
-    columns sort in parallel, one shuffle total. (Optimization r13:
-    a rank-pick rewrite over the distinct-value rank relation
+    columns sort in parallel, one shuffle total. (A rank-pick
+    rewrite over the distinct-value rank relation
     (:func:`ranked_value_counts`) was built, proven output-identical
     on every case incl. ties and n < bins, and MEASURED WORSE —
     2.6→4.1 and 1.9→2.9 s in two A/B pairs at sf0.1: the measure

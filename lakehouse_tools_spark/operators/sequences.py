@@ -62,47 +62,6 @@ def transition_matrix(
     )
 
 
-def session_ids(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_seconds: int,
-    order_cols: list[str] | None = None,
-    out_col: str = "session_seq",
-) -> DataFrame:
-    """Assign each event its per-key session ordinal (1-based): a new
-    session starts when the gap since the previous event EXCEEDS
-    ``gap_seconds``. Event-level sessionization — where
-    ``windows.sessionize`` returns the session intervals, this labels
-    the raw events themselves (the shape joins, funnels, and
-    per-session features need).
-
-    ONE window sort per key, reused by both passes Catalyst plans
-    into the same exchange: a ``lag`` gap flag, then a running sum of
-    the flags. ``order_cols`` must be a deterministic total order
-    (defaults to ``[ts_col]`` — pass a tiebreaker when timestamps can
-    collide). Gap-exactly-equal keeps the session (strict >), matching
-    ``session_window``'s gap semantics.
-    """
-    order_cols = order_cols or [ts_col]
-    w = Window.partitionBy(key_col).orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
-    prev = F.lag(F.col(ts_col)).over(w)
-    boundary = F.when(
-        prev.isNull()
-        | (
-            F.col(ts_col).cast("double") - prev.cast("double")
-            > F.lit(float(gap_seconds))
-        ),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(
-        out_col, F.sum(boundary).over(wrun).cast("long")
-    )
-
-
 def pattern_match(
     df: DataFrame,
     key_col: str,
@@ -144,9 +103,9 @@ def pattern_match(
     Scale contract: the per-key SEQUENCE is the operator's state —
     identical to any sequence-pattern engine. Keys are assumed
     human/session-scale (thousands of events, not billions); for
-    unbounded keys, pre-segment with :func:`session_ids` and group by
-    (key, session) so state stays bounded by the session, not the
-    key's lifetime.
+    unbounded keys, key on (key, session ordinal) — the running sum
+    of a ``lag`` gap flag over the key's time order — so state stays
+    bounded by the session, not the key's lifetime.
     """
     tok = None
     for state, t in tokens.items():

@@ -84,11 +84,12 @@ def countmin_sketch(
 
     Shuffle is ≤ ``depth × width`` rows after map-side combine
     regardless of input size — the whole sketch is broadcast-sized.
-    Buckets derive from md5 (functions/portable.md5_int32 form), not
-    Murmur3, so the sketch is DETERMINISTIC ACROSS ENGINES: an ANSI
-    engine building the same sketch gets identical counters, which is
-    what lets the driver hash-verify estimates end-to-end (unlike the
-    HLL sketches, whose bytes are engine-specific)."""
+    Row ``d``'s bucket is the first 8 hex digits of
+    ``md5(d || ':' || key)`` read as a bigint, modulo ``width`` — md5,
+    not Murmur3 — so the sketch is DETERMINISTIC ACROSS ENGINES: an
+    ANSI engine building the same sketch gets identical counters,
+    which is what lets the driver hash-verify estimates end-to-end
+    (unlike the HLL sketches, whose bytes are engine-specific)."""
     rows = df.select(_col(key_col).cast("string").alias("_k")).select(
         "_k",
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("d"),

@@ -307,34 +307,6 @@ def vacuum_versions(spark: SparkSession, table: str, keep_last: int = 1) -> list
     return drop
 
 
-def save_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist ``df`` hash-bucketed (and optionally sorted) on the
-    join/agg key.
-
-    Bucketing is the storage-side half of shuffle elimination: two
-    tables bucketed on the same key with the same bucket count join
-    with ZERO Exchange — each task zips bucket i with bucket i — and
-    a groupBy on the bucket key skips its shuffle too. At 100 TB this
-    converts every recurring fact⋈dim or fact⋈fact join on the key
-    into a local join; the one-time cost is the bucketed write's own
-    shuffle. ``sort_cols`` additionally pre-sorts within buckets so
-    sort-merge joins skip the sort. (Delta/Iceberg expose the same
-    idea as clustered/partition-transform writes; Delta has no
-    ``bucketBy``, so this writer stays parquet on every backend.)
-    """
-    w = df.write.mode("overwrite").format("parquet")
-    w = w.bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
 def optimize_clustered(
     spark: SparkSession,
     table: str,

@@ -54,16 +54,16 @@ DEFAULT_CONFS: dict[str, str] = {
     # pyspark/errors/utils.py::_with_origin). That is pure error-
     # message decoration: plans, results, and run-time errors are
     # unchanged with it off; only the "called from <file>:<line>"
-    # context line on *analysis* errors is lost. Measured
-    # (optimization r12, warm min-of-3 construct over 8 declarative
-    # queries): 2.18 s → 1.25 s with it disabled — a ~40% cut of the
-    # driver-side query-construction tax that §8's expression memo
-    # cannot reach (it is per-API-call, not per-expression). NOTE
-    # (ADVICE r12): this is a Python-side conf that pyspark caches
-    # PROCESS-GLOBALLY on the first DataFrame API call
-    # (is_debugging_enabled), so it must be on the session that is
-    # active at that first call — which builder-time placement here
-    # guarantees for sessions this module creates; setting it later
+    # context line on *analysis* errors is lost. Measured (warm
+    # min-of-3 construct over 8 declarative queries): 2.18 s → 1.25 s
+    # with it disabled — a ~40% cut of the driver-side
+    # query-construction tax that the expression memo cannot reach
+    # (it is per-API-call, not per-expression). NOTE: this is a
+    # Python-side conf that pyspark caches PROCESS-GLOBALLY on the
+    # first DataFrame API call (is_debugging_enabled), so it must be
+    # on the session that is active at that first call — which
+    # builder-time placement here guarantees for sessions this module
+    # creates; setting it later
     # (e.g. via configure()) succeeds but is a no-op for the already-
     # cached flag, and a harness-owned session that made DataFrame
     # calls before importing this package keeps its own setting.
@@ -81,7 +81,7 @@ def streaming_state_confs(
     streaming_state_confs(...))`` or apply with ``spark.conf.set``
     (they are runtime-settable, read at query start).
 
-    Measured, not guessed: the r10 conf A/B on the sf10 TWS
+    Measured, not guessed: a conf A/B on the sf10 TWS
     sessionizer drain (SCALING.md "RocksDB state-store conf A/B on
     the TWS sessionizer drain"; the A/B script is in git history up
     to 638cf5c) found the steady-state FLOOR is

@@ -20,7 +20,7 @@ REAL connector must get right at scale, each pinned by tests:
   source's own predicate evaluation.
 
   Pruning is OPT-IN (``pushdown=True`` / ``.option("pushdown",
-  "true")``) because of a measured Spark 4.1 engine hazard (r08):
+  "true")``) because of a measured Spark 4.1 engine hazard:
   the JVM stores the last filtered scan's Python planning result on
   the SHARED relation, so re-scanning one loaded DataFrame under a
   weaker (or no) filter can silently reuse the stronger scan's

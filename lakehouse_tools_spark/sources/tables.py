@@ -63,7 +63,7 @@ def _stat_key(path: str) -> tuple[str, int, int] | None:
         return None
     # S_ISREG on the ONE stat result — a second isfile() call would
     # open a TOCTOU window where a path replaced by a directory
-    # between the calls keys a directory as a file (ADVICE r12)
+    # between the calls keys a directory as a file
     if not statmod.S_ISREG(st.st_mode):
         return None
     return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
@@ -71,7 +71,7 @@ def _stat_key(path: str) -> tuple[str, int, int] | None:
 
 def _memo_put(memo: dict, key: tuple[str, int, int], value) -> None:
     """Insert ``value`` under ``key``, first evicting the stale stat-keys
-    of the same path — at most one entry per distinct path (ADVICE r12)."""
+    of the same path — at most one entry per distinct path."""
     for k in [k for k in memo if k[0] == key[0]]:
         del memo[k]
     memo[key] = value
@@ -102,12 +102,11 @@ def _parquet_schema(
 #: column-object self-join disambiguation behaves like any other
 #: single-source self-join (use ``.alias()`` per side — the standard
 #: Spark requirement; pinned in tests). Keyed by session, then
-#: :func:`_stat_key`. BOUNDED two ways (ADVICE r12 / VERDICT r12
-#: item 8): the outer map weak-keys on the SparkSession, so a
-#: stopped-and-dropped session releases every JVM Dataset it pinned;
-#: and :func:`_memo_put` drops stale stat-keys of the same path, so a
-#: rewrite never leaves the replaced Dataset (and its
-#: InMemoryFileIndex) pinned for the life of the process.
+#: :func:`_stat_key`. BOUNDED two ways: the outer map weak-keys on
+#: the SparkSession, so a stopped-and-dropped session releases every
+#: JVM Dataset it pinned; and :func:`_memo_put` drops stale stat-keys
+#: of the same path, so a rewrite never leaves the replaced Dataset
+#: (and its InMemoryFileIndex) pinned for the life of the process.
 _TABLE_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -145,8 +144,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # re-assert the nanos conf on EVERY call, cache hits included: the
     # memoized plan is physically re-planned per action against the
     # session confs of that moment, so a caller that reset the conf
-    # between loads must see it re-asserted exactly as the pre-memo
-    # code did (ADVICE r12). One cheap local conf call.
+    # between loads must see it re-asserted as if the plan were built
+    # fresh. One cheap local conf call.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = _stat_key(path)
     per = _TABLE_PLAN_CACHE.get(spark) if key is not None else None
@@ -251,7 +250,7 @@ def ensure_parallelism(
     profiler's melt emits ``n_columns`` rows per input row and
     stringifies every value, so a fine-looking task COUNT can still
     hand each task a working set far bigger than its execution-memory
-    share: the r07 scaling harness measured the cliff at sf10 (60 M
+    share: the scaling harness measured the cliff at sf10 (60 M
     lineitem rows, 32 tasks) — the partial-aggregate map spilled and
     stage CPU went 319 s → 1065 s for 2x the data (e(5→10) = 2.1).
     Sizing by ``bytes × expansion`` keeps every task's working set
@@ -259,7 +258,7 @@ def ensure_parallelism(
     partitions so they fit"); the 64x-cores cap stops a degenerate
     estimate from scheduling a million 1 KB tasks.
 
-    Why the tiny-input exemption is UNKEYED only (r13 measurements):
+    Why the tiny-input exemption is UNKEYED only (measured):
     the keyed callers (dedup/text/corpus document spreads, LSH vector
     spreads) run per-row hashing or dot products before their first
     shuffle, and their key pre-satisfies the downstream per-id

@@ -39,11 +39,10 @@ from lakehouse_tools_spark.operators.writer import upsert_into
 #: source slice stays far inside one state-store instance's comfort
 #: zone — while every EXTRA instance pays a fixed per-micro-batch
 #: cost (store open, delta/snapshot commit, maintenance; RocksDB
-#: instances additionally own memtables and SSTs). Measured at sf0.1
-#: (optimization r12): a warm availableNow drain of the tumbling-
-#: window aggregation costs 2.7 s with 32 near-empty state
-#: partitions vs 1.6 s with a data-sized count — pure instance
-#: overhead, identical results.
+#: instances additionally own memtables and SSTs). Measured at sf0.1:
+#: a warm availableNow drain of the tumbling-window aggregation costs
+#: 2.7 s with 32 near-empty state partitions vs 1.6 s with a
+#: data-sized count — pure instance overhead, identical results.
 _STATE_PARTITION_BYTES = 32 << 20
 
 #: Lower bound: keep commit parallelism across cores even for tiny

@@ -241,13 +241,13 @@ def _make_processor(gap_us: int):
     was A/B-measured NEUTRAL at sf5 (paired interleaved median
     0.981, SCALING.md "TWS constant factor"; the 1.5x TWS-vs-legacy
     factor lives in state-server serialization + RocksDB
-    maintenance) and then REMOVED in r09: the cache is only safe
+    maintenance) and then removed: the cache is only safe
     when LOST (key re-arms once), not when STALE-PRESENT — a
     long-lived processor instance retaining an entry while the
     key's timer is consumed on another worker (partition migration,
     speculative task) would suppress registerTimer when the key
     returns, leaving a session with live intervals and no further
-    input never timer-sealed (ADVICE r08). Measured-neutral + a
+    input never timer-sealed. Measured-neutral + a
     correctness hazard = deleted, not flagged.
     """
     from pyspark.sql.streaming.stateful_processor import (

@@ -1,14 +1,37 @@
-"""q-gram-blocked edit-distance join (ext/fuzzy.py)."""
+"""Deletion-neighborhood-blocked edit-distance join (ext/fuzzy.py)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row
+from pyspark.sql import functions as F
 
-from lakehouse_tools_spark.ext.fuzzy import (
-    edit_distance_join,
-    edit_distance_join_bruteforce,
-)
+from lakehouse_tools_spark.ext.fuzzy import edit_distance_join
+
+
+def edit_distance_join_bruteforce(
+    left: DataFrame,
+    right: DataFrame,
+    left_key: str,
+    right_key: str,
+    left_col: str,
+    right_col: str,
+    max_distance: int = 1,
+) -> DataFrame:
+    """The O(n·m) reference form (cross join + residual) — the recall
+    baseline the blocked join is tested against. Never the scale
+    path."""
+    l = left.select(F.col(left_key).alias("_lk"), F.col(left_col).alias("_ls"))
+    r = right.select(F.col(right_key).alias("_rk"), F.col(right_col).alias("_rs"))
+    return (
+        l.crossJoin(r)
+        .select(
+            F.col("_lk").alias(left_key),
+            F.col("_rk").alias(right_key),
+            F.levenshtein(F.col("_ls"), F.col("_rs")).alias("distance"),
+        )
+        .filter(F.col("distance") <= max_distance)
+    )
 
 
 def _mk(spark, vals, key="id", col="s"):
@@ -21,14 +44,14 @@ NAMES = [
     (3, "jonathan smyth"),
     (4, "maria garcia"),
     (5, "mara garcia"),
-    (6, "al"),          # short: below the q-gram guarantee
+    (6, "al"),          # short: few deletion variants
     (7, "ak"),
     (8, "alx"),
     (9, "completely different"),
-    (10, "banana banana"),   # duplicate grams: exercises the
-    (11, "banana bananas"),  # count-filter surplus correction
-    (12, "Supplier#000000001"),  # shared-prefix family: the case the
-    (13, "Supplier#000000002"),  # count filter exists to prune
+    (10, "banana banana"),   # repeated substrings: many equal
+    (11, "banana bananas"),  # deletion variants per string
+    (12, "Supplier#000000001"),  # shared-prefix family: the case
+    (13, "Supplier#000000002"),  # positional blocking keeps linear
     (14, "Supplier#000000011"),
 ]
 PROBES = [
@@ -98,10 +121,9 @@ def test_no_cartesian_in_plan(spark):
 
 
 def test_duplicate_keys_do_not_lose_matches(spark):
-    """Non-unique join keys: each row's string keeps its own
-    rarest-gram prefix (identity = key + string hash), so grams from
-    different strings under one key can't truncate each other and
-    drop a true match."""
+    """Non-unique join keys: blocking runs on distinct strings, so two
+    strings under one key each keep their own matches when the keys
+    are expanded back."""
     # two long strings share key 1; each matches a different probe
     left = _mk(
         spark,

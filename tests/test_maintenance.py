@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-from lakehouse_tools_spark.operators.maintenance import (
-    compact,
-    zorder_curve_layout,
-    zorder_layout,
-)
+from lakehouse_tools_spark.operators.maintenance import compact, zorder_layout
 
 
 def test_zorder_preserves_rowset(spark, tables):
@@ -14,15 +10,6 @@ def test_zorder_preserves_rowset(spark, tables):
     out = zorder_layout(li, ["l_returnflag", "l_shipdate"])
     assert out.count() == li.count()
     assert li.exceptAll(out.select(li.columns)).count() == 0
-
-
-def test_zorder_curve_preserves_rowset(spark, tables):
-    nat = tables["nation"]
-    out = zorder_curve_layout(nat, ["n_regionkey", "n_name"], bits=6)
-    assert sorted(r.n_nationkey for r in out.collect()) == sorted(
-        r.n_nationkey for r in nat.collect()
-    )
-    assert out.columns == nat.columns  # _z helper column dropped
 
 
 def test_zorder_clusters_leading_column(spark, tables):
@@ -39,45 +26,6 @@ def test_zorder_clusters_leading_column(spark, tables):
 
 def test_compact_sets_partition_count(spark, tables):
     assert compact(tables["lineitem"], 3).rdd.getNumPartitions() == 3
-
-
-def test_zorder_curve_preserves_value_locality(spark):
-    # The point of the layout is parquet min/max skipping on the
-    # ORIGINAL columns: every output partition must cover a small
-    # sub-rectangle of the value space, not (as hashing the values
-    # would give) the full range.
-    from pyspark.sql import functions as F
-
-    rows = [(x, y) for x in range(64) for y in range(64)]
-    df = spark.createDataFrame(rows, "x long, y long").repartition(8)
-    out = zorder_curve_layout(df, ["x", "y"], bits=6, num_partitions=16)
-    spans = (
-        out.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(
-            (F.max("x") - F.min("x")).alias("sx"),
-            (F.max("y") - F.min("y")).alias("sy"),
-        )
-        .collect()
-    )
-    mean_sx = sum(r.sx for r in spans) / len(spans)
-    mean_sy = sum(r.sy for r in spans) / len(spans)
-    # contiguous Z-ranges cover ~sqrt(fraction) per dim; hashed values
-    # would put both means at ~63
-    assert mean_sx < 32 and mean_sy < 32, (mean_sx, mean_sy)
-
-
-def test_zorder_curve_string_key_is_order_preserving(spark):
-    from lakehouse_tools_spark.operators.maintenance import _orderable_key
-
-    words = ["", "a", "ab", "abc", "abd", "b", "ba", "zzzzzzzzzz"]
-    df = spark.createDataFrame([(w,) for w in words], "s string")
-    got = df.select("s", _orderable_key(df, "s").alias("k")).collect()
-    by_word = sorted(got, key=lambda r: r.s)
-    keys = [r.k for r in by_word]
-    assert keys == sorted(keys)
-    # distinct prefixes get distinct keys
-    assert len({r.k for r in got}) == len(words)
 
 
 def test_compact_small_files_preserves_rows_and_shrinks(spark, tables, tmp_path):

@@ -8,8 +8,6 @@ from lakehouse_tools_spark.ext.multimodal import (
     byte_histogram_features,
     decode_media,
     media_from_documents,
-    resize_media,
-    sample_frames,
 )
 
 
@@ -42,21 +40,3 @@ def test_byte_histogram_features(media):
     assert all(len(r.features) == 16 for r in rows)
     for r in rows:
         assert abs(sum(r.features) - 1.0) < 1e-9  # normalized
-
-
-def test_resize_caps_dimensions(media):
-    out = resize_media(media, max_dim=100)
-    metas = out.select("meta.width", "meta.height").collect()
-    assert all(r.width <= 100 and r.height <= 100 for r in metas)
-    # composes: decode still works on the resized relation
-    assert decode_media(out).count() == media.count()
-
-
-def test_sample_frames_fanout(media):
-    frames = sample_frames(media, every_ms=10_000)
-    per = media.select("media_id", "meta.duration_ms").collect()
-    expected = sum(max((r.duration_ms - 1) // 10_000, 0) + 1 for r in per)
-    assert frames.count() == expected
-    one = frames.filter(frames.media_id == per[0].media_id).collect()
-    assert [r.frame_ts_ms for r in one] == [i * 10_000 for i in range(len(one))]
-    assert len({r.frame_checksum for r in one}) == len(one)  # per-frame identity

@@ -12,6 +12,29 @@ DOCS = [(i, 10 * i % 97 + 1) for i in range(1, 101)]  # lengths 1..97
 SCHEMA = "doc_id long, n long"
 
 
+def _first_fit_scan(lengths, budget: int) -> list:
+    """Reference first-fit: scan open bins left-to-right, place in the
+    first with room, else open a new bin (oversize docs open a bin and
+    land there regardless). O(n × open bins) — kept ONLY as the
+    semantic reference the tree variant is pinned against in tests;
+    the packing operator itself uses :func:`_first_fit_tree`.
+    """
+    fills: list = []  # fill level per open bin
+    assigned = []
+    for ln in lengths:
+        placed = None
+        for i, fill in enumerate(fills):
+            if fill + ln <= budget:
+                placed = i
+                break
+        if placed is None:
+            fills.append(0)
+            placed = len(fills) - 1
+        fills[placed] += ln
+        assigned.append(placed)
+    return assigned
+
+
 def test_pack_chunks_covers_every_doc_exactly(spark):
     docs = spark.createDataFrame(DOCS, SCHEMA)
     out = pack_chunks(docs, "doc_id", "n", budget=128, num_buckets=4).collect()
@@ -81,7 +104,7 @@ def test_first_fit_tree_matches_scan_reference():
     the naive open-bin scan on adversarial shapes: sorted-desc (the
     operator's order), unsorted, ties, oversize docs, exact fits,
     all-equal, and a large pseudo-random stream."""
-    from lakehouse_tools_spark.ext.packing import _first_fit_scan, _first_fit_tree
+    from lakehouse_tools_spark.ext.packing import _first_fit_tree
 
     cases = [
         ([], 100),
@@ -106,7 +129,7 @@ def test_first_fit_tree_matches_scan_property():
     (including oversize and zero-ish lengths) and budgets."""
     from hypothesis import given, settings, strategies as st
 
-    from lakehouse_tools_spark.ext.packing import _first_fit_scan, _first_fit_tree
+    from lakehouse_tools_spark.ext.packing import _first_fit_tree
 
     @settings(max_examples=200, deadline=None)
     @given(

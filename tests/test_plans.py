@@ -76,28 +76,6 @@ def test_exact_dedup_shuffles_fingerprints_not_text(spark):
     assert m and "fp" in m.group(1)  # shuffle key is the md5, not text
 
 
-def test_bucketed_join_has_no_shuffle(spark):
-    # co-located join: both sides bucketed on the key with the same
-    # bucket count -> join plans with ZERO Exchange (the storage-side
-    # shuffle elimination save_bucketed exists for)
-    from pyspark.sql import Row
-
-    from lakehouse_tools_spark.operators.writer import save_bucketed
-
-    facts = spark.createDataFrame([Row(k=i % 50, x=i) for i in range(1000)])
-    dims = spark.createDataFrame([Row(k=i, name=f"d{i}") for i in range(50)])
-    save_bucketed(facts, "t_bkt_facts", ["k"], num_buckets=8)
-    save_bucketed(dims, "t_bkt_dims", ["k"], num_buckets=8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_bkt_facts").join(spark.table("t_bkt_dims"), "k")
-        p = plan_of(joined)
-        assert "Exchange" not in p
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "20971520")
-
-
 def test_q19_part_disjunction_pushed_to_scan(spark):
     # the part-only half of each OR conjunct (brand+size) must reach
     # the part scan as a pushed Or filter; lineitem reads 4 columns

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from lakehouse_tools_spark.ext.similarity import (
     ann_topk_lsh,
     cosine_topk,
-    lsh_bucket,
+    lsh_bucket_column,
     neardup_pairs,
 )
 
@@ -46,9 +46,12 @@ def test_neardup_pairs_threshold(spark):
 
 def test_lsh_bucket_deterministic(spark, tables):
     emb = tables["embeddings"]
-    a = sorted(map(tuple, lsh_bucket(emb, num_planes=4, dim=64).collect()))
-    b = sorted(map(tuple, lsh_bucket(emb, num_planes=4, dim=64).collect()))
-    assert a == b
+
+    def buckets():
+        b = lsh_bucket_column(F.col("embedding"), 4, 64).alias("bucket")
+        return sorted(map(tuple, emb.select("vec_id", b).collect()))
+
+    assert buckets() == buckets()
 
 
 def test_ann_subset_of_corpus_with_positive_recall(spark, tables):

@@ -421,9 +421,7 @@ def test_bpe_fertility_report_hand_computed(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, text="the then in"), Row(doc_id=2, text="the")]
     )
-    [r] = bpe_fertility_report(
-        df, "text", "doc_id", _FERTILITY_MERGES
-    ).collect()
+    [r] = bpe_fertility_report(df, "text", _FERTILITY_MERGES).collect()
     assert r.n_docs == 2
     assert r.n_words == 4
     assert r.n_distinct_words == 3
@@ -452,9 +450,7 @@ def test_bpe_fertility_report_matches_apply_bpe_totals(spark):
             Row(doc_id=3, text="tttt hhhh thethe ananan"),
         ]
     )
-    [r] = bpe_fertility_report(
-        df, "text", "doc_id", _FERTILITY_MERGES
-    ).collect()
+    [r] = bpe_fertility_report(df, "text", _FERTILITY_MERGES).collect()
     per_doc = apply_bpe(df, "text", "doc_id", _FERTILITY_MERGES)
     total = sum(x.n_tokens for x in per_doc.collect())
     assert r.n_tokens == total
@@ -487,9 +483,7 @@ def test_bpe_fertility_report_sequential_equals_iterative(spark):
         return len(toks)
 
     df = spark.createDataFrame([Row(doc_id=1, text=" ".join(words))])
-    [r] = bpe_fertility_report(
-        df, "text", "doc_id", _FERTILITY_MERGES
-    ).collect()
+    [r] = bpe_fertility_report(df, "text", _FERTILITY_MERGES).collect()
     want = sum(seq_encode(w) for w in words)
     iterative = sum(_bpe_encode_ref(w, _FERTILITY_MERGES) for w in words)
     assert want == iterative  # table property: the two routes agree
@@ -500,7 +494,7 @@ def test_bpe_fertility_report_empty_merges_chars(spark):
     from lakehouse_tools_spark.ext.text import bpe_fertility_report
 
     df = spark.createDataFrame([Row(doc_id=1, text="ab cde")])
-    [r] = bpe_fertility_report(df, "text", "doc_id", []).collect()
+    [r] = bpe_fertility_report(df, "text", []).collect()
     assert r.n_tokens == r.n_chars == 5
     assert r.whole_word_rate == 0.0
     assert r.chars_per_token == 1.0
